@@ -58,6 +58,4 @@ object LayerMetrics {
     m.toSeq.map { case (k, s) =>
       s.synchronized { (k, (s.buildSec, s.builds, s.reuses)) }
     }.sortBy(-_._2._1)
-
-  def reset(): Unit = m.clear()
 }

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped memoization with eviction when the session's context
   * shuts down (ADVICE r12: caches keyed by SparkSession in plain TrieMaps
@@ -15,6 +16,17 @@ import org.apache.spark.sql.SparkSession
   * The values memoized through this cache are bounded by construction —
   * table readers (a plan, not data), persisted layer frames, trained
   * model frames — never corpus-sized driver data.
+  *
+  * This object is the one owner of how long a persisted frame lives:
+  *  - a frame another query reuses is a [[persisted]] layer, alive until
+  *    the session ends;
+  *  - a builder's private loop frames are handed to [[retire]], alive
+  *    until the same builder runs again in the same session (the lazy
+  *    result still reads them) or the session ends;
+  *  - a frame whose whole life fits inside one synchronous call (a
+  *    foreachBatch body, scratch consumed by an eager count or collect
+  *    loop) may be released in that call — those sites are pinned by
+  *    ContractSpec's unpersist inventory.
   */
 object SessionCache {
 
@@ -32,7 +44,7 @@ object SessionCache {
     * runs). Re-persisting only re-registers; blocks repopulate lazily on
     * the next consumer's execution — a one-time cost, not a rebuild. */
   private val builtLevel = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, Any), org.apache.spark.storage.StorageLevel]
+    .empty[(SparkSession, Any), StorageLevel]
   private val hooked = java.util.Collections.newSetFromMap(
     new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean])
 
@@ -65,6 +77,42 @@ object SessionCache {
     store.getOrElseUpdate((s, key), mk).asInstanceOf[V]
   }
 
+  /** [[layer]] for a frame that other queries read: persisted
+    * MEMORY_AND_DISK and counted inside the build, so the layer's
+    * materialization is charged to its own build timer instead of to
+    * whichever consumer's action fires first. */
+  def persisted(name: String, s: SparkSession, key: Any)(mk: => DataFrame): DataFrame =
+    layer(name, s, key) {
+      val df = mk.persist(StorageLevel.MEMORY_AND_DISK)
+      df.count()
+      df
+    }
+
+  /** Key of the last generation of loop frames `owner` handed to [[retire]]. */
+  private final case class Generation(owner: String)
+
+  /** Record `frames` as `owner`'s current generation in `s` and unpersist
+    * the previous one. Releasing a builder's loop frames inside the
+    * builder would drop the cache before the returned lazy frame ever
+    * executes; never releasing them accumulates blocks across calls. One
+    * generation per (session, owner) bounds the footprint, and an earlier
+    * call's un-executed result stays correct after retirement (its plan
+    * recomputes without the cache).
+    *
+    * Plan-aware: CacheManager entries are keyed by CANONICAL PLAN, not by
+    * Dataset reference, and a deterministic builder's generations are
+    * plan-identical — the new generation's persist() calls no-op onto the
+    * old generation's entries. Unpersisting those would drop the very
+    * entries the new generation relies on, so only old frames whose plan
+    * the new generation does not share are released. */
+  def retire(s: SparkSession, owner: String, frames: Seq[DataFrame]): Unit = {
+    hook(s)
+    val keep = frames.map(_.queryExecution.analyzed.canonicalized)
+    store.put((s, Generation(owner)), frames).foreach(_.asInstanceOf[Seq[DataFrame]].foreach { old =>
+      if (!keep.contains(old.queryExecution.analyzed.canonicalized)) old.unpersist(false)
+    })
+  }
+
   /** Memoized layer with [[LayerMetrics]] accounting: hits record a reuse,
     * misses run `mk` under the named build timer. The shared shape of the
     * mart/gram/pair/vocab layer caches (SURVEY §4's materialize-once
@@ -78,7 +126,7 @@ object SessionCache {
         v match { // self-heal a dropped persist registration (see builtLevel)
           case df: org.apache.spark.sql.Dataset[_] =>
             builtLevel.get(k).foreach { lvl =>
-              if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+              if (df.storageLevel == StorageLevel.NONE)
                 df.persist(lvl)
             }
           case _ =>
@@ -88,7 +136,7 @@ object SessionCache {
         val v = store.getOrElseUpdate(k, LayerMetrics.build(name)(mk))
         v match {
           case df: org.apache.spark.sql.Dataset[_]
-              if df.storageLevel != org.apache.spark.storage.StorageLevel.NONE =>
+              if df.storageLevel != StorageLevel.NONE =>
             builtLevel.put(k, df.storageLevel)
           case _ =>
         }

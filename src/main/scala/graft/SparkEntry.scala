@@ -30,33 +30,20 @@ object SparkEntry {
     * summary queries reuse one computed mart instead of re-running
     * dedup+stats+joins each. Layer row counts are bounded by the events
     * table — safe to MEMORY_AND_DISK at any tested SF. */
-  // Build cost is recorded in LayerMetrics (VERDICT r10 #3) with an eager
-  // count() so the layer's materialization — the thing the bench's
-  // first_run/warm gap is made of — is charged to the named layer at build
-  // time, not smeared over whichever consumer's action fires first.
-  // Backed by SessionCache: entries evict with the session's context
-  // (ADVICE r12).
-  private def cached(key: String, s: SparkSession, dir: String)(mk: => DataFrame): DataFrame =
-    SessionCache.layer(key, s, dir) {
-      val df = mk.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }
-
   // staging IS persisted even though it is a narrow projection: the layer
   // fans out to byLoad, ops_row_counts, AND every window/grouping-sets
   // consumer inside the anomaly build — re-measured in round 3 (with the
   // spread scans) and dropping this persist still regressed the chain
   // 7.3s → 9.3s at sf0.1.
   private def ev(s: SparkSession, dir: String): DataFrame =
-    cached("staging", s, dir)(Staging.fromEvents(Tables.events(s, dir)))
+    SessionCache.persisted("staging", s, dir)(Staging.fromEvents(Tables.events(s, dir)))
   // Only the MART layer is persisted, not the intermediate anomalies frame:
   // the mart is the anomalies plus eight narrow derived columns, so the
   // anomalies view is recovered by dropping them from the cached mart — one
   // columnar encode instead of two for near-identical data (the round-2
   // chain persisted both and paid ~1.5s extra at sf0.1).
   private def martOf(s: SparkSession, dir: String): DataFrame =
-    cached("mart", s, dir)(MartReadings.fromStaging(ev(s, dir)))
+    SessionCache.persisted("mart", s, dir)(MartReadings.fromStaging(ev(s, dir)))
   private val martOnlyCols = Seq(
     "temperature_category", "reading_hour", "reading_day_of_week",
     "reading_date", "reading_month", "reading_year",
@@ -80,10 +67,8 @@ object SparkEntry {
     * genuinely incremental, time-clustered increments at every tier; the
     * IncrementalMartSpec proves ANY slicing converges to the batch chain,
     * so the slicing is a pacing choice, not a semantics one. */
-  private val incrRoots =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
   private def incrementalStateRoot(s: SparkSession, d: String): String =
-    incrRoots.getOrElseUpdate((s, d), graft.streaming.StreamGate.scoped(s) {
+    SessionCache.getOrElseUpdate(s, ("graft.incrRoot", d))(graft.streaming.StreamGate.scoped(s) {
       val root = graft.streaming.StreamGate.tempDir("iot_incr_")
       import org.apache.spark.sql.functions.{col, lit, to_date, to_timestamp}
       def applyAll(batch: DataFrame, batchId: Long): Unit = {

@@ -26,7 +26,7 @@ import graft.Tables
 object AnnRecall {
 
   // each method resolves through its REGISTERED entry, which rides the
-  // shared LayerCache — the audit reuses the same materialized top-k
+  // shared persisted layer — the audit reuses the same materialized top-k
   // frames its standalone queries produce (and vice versa)
   private val Methods: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "ivf"         -> IvfAnn.queries("ann_ivf_topk"),

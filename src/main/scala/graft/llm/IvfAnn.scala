@@ -138,7 +138,7 @@ object IvfAnn {
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ann_ivf_topk" -> ((s, d) => LayerCache.of("ann_ivf_topk", s, d)(annIvfTopK(s, d)))
+    "ann_ivf_topk" -> ((s, d) => graft.SessionCache.persisted("ann_ivf_topk", s, d)(annIvfTopK(s, d)))
   )
 
   /** Left-fold dot product of two float lists, identical to

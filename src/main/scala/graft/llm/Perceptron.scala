@@ -60,10 +60,9 @@ object Perceptron {
     // cache the design matrix — every trainer's first move: without it the
     // margin AND delta aggregations of EVERY superstep re-tokenize the
     // corpus through the nested weight subplans (measured 16.6 s at sf1 →
-    // 4-ish with the cache). Released by the ContextCleaner once the
-    // result frame is unreachable. The tiny weight dim is
-    // localCheckpointed per step so plan depth stays linear in steps, not
-    // exponential.
+    // 4-ish with the cache). Retired by the next call in this session. The
+    // tiny weight dim is localCheckpointed per step so plan depth stays
+    // linear in steps, not exponential.
     val xs = designMatrix(s, d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var w: DataFrame = s.range(D)
@@ -88,6 +87,7 @@ object Perceptron {
           col("delta"), col("w_after"), col("n_mis"))
       w = wNext.select(col("feat"), col("w_after").as("w")).localCheckpoint()
     }
+    graft.SessionCache.retire(s, "perceptron_steps", Seq(xs))
     outs.reduce(_ unionByName _)
   }
 

@@ -232,7 +232,7 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, adc_dist FROM (
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ann_pq_topk" -> ((s, d) => LayerCache.of("ann_pq_topk", s, d)(pqTopK(s, d)))
+    "ann_pq_topk" -> ((s, d) => graft.SessionCache.persisted("ann_pq_topk", s, d)(pqTopK(s, d)))
   )
 
   def oracles: Map[String, String] = Map(

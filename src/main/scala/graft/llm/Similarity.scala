@@ -86,8 +86,8 @@ object Similarity {
     // paths are the other three queries; widening this sample is a contract
     // change, not a tuning knob.
     // the exact/partitioned frames also feed ann_recall_audit — cache the
-    // bounded (Q·k-row) results per (session, dir) via LayerCache
-    "ann_topk_cosine" -> ((s, d) => LayerCache.of("ann_topk_cosine", s, d) {
+    // bounded (Q·k-row) results per (session, dir) as persisted layers
+    "ann_topk_cosine" -> ((s, d) => graft.SessionCache.persisted("ann_topk_cosine", s, d) {
       val e = withNorm(s, d)
       val q = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn"))
@@ -135,7 +135,7 @@ object Similarity {
     // scored pairs by the partition count. This is how production vector
     // search scales before ANN even enters: tenant/namespace partitioning
     // of the index, exact within the partition.
-    "ann_partitioned_topk" -> ((s, d) => LayerCache.of("ann_partitioned_topk", s, d) {
+    "ann_partitioned_topk" -> ((s, d) => graft.SessionCache.persisted("ann_partitioned_topk", s, d) {
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("label"),
         col("embedding"), norm(col("embedding")).as("nrm"))
       val q = e.filter(col("vec_id") % 50 === 0)
@@ -437,7 +437,7 @@ WHERE ${dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= $NearDupThres
   }
 
   def lshQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ann_lsh_topk" -> ((s, d) => LayerCache.of("ann_lsh_topk", s, d)(annLshTopK(s, d)))
+    "ann_lsh_topk" -> ((s, d) => graft.SessionCache.persisted("ann_lsh_topk", s, d)(annLshTopK(s, d)))
   )
 
   def lshOracles: Map[String, String] = Map(

@@ -44,12 +44,7 @@ object TextDedup {
     * each bench/verify pass tokenizes the corpus once, like the layer cache
     * in [[graft.SparkEntry]]. */
   private[llm] def gramSets(s: SparkSession, d: String): DataFrame =
-    graft.SessionCache.layer("grams", s, d) {
-      val df = gramSetsUncached(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }
+    graft.SessionCache.persisted("grams", s, d)(gramSetsUncached(s, d))
 
   /** (doc_id, grams) table. Gram extraction runs as primitive string ops in
     * a typed mapPartitions: Catalyst's higher-order array functions are
@@ -420,12 +415,9 @@ WHERE CAST(n_shared AS DOUBLE) / CAST(s1.n + s2.n - n_shared AS DOUBLE) >= $Jacc
     * pair-count-sized (bounded by true near-dup volume), far smaller than
     * its build inputs. */
   def nearDupPairs(s: SparkSession, d: String): DataFrame =
-    graft.SessionCache.layer("near_dup_pairs", s, d) {
+    graft.SessionCache.persisted("near_dup_pairs", s, d) {
       val (members, reps, repPairs) = collapsedRepPairs(s, d)
-      val df = expandPairs(repPairs, members, reps)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
+      expandPairs(repPairs, members, reps)
     }
 
   /** Cluster assignments (doc_id, cluster_rep, is_kept), cached per
@@ -433,18 +425,21 @@ WHERE CAST(n_shared AS DOUBLE) / CAST(s1.n + s2.n - n_shared AS DOUBLE) >= $Jacc
     * `dedup_keep_best` differ only in what they aggregate AFTER the
     * label-propagation fixpoint, so the superstep loop runs once. The
     * frame is one row per clustered doc — cheap to keep. */
-  private[llm] def clustersOf(s: SparkSession, d: String): DataFrame =
-    graft.SessionCache.layer("clusters", s, d) {
+  private[llm] def clustersOf(s: SparkSession, d: String): DataFrame = {
+    var scratch = Seq.empty[DataFrame]
+    val df = graft.SessionCache.persisted("clusters", s, d) {
       val (members, reps, repPairs) = collapsedRepPairs(s, d)
-      val (asg, scratch) = clusterAssignmentsFrom(members, reps, repPairs)
-      val df = asg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      // the loop's per-round label frames are scratch once the assignment
-      // frame is materialized — release them eagerly (they recompute via
-      // lineage if the result's own blocks are ever evicted)
-      scratch.foreach(_.unpersist(false))
-      df
+      val (asg, loopFrames) = clusterAssignmentsFrom(members, reps, repPairs)
+      scratch = loopFrames
+      asg
     }
+    // the loop's per-round label frames are scratch once the assignment
+    // frame is materialized (a layer hit built none) — release them
+    // eagerly (they recompute via lineage if the result's own blocks are
+    // ever evicted)
+    scratch.foreach(_.unpersist(false))
+    df
+  }
 
   /** The REP-level tier under [[nearDupPairs]] and `dedup_clusters`:
     * collapse + banded candidates + exact verification, cached per
@@ -1017,7 +1012,9 @@ WHERE CAST(n_shared AS DOUBLE) / CAST(s1.n + s2.n - n_shared AS DOUBLE) >= $Jacc
     val (members, reps) = collapse(grams)
     val repGrams = reps.select(col("rep_id").as("doc_id"), col("grams"))
     val repPairs = verifyJaccard(candidatePairs(bandBuckets(repGrams)), repGrams)
-    clusterAssignmentsFrom(members, reps, repPairs)._1
+    val (asg, scratch) = clusterAssignmentsFrom(members, reps, repPairs)
+    graft.SessionCache.retire(grams.sparkSession, "cluster_assignments", scratch)
+    asg
   }
 
   /** Returns (assignments, scratch): `scratch` is the loop's persisted

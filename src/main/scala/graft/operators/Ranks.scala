@@ -157,43 +157,6 @@ object Ranks {
     one.select(array(values: _*).as(out))
   }
 
-  /** Per-group [[exactPercentileArray]]: one row per (possibly null) group
-    * key with the ARRAY<DOUBLE> grid `out` — bit-identical to
-    * `percentile(value, array(qs)) GROUP BY group` (Percentile runs the
-    * same getPercentile per group), computed with the distributed
-    * grouped rank instead of per-group counts-maps, so no single task ever
-    * holds a group's distinct values. */
-  def exactGroupedPercentileArray(
-      df: DataFrame, group: String, value: Column, qs: Seq[Double], out: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val vals = df.select(col(group), value.cast("double").as("_pq_v"))
-      .filter(col("_pq_v").isNotNull)
-    val ranked = groupedRowNumber(vals, Seq(group), Seq(col("_pq_v")), "_pq_rk")
-    val cnt = vals.groupBy(col(group)).agg(count(lit(1)).as("_pq_n"))
-      .select(col(group).as("_pq_g"), col("_pq_n"))
-    val withN = ranked.join(broadcast(cnt), col(group) <=> col("_pq_g"))
-    def posOf(q: Double) = lit(q) * (col("_pq_n") - lit(1L)).cast("double")
-    val keep = qs.map { q =>
-      val p = posOf(q)
-      col("_pq_rk") === (floor(p) + lit(1L)) ||
-        col("_pq_rk") === (ceil(p) + lit(1L))
-    }.reduce(_ || _)
-    val aggs = qs.zipWithIndex.flatMap { case (q, i) =>
-      val p = posOf(q)
-      Seq(
-        min(when(col("_pq_rk") === (floor(p) + lit(1L)), col("_pq_v"))).as(s"_pq_lo_$i"),
-        min(when(col("_pq_rk") === (ceil(p) + lit(1L)), col("_pq_v"))).as(s"_pq_hi_$i"))
-    } :+ max(col("_pq_n")).as("_pq_n")
-    val rows = withN.filter(keep).groupBy(col(group)).agg(aggs.head, aggs.tail: _*)
-    val values = qs.zipWithIndex.map { case (q, i) =>
-      val p = posOf(q)
-      val lo = col(s"_pq_lo_$i"); val hi = col(s"_pq_hi_$i")
-      when(lo === hi, lo)
-        .otherwise((ceil(p).cast("double") - p) * lo + (p - floor(p).cast("double")) * hi)
-    }
-    rows.select(col(group), array(values: _*).as(out))
-  }
-
   /** Append a 1-based BIGINT per-GROUP row_number — exactly
     * `row_number() OVER (PARTITION BY group ORDER BY order)` — without a
     * keyed window. A window partition cannot be split (one task per key),

@@ -1253,20 +1253,9 @@ object Analytics {
     // the edge side (per-partition slices of |E|) and keep the wedge
     // stream sort-free at every scale.
     "triangle_count" -> ((s, d) => {
-      // the supplier count stays IN-PLAN as a broadcast 1-row frame (the
-      // Graph.scala convention: query construction runs no eager action) —
-      // the r12 version collect()ed it at build time, one stray driver job
-      // per construction
-      val nSupp = broadcast(Tables.supplier(s, d).agg(count(lit(1)).as("n_supp")))
-      val raw = Tables.lineitem(s, d)
-        .filter(col("l_orderkey") % 10 === 0)
-        .select(col("l_suppkey").as("x"), col("l_partkey"))
-        .crossJoin(nSupp)
-        .select(col("x"), (col("l_partkey") % col("n_supp")).as("y"))
-        .filter(col("x") =!= col("y"))
-      val edges = raw.select(
-          least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-        .distinct().persist()
+      // the canonical (a<b) half of the shared supplier graph layer
+      val edges = Graph.symmetricEdges(s, d).filter(col("src") < col("dst"))
+        .select(col("src").as("a"), col("dst").as("b"))
       val e1 = edges
       val e2 = edges.select(col("a").as("b"), col("b").as("c")).hint("shuffle_hash")
       val e3 = edges.select(col("a").as("a2"), col("b").as("c2")).hint("shuffle_hash")
@@ -1287,16 +1276,12 @@ object Analytics {
       // Quartile buffers are per-group counts maps built map-side; with a
       // one-split scan that build serializes on one core — spread the
       // 2-column projection first (guarded no-op on multi-split inputs).
-      // r17: REVERTED from the late-r16 Ranks.exactGroupedPercentileArray
-      // rewrite (fd9ee95) per VERDICT r16 item 2 — paired A/B in one JVM
-      // (graft.Micro, 32 cores, sf0.1, warm passes) measured the grouped
-      // rank-select at 2.73-3.21 s vs 2.06-3.04 s for this form (the
-      // driver read the same: 1.76 -> 1.99 s). The grouped-rank mechanism
-      // stays in Ranks for inputs where a GROUP's distinct-value count
-      // grows unboundedly; here the group count is fixed at 3 (returnflag)
-      // so the counts-map merge is 3-way parallel and bounded by distinct
-      // prices — and the rank-select's ~6-job scheduler floor costs more
-      // than the merge at any SF this bench sees.
+      // Not a distributed grouped rank-select: a paired A/B in one JVM
+      // (32 cores, sf0.1, warm passes; OPTIMIZATION_r17.md) measured it at
+      // 2.73-3.21 s vs 2.06-3.04 s for this form. The group count is fixed
+      // at 3 (returnflag), so the counts-map merge is 3-way parallel and
+      // bounded by distinct prices — and a rank-select's ~6-job scheduler
+      // floor costs more than the merge at any SF this bench sees.
       val q = Tables.spreadNarrow(s,
           li.select(col("l_returnflag"), col("l_extendedprice")))
         .groupBy("l_returnflag").agg(
@@ -1475,9 +1460,9 @@ object Analytics {
         // lineage is truncated identically once computed.
         if (round % 2 == 0) mass = mass.localCheckpoint(false)
       }
-      val out = mass
-      edges.unpersist()
-      out
+      // released when the next call retires it, never before `mass` runs
+      graft.SessionCache.retire(s, "pagerank_integer", Seq(edges))
+      mass
     }),
 
     // Year-over-year comparison: yearly exact revenue, previous year via

@@ -13,88 +13,45 @@ import graft.Tables
   */
 object Graph {
 
-  /** Persisted intermediates of each iterative builder's LAST invocation,
-    * retired when the builder runs again (ADVICE r12): unpersisting
-    * eagerly inside the builder would drop the cache before the returned
-    * lazy frame ever executes, and never unpersisting accumulates
-    * MEMORY_AND_DISK blocks for the JVM lifetime across bench
-    * iterations. One generation per builder bounds the footprint; an
-    * earlier invocation's un-executed result stays CORRECT after
-    * retirement (the plan recomputes without the cache). */
-  private val retired =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[DataFrame]]()
-  private def retire(key: String, next: Seq[DataFrame]): Unit = {
-    // Plan-aware: CacheManager entries are keyed by CANONICAL PLAN, not by
-    // Dataset reference, and a deterministic builder's generations are
-    // plan-identical — the new generation's persist() calls no-op onto the
-    // old generation's entries. Unpersisting the old frames would drop the
-    // very entries the new generation relies on (r14's order-dependent
-    // construction-audit failure: cache availability ALTERNATED with retire
-    // parity). Only frames whose plan isn't re-persisted by the new
-    // generation are truly stale; identical plans share one entry, so
-    // keeping them adds no blocks.
-    val keep = next.map(_.queryExecution.analyzed.canonicalized)
-    Option(retired.put(key, next)).foreach(_.foreach { old =>
-      if (!keep.contains(old.queryExecution.analyzed.canonicalized))
-        old.unpersist(false)
-    })
-  }
-
-  /** Derived supplier graph shared with `triangle_count`
-    * (Analytics.scala): sampled lineitem rows project to canonical
-    * undirected edges (least, greatest), distinct. */
   /** The shared undirected supplier graph, built ONCE per (session, dir)
     * and fanned out to every consumer (bfs_hops, label_propagation,
-    * closeness_centrality) — the production posture: a pipeline
-    * materializes its graph edges once, not per algorithm. Persisted +
-    * counted inside the layer builder, so each consumer's supersteps
-    * start from cached blocks instead of re-running the lineitem scan +
-    * pair distinct (round 14: closeness_centrality's driver-flagged cold
-    * cost was dominated by exactly that rebuild). */
-  private def symmetricEdges(s: SparkSession, d: String): DataFrame =
-    graft.SessionCache.layer("graph_edges", s, d) {
-      // supplier count stays IN the plan (broadcast 1-row frame, the
-      // drift_tvd pattern), the same shape as the oracle's scalar subquery
-      val nSupp = Tables.supplier(s, d).agg(count(lit(1)).as("n_supp"))
-      val raw = Tables.lineitem(s, d)
-        .filter(col("l_orderkey") % 10 === 0)
-        .crossJoin(broadcast(nSupp))
-        .select(col("l_suppkey").as("x"), (col("l_partkey") % col("n_supp")).as("y"))
-        .filter(col("x") =!= col("y"))
-      val e = raw.select(
-          least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-        .distinct()
-      val sym = e.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(e.select(col("b").as("src"), col("a").as("dst")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sym.count()
-      sym
-    }
+    * closeness_centrality, ...) — the production posture: a pipeline
+    * materializes its graph edges once, not per algorithm. Each
+    * consumer's supersteps start from cached blocks instead of re-running
+    * the lineitem scan + pair distinct (round 14: closeness_centrality's
+    * driver-flagged cold cost was dominated by exactly that rebuild).
+    * Sampled lineitem rows project to canonical undirected edges
+    * (least, greatest), distinct, emitted in both directions. */
+  private[queries] def symmetricEdges(s: SparkSession, d: String): DataFrame =
+    edgesLayer("graph_edges", s, d, 1)
 
   /** The WIDE variant of the shared graph (node domain 4× the supplier
     * count — the k_core rationale: the narrow graph is near-complete at
     * small sf, so every degree equals the mean, the diameter collapses to
     * ~1, and any operator that needs skewed degrees or interior
     * shortest-path structure degenerates). Shared by k_core,
-    * stress_centrality and degree_assortativity; same
-    * build-once-per-(session, dir) posture as [[symmetricEdges]]. */
+    * stress_centrality and degree_assortativity. */
   private def symmetricEdgesWide(s: SparkSession, d: String): DataFrame =
-    graft.SessionCache.layer("graph_edges_wide", s, d) {
+    edgesLayer("graph_edges_wide", s, d, 4)
+
+  /** Both graph layers: part keys fold into a node domain `widen` times
+    * the supplier count. */
+  private def edgesLayer(name: String, s: SparkSession, d: String, widen: Int): DataFrame =
+    graft.SessionCache.persisted(name, s, d) {
+      // supplier count stays IN the plan (broadcast 1-row frame, the
+      // drift_tvd pattern), the same shape as the oracle's scalar subquery
       val nSupp = Tables.supplier(s, d).agg(count(lit(1)).as("n_supp"))
       val raw = Tables.lineitem(s, d)
         .filter(col("l_orderkey") % 10 === 0)
         .crossJoin(broadcast(nSupp))
         .select(col("l_suppkey").as("x"),
-          (col("l_partkey") % (col("n_supp") * 4)).as("y"))
+          (col("l_partkey") % (col("n_supp") * widen)).as("y"))
         .filter(col("x") =!= col("y"))
       val e = raw.select(
           least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
         .distinct()
-      val sym = e.select(col("a").as("src"), col("b").as("dst"))
+      e.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(e.select(col("b").as("src"), col("a").as("dst")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sym.count()
-      sym
     }
 
   /** Bounded BFS from node 1: min-hop label per node within 4 hops.
@@ -125,7 +82,7 @@ object Graph {
       if (h % 2 == 0) visited = visited.localCheckpoint(false)
       frontier = next
     }
-    retire("bfs_hops", gen.toSeq)
+    graft.SessionCache.retire(s, "bfs_hops", gen.toSeq)
     visited
   }
 
@@ -269,20 +226,10 @@ SELECT CAST(rnk AS INT) AS rnk, u, w, cn, deg_u, deg_w, jaccard FROM (
     * classic queue-based-BF invariant — a node propagates in the round
     * after each improvement, so every ≤r-edge path is covered). */
   def ssspWeighted(s: SparkSession, d: String): DataFrame = {
-    val nSupp = Tables.supplier(s, d).agg(count(lit(1)).as("n_supp"))
-    val canon = Tables.lineitem(s, d)
-      .filter(col("l_orderkey") % 10 === 0)
-      .crossJoin(broadcast(nSupp))
-      .select(col("l_suppkey").as("x"), (col("l_partkey") % col("n_supp")).as("y"))
-      .filter(col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-      .distinct()
-      .withColumn("w", lit(1L) + (col("a") * 31 + col("b")) % 9)
     val gen = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val e = canon.select(col("a").as("src"), col("b").as("dst"), col("w"))
-      .unionByName(canon.select(col("b").as("src"), col("a").as("dst"), col("w")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    gen += e
+    val e = symmetricEdges(s, d) // shared layer
+      .withColumn("w", lit(1L) +
+        (least(col("src"), col("dst")) * 31 + greatest(col("src"), col("dst"))) % 9)
     val spark = s
     import spark.implicits._
     var dist = Seq((1L, 0L)).toDF("node", "dist")
@@ -302,7 +249,7 @@ SELECT CAST(rnk AS INT) AS rnk, u, w, cn, deg_u, deg_w, jaccard FROM (
       // superstep lineage truncation, the pagerank/bfs discipline
       if (r % 2 == 0) dist = dist.localCheckpoint(false)
     }
-    retire("sssp_weighted", gen.toSeq)
+    graft.SessionCache.retire(s, "sssp_weighted", gen.toSeq)
     dist
   }
 
@@ -481,7 +428,7 @@ l$t AS (
       // no construction-time job)
       e = if (r % 2 == 0) next.localCheckpoint(false) else next
     }
-    retire("k_core", gen.toSeq)
+    graft.SessionCache.retire(s, "k_core", gen.toSeq)
     e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
   }
 
@@ -563,7 +510,7 @@ e$r AS (
         .localCheckpoint(false)
       frontier = next
     }
-    retire("closeness_centrality", gen.toSeq)
+    graft.SessionCache.retire(s, "closeness_centrality", gen.toSeq)
     visited.groupBy("node")
       .agg(count(lit(1)).as("n_reached"),
         sum(col("dist")).cast("long").as("sum_dist"))
@@ -682,7 +629,7 @@ FROM v$CcRounds GROUP BY node"""
         .select(col("seed"), col("node"), coalesce(col("c"), lit(0L)).as("c"))
       acc = acc.unionByName(cont)
     }
-    retire("stress_centrality", gen.toSeq)
+    graft.SessionCache.retire(s, "stress_centrality", gen.toSeq)
     visited.filter(col("node") =!= col("seed"))
       .join(acc, Seq("seed", "node"))
       .groupBy("node")

@@ -89,6 +89,30 @@ class ContractSpec extends SparkSpec {
       s"collect() inventory drifted — audit any new site for driver-side boundedness: $found")
   }
 
+  test("cache releases stay confined to the audited same-call sites") {
+    // SessionCache owns frame lifetimes: shared frames are persisted
+    // layers, builders' loop frames are retired per (session, owner). A
+    // hand-placed unpersist elsewhere is either a premature release (the
+    // returned lazy plan then runs without its cache) or a second
+    // lifetime mechanism — this test forces that conversation.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val audited = Map(
+      "SessionCache.scala" -> 1,              // retire: the previous generation
+      "streaming/IncrementalMart.scala" -> 6, // foreachBatch-local frames
+      "llm/TextDedup.scala" -> 1,             // clusters loop scratch after its count()
+      "llm/LangModel.scala" -> 2)             // vocab after the collect/checkpoint loop
+    val found = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val n = java.util.regex.Pattern.quote(".unpersist(").r
+          .findAllIn(java.nio.file.Files.readString(p)).size
+        if (n > 0) Some(p.toString.replaceFirst(".*graft/", "") -> n) else None
+      }.toMap
+    assert(found === audited,
+      s"unpersist() inventory drifted — route frame lifetimes through SessionCache: $found")
+  }
+
   test("query construction runs no Spark jobs outside the audited mechanisms") {
     // VERDICT r12 #4: builders must be LAZY — a stray count()/head() at
     // construction is one driver job per call and, at 100 TB, an
@@ -188,8 +212,9 @@ class ContractSpec extends SparkSpec {
   }
 
   test("superstep builders leave no growing persisted-RDD footprint across invocations") {
-    // VERDICT r13 #3: the retire() discipline (each builder unpersists the
-    // PREVIOUS invocation's loop frames when re-invoked) must hold
+    // VERDICT r13 #3: the SessionCache.retire discipline (each builder
+    // hands its loop frames over, and the PREVIOUS invocation's frames are
+    // unpersisted when it is re-invoked in the session) must hold
     // mechanically for the whole superstep family, or repeated invocations
     // accumulate MEMORY_AND_DISK blocks for the JVM lifetime. Checkpointed
     // frames (localCheckpoint) are excluded: their blocks are their ONLY
@@ -197,7 +222,8 @@ class ContractSpec extends SparkSpec {
     // and the ContextCleaner reclaims them when the frame is GC'd.
     val names = Seq("bfs_hops", "sssp_weighted", "k_core", "closeness_centrality",
       "pagerank_integer", "label_propagation", "link_prediction",
-      "dedup_clusters", "dedup_keep_best", "stress_centrality")
+      "dedup_clusters", "dedup_keep_best", "stress_centrality",
+      "triangle_count", "perceptron_steps")
     def run(n: String): Unit = SparkEntry.queries(n)(spark, sf)
       .write.format("noop").mode("overwrite").save()
     // Count AFTER a GC pass: a lazily-checkpointed frame whose
@@ -205,7 +231,7 @@ class ContractSpec extends SparkSpec {
     // away) is reclaimed by the ContextCleaner only once GC runs, so an
     // un-collected straggler from an EARLIER suite would otherwise flip
     // this count nondeterministically. The frames retire() is auditing
-    // are STRONGLY held in the builders' generation maps — GC cannot
+    // are STRONGLY held in SessionCache's generation entries — GC cannot
     // launder a missing unpersist.
     def persistedNonCkpt: Int = {
       System.gc()

@@ -58,4 +58,33 @@ class SessionCacheSpec extends SparkSpec {
       "hit path must re-persist at the recorded level")
     hit.unpersist(false)
   }
+
+  test("retire releases the previous generation of the same (session, owner) only") {
+    import org.apache.spark.storage.StorageLevel.{MEMORY_AND_DISK, NONE}
+    val child = spark.newSession()
+    def frame(ss: org.apache.spark.sql.SparkSession, n: Long) =
+      ss.range(n).toDF("v").persist(MEMORY_AND_DISK)
+    val shared = frame(spark, 10)  // plan repeated by the next generation
+    val stale = frame(spark, 11)   // plan the next generation drops
+    SessionCache.retire(spark, "retire_probe", Seq(shared, stale))
+    val other = frame(child, 12)
+    SessionCache.retire(child, "retire_probe", Seq(other))
+    val childEntries = SessionCache.entriesFor(child)
+
+    // second generation in the parent session: same plan as `shared`
+    val again = frame(spark, 10)
+    SessionCache.retire(spark, "retire_probe", Seq(again))
+    assert(stale.storageLevel === NONE, "a plan the new generation drops is released")
+    assert(shared.storageLevel === MEMORY_AND_DISK,
+      "an identical plan shares one cache entry with the new generation and is kept")
+    assert(again.storageLevel === MEMORY_AND_DISK)
+    assert(other.storageLevel === MEMORY_AND_DISK,
+      "another session's generation of the same owner is left alone")
+
+    assert(childEntries === 1)
+    SessionCache.evict(child)
+    assert(SessionCache.entriesFor(child) === 0, "session end drops the generation entry")
+    again.unpersist(false)
+    other.unpersist(false)
+  }
 }

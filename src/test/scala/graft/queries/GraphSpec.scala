@@ -256,4 +256,14 @@ class GraphSpec extends SparkSpec {
     // for the correlation to be defined (the shared graph is near-regular)
     assert(!r.isNaN)
   }
+
+  test("pagerank_integer's returned plan reads its edges from the cache") {
+    // The edge frame is persisted for every round's join; releasing it
+    // inside the builder (before the lazy result runs) left the final
+    // round recomputing the lineitem scan + distinct. It is retired by the
+    // next call instead, so the returned plan must still hit the cache.
+    val p = graft.SparkEntry.queries("pagerank_integer")(spark, sf)
+      .queryExecution.executedPlan.toString
+    assert(p.contains("InMemoryTableScan"), s"edges must be read from the cache:\n$p")
+  }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -24,7 +22,8 @@ class StreamJoinKeySpec extends SparkSpec {
   private lazy val hotDir: String = {
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft_hotev_").toString
+    // under the gate root, which is cleaned at start-up and at JVM exit
+    val dir = StreamGate.tempDir("graft_hotev_")
     val hot = (0 until 1100).flatMap { i =>
       val base = 1700000000000000L + i.toLong * 7200L * 1000000L
       Seq(
