@@ -39,6 +39,20 @@ object Bench {
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
   }
 
+  /** Per query, the fastest successful run is published. A query with no
+    * successful run is failed, with its last error: a run that throws is
+    * never published as a (fast) time, in `total` or the regression gate. */
+  private[graft] final case class Tally(best: Seq[(String, QueryProbe.Run)],
+      failed: Seq[(String, String)]) {
+    def total: Double = best.map(_._2.totalS).sum
+  }
+
+  private[graft] def tally(runs: Seq[(String, Seq[QueryProbe.Run])]): Tally = {
+    val (ok, bad) = runs.partition(_._2.exists(_.ok))
+    Tally(ok.map { case (n, rs) => n -> rs.filter(_.ok).minBy(_.totalS) },
+      bad.map { case (n, rs) => n -> rs.flatMap(_.error).lastOption.getOrElse("no run") })
+  }
+
   def main(args: Array[String]): Unit = {
     val quiesceWait = quiesce(
       maxWaitSec = sys.env.getOrElse("SPARK_GRAFT_QUIESCE_MAX", "300").toInt,
@@ -73,22 +87,15 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet).filter(_.nonEmpty)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
+    val probe = new QueryProbe(spark)
     val allRuns = selected.map { case (name, fn) =>
-      val times = (1 to runsPerQuery).map { _ =>
-        val t0 = System.nanoTime()
-        // noop-format write: full execution of every column without sink cost
-        // (a bare .count() would let Spark skip column materialization).
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-        catch { case _: Throwable => () }
-        (System.nanoTime() - t0) / 1e9
-      }
-      name -> times
+      name -> (1 to runsPerQuery).map(_ => probe.run(name, fn, sfDir))
     }
-    val firstPass = allRuns.map { case (name, ts) => name -> ts.min }.toMap
+    val firstPass = tally(allRuns)
     // First-run-only total: min-of-N (round 7+) systematically selects
     // warm timings, so the min total is not comparable to rounds 1-6's
     // single-run totals — this line preserves the old methodology.
-    val firstRunTotal = if (allRuns.nonEmpty) allRuns.map(_._2.head).sum else 0.0
+    val firstRunTotal = allRuns.flatMap(_._2.headOption).filter(_.ok).map(_.totalS).sum
     // Per-query regression gate vs the committed previous-round snapshot
     // (bench_prev.json, refreshed each round after review): a query is a
     // regression when it is BOTH >2x its previous min AND >1s absolute
@@ -117,26 +124,20 @@ object Bench {
     // co-tenant load inflated its in-loop passes has usually drained —
     // and the min is kept, so the published regression list only carries
     // slowdowns that still reproduce after the bench quiesces.
-    val flagged = firstPass.collect {
-      case (n, t) if prevTimes.get(n).exists(isRegression(t, _)) => n
+    val flagged = firstPass.best.collect {
+      case (n, r) if prevTimes.get(n).exists(isRegression(r.totalS, _)) => n
     }.toSet
-    // A recheck time only counts if the run COMPLETED: a flagged query that
-    // fails fast on the recheck (poisoned session state, OOM) must not get
-    // its regression flag laundered away by a tiny failed-run elapsed time
-    // (ADVICE r9). On failure we keep the first-pass time and the flag.
-    val recheck: Map[String, Double] = selected
+    // The recheck run enters the same tally as the loop runs, so it only
+    // counts if it COMPLETED: a flagged query that fails fast on the
+    // recheck (poisoned session state, OOM) keeps its first-pass time and
+    // its flag (ADVICE r9).
+    val recheck: Map[String, QueryProbe.Run] = selected
       .filter { case (n, _) => flagged.contains(n) }
-      .flatMap { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case _: Throwable => false }
-        if (ok) Some(name -> (System.nanoTime() - t0) / 1e9) else None
-      }.toMap
-    val results: Seq[(String, Double)] = selected.map { case (name, _) =>
-      name -> math.min(firstPass(name), recheck.getOrElse(name, Double.MaxValue))
-    }
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+      .map { case (name, fn) => name -> probe.run(name, fn, sfDir) }.toMap
+    probe.close()
+    val published = tally(allRuns.map { case (n, rs) => n -> (rs ++ recheck.get(n)) })
+    val results: Seq[(String, Double)] = published.best.map { case (n, r) => n -> r.totalS }
+    val total = published.total
     val regressions = results.flatMap { case (name, cur) =>
       prevTimes.get(name).collect {
         case prev if isRegression(cur, prev) => name -> (prev, cur)
@@ -153,6 +154,10 @@ object Bench {
       .map { case (k, v) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
     val mean = if (results.nonEmpty) total / results.size else 0.0
+    // probe totals over the published runs (shuffle_mb: bytes written)
+    val pub = published.best.map(_._2)
+    def mb(f: QueryProbe.Stage => Long) = "%.1f".format(pub.map(r => f(r.sum)).sum / 1048576.0)
+    val probeTotals = s""""jobs_build":${pub.map(_.jobsBuild).sum},"jobs_exec":${pub.map(_.jobsExec).sum},"stages":${pub.map(_.stages.size).sum},"shuffle_mb":${mb(_.shuffleWriteBytes)},"spill_mb":${mb(_.spillBytes)}"""
     // show at most the 8 worst regressions on the summary line (it must
     // stay under the driver's 2000-char stdout tail); the full list goes
     // to bench_full.json
@@ -174,7 +179,7 @@ object Bench {
         ).mkString("{", ",", "}")
     }
     def mkLine(nLayers: Int): String =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"mean_sec":${r3(mean)},"first_run_total":${r3(firstRunTotal)},"layers_total":${r3(layersTotal)},"layers":${layersJson(nLayers)},"load":"$loadStart;${loadavg()}","quiesce_wait":${r3(quiesceWait)},"prev_parse":$prevParse,"n_rechecked":${recheck.size},"regressions":$regJson,"queries":$slow,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"mean_sec":${r3(mean)},"first_run_total":${r3(firstRunTotal)},"layers_total":${r3(layersTotal)},"layers":${layersJson(nLayers)},"load":"$loadStart;${loadavg()}","quiesce_wait":${r3(quiesceWait)},"prev_parse":$prevParse,"n_rechecked":${recheck.size},"n_failed":${published.failed.size},$probeTotals,"regressions":$regJson,"queries":$slow,"sf":"$sfDir"}"""
     // the driver keeps only the last ~2000 chars of stdout; shrink the
     // manifest (never the query/regression detail) until the line fits
     val line = Seq(layers.size, 8, 4, 0).view.map(mkLine)
@@ -197,8 +202,12 @@ object Bench {
         .map { case (k, (p, c)) => s"\"" + k + s"\":[${r3(p)},${r3(c)}]" }
         .mkString("{", ",", "}")
       val recheckJson = recheck.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"\"" + k + "\":" + r3(v) }
+        .map { case (k, r) => s"\"" + k + "\":" + (if (r.ok) r3(r.totalS) else "null") }
         .mkString("{", ",", "}")
+      // the published run's profile; each failed query's error
+      val profileJson = published.best.map { case (k, r) => s"\"$k\":${r.json}" }.mkString("{", ",", "}")
+      val failedJson = published.failed.map { case (k, e) =>
+        s"\"$k\":\"" + e.replace("\\", "\\\\").replace("\"", "\\\"") + "\"" }.mkString("{", ",", "}")
       val fullLayers = layers.map { case (k, (b, n, r)) =>
         s"\"$k\":{\"build_s\":${r3(b)},\"builds\":$n,\"reuses\":$r}"
       }.mkString("{", ",", "}")
@@ -210,15 +219,15 @@ object Bench {
         .mkString("{", ",", "}")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"target/bench_full$suffix.json"),
-        s"""{"total":$total,"n":${results.size},"first_run_total":$firstRunTotal,"layers_total":${r3(layersTotal)},"layers":$fullLayers,"state":$stateJson,"loadavg_start":"$loadStart","loadavg_end":"${loadavg()}","quiesce_wait":${r3(quiesceWait)},"prev_parse":$prevParse,"rechecked":$recheckJson,"regressions":$fullRegs,"queries":$fullQs}""" + "\n")
+        s"""{"total":$total,"n":${results.size},"first_run_total":$firstRunTotal,"layers_total":${r3(layersTotal)},"layers":$fullLayers,"state":$stateJson,"loadavg_start":"$loadStart","loadavg_end":"${loadavg()}","quiesce_wait":${r3(quiesceWait)},"prev_parse":$prevParse,"rechecked":$recheckJson,"regressions":$fullRegs,"failed":$failedJson,"profile":$profileJson,"queries":$fullQs}""" + "\n")
       // every individual run, for variance archaeology
-      val runsJson = allRuns.map { case (k, ts) =>
-        s"\"" + k + "\":[" + ts.map(t => "%.3f".format(t)).mkString(",") + "]"
+      val runsJson = allRuns.map { case (k, rs) =>
+        s"\"" + k + "\":[" + rs.map(r => if (r.ok) r3(r.totalS) else "null").mkString(",") + "]"
       }.mkString("{", ",", "}")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"target/bench_runs$suffix.json"),
         s"""{"runs_per_query":$runsPerQuery,"queries":$runsJson}""" + "\n")
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable => System.err.println(s"WARNING: bench artifacts not fully written: $e") }
     spark.stop()
   }
 }

@@ -44,7 +44,7 @@ object Sessions {
       // (the superstep family's checkpointed `visited` frames reached ~100
       // near-empty partitions at sf0.1), and every downstream read pays
       // one task per pinned partition — measured as the dominant cost of
-      // the graph queries (ProfileS: 40-60 ms task deserialize × ~100
+      // the graph queries (per stage: 40-60 ms task deserialize × ~100
       // tasks × ~25 stages with near-zero executor run time). With AQE
       // allowed to re-plan cached output partitioning, cached/persisted
       // frames coalesce to the advisory byte target like any other

@@ -92,28 +92,6 @@ object IncrementalMart {
   /** The null-minute sentinel partition (see [[dateOf]]). */
   val SentinelDate = "1900-01-01"
 
-  /** Apply one micro-batch of raw events to the state under `root`.
-    *
-    * `stateDates`: optional STATIC predicate on `win_date` bounding which
-    * state partitions this batch's keys can possibly contest — when the
-    * caller slices arrivals by event time (the gate; any production
-    * time-windowed ingest), the touched dates are known up front and a
-    * literal filter gives guaranteed partition pruning on the state read
-    * (the broadcast-semi-join prune below still applies inside the
-    * filtered scan). The predicate MUST include [[SentinelDate]]: rows
-    * whose reading_timestamp nulls out land there from every slice, so
-    * sentinel keys are the one cross-slice contention surface. */
-  private val timing = sys.env.contains("GRAFT_INCR_TIMING")
-  private def timed[T](tag: String, batchId: Long)(body: => T): T = {
-    if (!timing) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"INCR b=$batchId $tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
-
   /** Batch-local winner per key — the same winner the batch chain's W1
     * row_number window picks (highest record_id per (device, minute);
     * record_id is unique, so no tie branch), but computed as a
@@ -158,7 +136,6 @@ object IncrementalMart {
     if (!allApplied) {
       val win = prepareWinners(batch)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (timing) timed("win.materialize", batchId)(win.count())
       slices.zipWithIndex.foreach { case ((p, dates), i) =>
         applyWinners(s, win.filter(p), subId(i), root, Some(dates))
       }
@@ -166,6 +143,17 @@ object IncrementalMart {
     }
   }
 
+  /** Apply one micro-batch of raw events to the state under `root`.
+    *
+    * `stateDates`: optional STATIC predicate on `win_date` bounding which
+    * state partitions this batch's keys can possibly contest — when the
+    * caller slices arrivals by event time (the gate; any production
+    * time-windowed ingest), the touched dates are known up front and a
+    * literal filter gives guaranteed partition pruning on the state read
+    * (the broadcast-semi-join prune below still applies inside the
+    * filtered scan). The predicate MUST include [[SentinelDate]]: rows
+    * whose reading_timestamp nulls out land there from every slice, so
+    * sentinel keys are the one cross-slice contention surface. */
   def applyBatch(s: SparkSession, batch: DataFrame, batchId: Long, root: String,
       stateDates: Option[org.apache.spark.sql.Column] = None): Unit = {
     val win = prepareWinners(batch)
@@ -218,7 +206,7 @@ object IncrementalMart {
   /** Core state update over an already-windowed winner frame. */
   private def applyWinners(s: SparkSession, batchWin: DataFrame, batchId: Long,
       root: String,
-      stateDates: Option[org.apache.spark.sql.Column]): Unit = timed("applyBatch", batchId) {
+      stateDates: Option[org.apache.spark.sql.Column]): Unit = {
     val winnersDir = s"$root/winners"
     val partialsDir = s"$root/partials"
     val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -244,8 +232,7 @@ object IncrementalMart {
     // (bounded) state read, so a key date outside the bound would wipe
     // that partition's unrelated keys — refuse loudly instead
     stateDates.foreach { p =>
-      val escaped = timed("guard", batchId)(
-        batchWin.select(dateOf.as("win_date")).distinct().filter(!p))
+      val escaped = batchWin.select(dateOf.as("win_date")).distinct().filter(!p)
       require(escaped.isEmpty,
         s"stateDates bound excludes key dates present in batch $batchId — " +
           "applying would corrupt winner state")
@@ -348,11 +335,9 @@ object IncrementalMart {
 
     // 1. partials first, keyed by batch id (idempotent skip)
     val pDst = new Path(s"$partialsDir/batch_id=$batchId")
-    if (!fs.exists(pDst)) timed("partials", batchId)(
-      deltaPartials.write.mode("overwrite").parquet(pDst.toString))
+    if (!fs.exists(pDst)) deltaPartials.write.mode("overwrite").parquet(pDst.toString)
     val spDst = new Path(s"$root/spartials/batch_id=$batchId")
-    if (!fs.exists(spDst)) timed("spartials", batchId)(
-      deltaSummary.write.mode("overwrite").parquet(spDst.toString))
+    if (!fs.exists(spDst)) deltaSummary.write.mode("overwrite").parquet(spDst.toString)
 
     // 2. winners: rewrite only the touched (date, bucket) partitions. The
     //   replacement rows for a partition = its stored rows with changed
@@ -390,9 +375,8 @@ object IncrementalMart {
           .groupBy("win_date", "win_bkt")
           .agg(min(col("reading_timestamp")).as("min_ts"),
             max(col("reading_timestamp")).as("max_ts"))
-        timed("tstats", batchId)(
-          touched.join(ord, Seq("win_date", "win_bkt"), "left")
-            .write.mode("overwrite").parquet(tDst.toString))
+        touched.join(ord, Seq("win_date", "win_bkt"), "left")
+          .write.mode("overwrite").parquet(tDst.toString)
       }
     }
 
@@ -403,13 +387,12 @@ object IncrementalMart {
       // extra action is spent asking); a crash mid-first-write is safe
       // without staging — there are no kept keys to lose, and the retry's
       // compare-and-set fills in whatever subset landed
-      if (!timed("changed.isEmpty", batchId)(changed.isEmpty)) {
+      if (!changed.isEmpty) {
         val changedC = changed
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         writeTstats(changedC, changedC.select("win_date", "win_bkt").distinct())
-        timed("winners.first", batchId)(
-          changedC.write.partitionBy("win_date", "win_bkt")
-            .mode("overwrite").parquet(winnersDir))
+        changedC.write.partitionBy("win_date", "win_bkt")
+          .mode("overwrite").parquet(winnersDir)
         changedC.unpersist(false)
       }
     } else {
@@ -427,13 +410,12 @@ object IncrementalMart {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val stageDir = new Path(s"$root/stage/batch_id=$batchId")
       fs.delete(stageDir, true) // any unmarked partial prior attempt
-      timed("winners.stage", batchId)(newContent
+      newContent
         .write.partitionBy("win_date", "win_bkt").mode("overwrite")
-        .parquet(new Path(stageDir, "data").toString))
+        .parquet(new Path(stageDir, "data").toString)
       writeTstats(newContent, touched)
       fs.createNewFile(new Path(stageDir, "_STAGED"))
-      timed("winners.commit", batchId)(
-        commitStage(fs, stageDir, new Path(winnersDir)))
+      commitStage(fs, stageDir, new Path(winnersDir))
       newContent.unpersist(false)
     }
     fs.mkdirs(appliedMark)

@@ -34,6 +34,26 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.parsePrevTimes("""{"total":1.0}""").isEmpty)
   }
 
+  private def run(secs: Double, error: Option[String] = None) =
+    QueryProbe.Run(secs, 0.0, 0.0, error, 0, 0, Nil)
+
+  test("a query that throws on every run is failed, not a fast time, and is left out of total") {
+    val t = Bench.tally(Seq(
+      "ok_q" -> Seq(run(2.0), run(1.5)),
+      "boom" -> Seq(run(0.01, Some("IllegalStateException: boom")),
+        run(0.02, Some("IllegalStateException: boom again")))))
+    assert(t.best.map { case (n, r) => n -> r.totalS } === Seq("ok_q" -> 1.5))
+    assert(t.failed === Seq("boom" -> "IllegalStateException: boom again"))
+    assert(t.total === 1.5)
+  }
+
+  test("a failed run (loop or recheck) never enters the per-query min") {
+    val t = Bench.tally(Seq(
+      "flaky" -> Seq(run(3.0), run(0.01, Some("SparkException: lost")))))
+    assert(t.best.map { case (n, r) => n -> r.totalS } === Seq("flaky" -> 3.0))
+    assert(t.failed.isEmpty)
+  }
+
   test("the committed bench_prev.json parses to a full query map") {
     val p = java.nio.file.Paths.get("bench_prev.json")
     assume(java.nio.file.Files.exists(p))

@@ -64,10 +64,10 @@ class ContractSpec extends SparkSpec {
   test("driver-side collect() stays confined to the audited bounded sites") {
     // Every .collect() in main is bounded by construction (one long per
     // partition in Ranks' prefix sums, the ≤4096-vector IVF codebook
-    // sample, a 1-row argmax in the BPE trainer, the non-query Profile
-    // tool). A new collect site means a new driver-bound audit — this
-    // test forces that conversation instead of letting an unbounded
-    // driver materialization slip in as "just a collect".
+    // sample, a 1-row argmax in the BPE trainer, the generator mains'
+    // top-key reports). A new collect site means a new driver-bound
+    // audit — this test forces that conversation instead of letting an
+    // unbounded driver materialization slip in as "just a collect".
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     val audited = Map(
@@ -75,7 +75,6 @@ class ContractSpec extends SparkSpec {
       "llm/IvfAnn.scala" -> 1,      // bounded codebook sample
       "llm/LangModel.scala" -> 1,   // limit(1) argmax
       "llm/Pca.scala" -> 1,         // d²-bounded Gramian (driver eigensolve)
-      "Profile.scala" -> 1,         // dev profiling main, not a query
       "SkewGen.scala" -> 1,         // 3-row top-key report in the generator main
       "ContentSkewGen.scala" -> 1)  // 5-row top-text report in the generator main
     val found = java.nio.file.Files.walk(root).iterator().asScala
@@ -197,8 +196,9 @@ class ContractSpec extends SparkSpec {
       sc.setJobGroup(s"construct-audit-$n", n, interruptOnCancel = false)
       try SparkEntry.queries(n)(spark, sf) finally sc.clearJobGroup()
     }
-    // the status store is fed from the listener bus asynchronously
-    Thread.sleep(3000)
+    // the status store is fed from the listener bus asynchronously: read
+    // it only once every job event posted so far has been delivered
+    org.apache.spark.graft.Bus.drain(sc)
     val ran = SparkEntry.queries.keys.toSeq.sorted.filterNot(excluded)
       .map(n => n -> sc.statusTracker.getJobIdsForGroup(s"construct-audit-$n").length)
       .filter(_._2 > 0).toMap
