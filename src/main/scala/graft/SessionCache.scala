@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
@@ -7,11 +9,11 @@ import org.apache.spark.storage.StorageLevel
 /** Session-scoped memoization with eviction when the session's context
   * shuts down (ADVICE r12: caches keyed by SparkSession in plain TrieMaps
   * outlive stopped sessions and pin cached/checkpointed block references
-  * for the JVM lifetime in multi-session processes). First use from a
-  * session installs one SparkListener on that session's context; on
-  * application end every entry keyed by the session is dropped, releasing
-  * the DataFrame references so the blocks (already gone with the context)
-  * and plans can be garbage-collected.
+  * for the JVM lifetime in multi-session processes). First use on a
+  * context installs one SparkListener on it; on application end every
+  * entry keyed by one of its sessions is dropped, releasing the DataFrame
+  * references so the blocks (already gone with the context) and plans can
+  * be garbage-collected.
   *
   * The values memoized through this cache are bounded by construction —
   * table readers (a plan, not data), persisted layer frames, trained
@@ -23,6 +25,9 @@ import org.apache.spark.storage.StorageLevel
   *  - a builder's private loop frames are handed to [[retire]], alive
   *    until the same builder runs again in the same session (the lazy
   *    result still reads them) or the session ends;
+  *  - RDDs a builder persists outside the CacheManager (GraphX caches
+  *    every round's vertex and edge RDDs) go to the RDD [[retire]], alive
+  *    until the same builder runs again on the same context;
   *  - a frame whose whole life fits inside one synchronous call (a
   *    foreachBatch body, scratch consumed by an eager count or collect
   *    loop) may be released in that call — those sites are pinned by
@@ -45,24 +50,32 @@ object SessionCache {
     * the next consumer's execution — a one-time cost, not a rebuild. */
   private val builtLevel = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, Any), StorageLevel]
+  /** Each owner's last RDD generation, keyed by (context, owner). */
+  private val rddGenerations =
+    scala.collection.concurrent.TrieMap.empty[(SparkContext, String), Seq[RDD[_]]]
   private val hooked = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean])
+    new java.util.concurrent.ConcurrentHashMap[SparkContext, java.lang.Boolean])
 
-  private def hook(s: SparkSession): Unit =
-    if (hooked.add(s)) {
-      s.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
-          evict(s)
+  /** One application-end listener per context: it drops every session's
+    * entries on that context and the context's RDD generations. */
+  private def hook(sc: SparkContext): Unit =
+    if (hooked.add(sc)) {
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+          store.keys.iterator.map(_._1).filter(_.sparkContext eq sc).toSet.foreach(evict)
+          rddGenerations.keys.iterator.filter(_._1 eq sc).foreach(rddGenerations.remove)
+          hooked.remove(sc)
+        }
       })
     }
 
-  /** Drop every entry keyed by `s` — the application-end listener's body,
-    * callable directly so the eviction path is unit-testable without
-    * stopping the suite's shared context (SessionCacheSpec). */
+  /** Drop every entry keyed by `s` — the application-end listener's body
+    * for one session, callable directly so the eviction path is
+    * unit-testable without stopping the suite's shared context
+    * (SessionCacheSpec). */
   private[graft] def evict(s: SparkSession): Unit = {
     store.keys.iterator.filter(_._1 eq s).foreach(store.remove)
     builtLevel.keys.iterator.filter(_._1 eq s).foreach(builtLevel.remove)
-    hooked.remove(s)
   }
 
   /** Entry count for `s` (test observability). */
@@ -73,7 +86,7 @@ object SessionCache {
     * concurrent first access (TrieMap getOrElseUpdate is not atomic for
     * side effects) — every memoized builder here is idempotent. */
   def getOrElseUpdate[V](s: SparkSession, key: Any)(mk: => V): V = {
-    hook(s)
+    hook(s.sparkContext)
     store.getOrElseUpdate((s, key), mk).asInstanceOf[V]
   }
 
@@ -106,11 +119,25 @@ object SessionCache {
     * entries the new generation relies on, so only old frames whose plan
     * the new generation does not share are released. */
   def retire(s: SparkSession, owner: String, frames: Seq[DataFrame]): Unit = {
-    hook(s)
+    hook(s.sparkContext)
     val keep = frames.map(_.queryExecution.analyzed.canonicalized)
     store.put((s, Generation(owner)), frames).foreach(_.asInstanceOf[Seq[DataFrame]].foreach { old =>
       if (!keep.contains(old.queryExecution.analyzed.canonicalized)) old.unpersist(false)
     })
+  }
+
+  /** [[retire]] for RDDs a builder persisted itself, outside the
+    * CacheManager — GraphX `.cache()`s each round's vertex and edge RDDs.
+    * Records `rdds` as `owner`'s generation and unpersists the previous
+    * one. Keyed by (context, owner), not session: an RDD belongs to the
+    * context, so a run from any session of it releases the last run's
+    * RDDs, and `spark.catalog.clearCache()` never frees them. An earlier
+    * run's un-executed result stays correct after release (its lineage
+    * recomputes). */
+  def retire(sc: SparkContext, owner: String, rdds: Seq[RDD[_]]): Unit = {
+    hook(sc)
+    rddGenerations.put((sc, owner), rdds)
+      .foreach(_.filterNot(rdds.contains).foreach(_.unpersist(blocking = false)))
   }
 
   /** Memoized layer with [[LayerMetrics]] accounting: hits record a reuse,
@@ -118,7 +145,7 @@ object SessionCache {
     * mart/gram/pair/vocab layer caches (SURVEY §4's materialize-once
     * posture), now with session-end eviction in one place. */
   def layer[V](name: String, s: SparkSession, key: Any)(mk: => V): V = {
-    hook(s)
+    hook(s.sparkContext)
     val k = (s, (name, key))
     store.get(k) match {
       case Some(v) =>

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Loaders for the driver testdata tables (see TESTDATA.md).
@@ -66,17 +68,30 @@ object Tables {
     * deterministic without the round-robin pre-sort. Call it ON the
     * checkpointed frame: there `.rdd.getNumPartitions` is metadata (no
     * jobs — on an unmaterialized AQE frame it would execute every query
-    * stage). Same guard as [[spread]]: no-ops whenever the frame already
-    * carries at least half the session parallelism, so a cluster-scale
-    * materialization is never re-shuffled. Keys must be high-cardinality
-    * (content fingerprints, doc ids) so the hash spreads evenly (guide
-    * §2.5). r17: cached/checkpointed frames materialize AQE-coalesced now
+    * stage), so anything but a checkpointed leaf under projections and
+    * filters throws IllegalArgumentException. Same guard as [[spread]]:
+    * no-ops whenever the frame already carries at least half the session
+    * parallelism, so a cluster-scale materialization is never
+    * re-shuffled. Keys must be high-cardinality (content fingerprints,
+    * doc ids) so the hash spreads evenly (guide §2.5). r17: cached/checkpointed frames materialize AQE-coalesced now
     * (canChangeCachedPlanOutputPartitioning) — right for exchange-bound
     * consumers, wrong for compute-heavy narrow ones, which re-spread here
     * exactly like the raw single-split scans. */
   def spreadKeyed(spark: SparkSession, df: DataFrame, cols: Seq[org.apache.spark.sql.Column]): DataFrame = {
+    require(materialized(df.queryExecution.analyzed),
+      "spreadKeyed needs a checkpointed frame (projections and filters over it are fine); " +
+        s"counting this plan's partitions would run its stages:\n${df.queryExecution.analyzed}")
     val target = spark.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions * 2 < target) df.repartition(target, cols: _*) else df
+  }
+
+  /** A checkpointed RDD leaf under nothing but projections and filters. */
+  @scala.annotation.tailrec
+  private def materialized(p: LogicalPlan): Boolean = p match {
+    case _: LogicalRDD => true
+    case Project(_, child) => materialized(child)
+    case Filter(_, child) => materialized(child)
+    case _ => false
   }
 
   def region(spark: SparkSession, sfDir: String): DataFrame    = table(spark, sfDir, "region")

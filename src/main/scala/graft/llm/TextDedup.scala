@@ -1044,8 +1044,8 @@ WHERE CAST(n_shared AS DOUBLE) / CAST(s1.n + s2.n - n_shared AS DOUBLE) >= $Jacc
       // shuffle_hash on BOTH per-round label joins: AQE otherwise
       // broadcast-converts the node-scale label frame, and each broadcast
       // build is a SEPARATE job that re-derives every unmaterialized
-      // earlier round — the k_core cascade (Graph.scala k-core loop /
-      // commit 50deb5a; measured 20.3 s → low single digits for the
+      // earlier round — the k_core cascade (commit 50deb5a, when k_core
+      // was a DataFrame loop; measured 20.3 s → low single digits for the
       // clusters layer at sf0.1). Label frames are one row per node —
       // never broadcastable at real graph sizes anyway.
       val nbrMin = edges
@@ -1058,12 +1058,12 @@ WHERE CAST(n_shared AS DOUBLE) / CAST(s1.n + s2.n - n_shared AS DOUBLE) >= $Jacc
         .select(col("node"), least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("lbl"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       scratch += step
-      // superstep lineage truncation every 2 rounds, LAZY (the
-      // pagerank/bfs/k_core discipline, 50deb5a): label propagation runs
-      // diameter-many rounds, and without truncation the plan nests one
-      // join tree per round — unbounded optimizer/DAG-scheduler cost at
-      // real cluster diameters (VERDICT r6). Lazy, so the materialization
-      // rides the `changed` count below instead of being its own job.
+      // superstep lineage truncation every 2 rounds, LAZY (50deb5a):
+      // label propagation runs diameter-many rounds, and without
+      // truncation the plan nests one join tree per round — unbounded
+      // optimizer/DAG-scheduler cost at real cluster diameters (VERDICT
+      // r6). Lazy, so the materialization rides the `changed` count below
+      // instead of being its own job.
       val next = if (iter % 2 == 0) step.localCheckpoint(false) else step
       changed = next.join(labels.select(col("node"), col("lbl").as("old"))
           .hint("shuffle_hash"), "node")

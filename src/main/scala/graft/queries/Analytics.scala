@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.graphx.{Edge, TripletFields, Graph => GraphX}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1426,43 +1427,36 @@ object Analytics {
     // floor(mass*85 / (100*outdeg)) along each out-edge (floor remainder
     // deliberately evaporates — deterministic, order-independent integer
     // sums, no float drift). Three rounds over the supplier graph (edges:
-    // supplier → partkey folded into the supplier id space). The engine
-    // iterates a driver loop of joins+aggregates — one edge shuffle per
-    // round, the GraphX/Pregel shape that scales to 100 TB edge lists —
-    // while the oracle macro-expands the same three rounds as CTE stages.
+    // supplier → partkey folded into the supplier id space), run as
+    // GraphX rounds (Graph.supersteps); the oracle macro-expands the same
+    // three rounds as CTE stages.
     "pagerank_integer" -> ((s, d) => {
-      // supplier count folded into the plan as a broadcast 1-row frame
-      // (the drift_tvd pattern) — no eager driver-side action during
-      // query construction, matching the oracle's scalar subquery.
-      val nSupp = Tables.supplier(s, d).agg(count(lit(1)).as("n_supp"))
-      val edges = Tables.lineitem(s, d)
-        .crossJoin(broadcast(nSupp))
-        .select(col("l_suppkey").as("src"), (col("l_partkey") % col("n_supp")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct().persist()
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      val nodes = Tables.supplier(s, d).select(col("s_suppkey").as("node"))
-      var mass = nodes.withColumn("mass", lit(1000000L))
-      for (round <- 1 to 3) {
-        val contrib = edges.join(deg, "src")
-          .join(mass.withColumnRenamed("node", "src"), "src")
-          .groupBy(col("dst").as("node"))
-          .agg(sum(expr("(mass * 85) div (100 * outdeg)")).as("contrib"))
-        mass = nodes.join(contrib, Seq("node"), "left")
-          .select(col("node"),
-            (lit(150000L) + coalesce(col("contrib"), lit(0L))).as("mass"))
-        // truncate the power-iteration lineage every few rounds: without a
-        // checkpoint the mass plan nests one join tree per round and the
-        // DAG-scheduler/optimizer cost grows unboundedly at real iteration
-        // counts (VERDICT r6) — the node-mass frame itself is tiny. LAZY
-        // (eager=false): the checkpoint materializes when the final action
-        // first computes it, so construction runs no extra job; the
-        // lineage is truncated identically once computed.
-        if (round % 2 == 0) mass = mass.localCheckpoint(false)
+      val li = Tables.lineitem(s, d).select("l_suppkey", "l_partkey").rdd
+      val members = Tables.supplier(s, d).select("s_suppkey").rdd.map(_.getLong(0))
+      Graph.supersteps(s, "pagerank_integer",
+          org.apache.spark.sql.types.StructType(Graph.longs("node", "mass"))) {
+        // the supplier count and the edge dedup run inside the job, on the
+        // RDD side: no construction-time action
+        val nSupp = Graph.reduceToOne(members.map(_ => 1L))(_ + _)
+        val edges = nSupp.cartesian(li)
+          .map { case (n, r) => (r.getLong(0), r.getLong(1) % n) }
+          .filter { case (src, dst) => src != dst }
+          .distinct()
+          .map { case (src, dst) => Edge(src, dst, ()) }
+        val g0 = GraphX(members.map(_ -> 1000000L), edges, Graph.NonMember)
+        var g = g0.outerJoinVertices(g0.outDegrees)((_, mass, deg) => (mass, deg.getOrElse(0)))
+        for (_ <- 1 to 3) {
+          val contrib = g.aggregateMessages[Long](
+            c => if (c.srcAttr._1 != Graph.NonMember)
+              c.sendToDst(c.srcAttr._1 * 85 / (100L * c.srcAttr._2)),
+            _ + _, TripletFields.Src)
+          g = g.outerJoinVertices(contrib) { case (_, (mass, deg), c) =>
+            (if (mass == Graph.NonMember) mass else 150000L + c.getOrElse(0L), deg)
+          }
+        }
+        g.vertices.filter(_._2._1 != Graph.NonMember)
+          .map { case (n, (mass, _)) => Row(n, mass) }
       }
-      // released when the next call retires it, never before `mass` runs
-      graft.SessionCache.retire(s, "pagerank_integer", Seq(edges))
-      mass
     }),
 
     // Year-over-year comparison: yearly exact revenue, previous year via

@@ -97,7 +97,7 @@ class ContractSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     val audited = Map(
-      "SessionCache.scala" -> 1,              // retire: the previous generation
+      "SessionCache.scala" -> 2,              // both retires: the previous generation
       "streaming/IncrementalMart.scala" -> 6, // foreachBatch-local frames
       "llm/TextDedup.scala" -> 1,             // clusters loop scratch after its count()
       "llm/LangModel.scala" -> 2)             // vocab after the collect/checkpoint loop
@@ -140,17 +140,17 @@ class ContractSpec extends SparkSpec {
     val excluded: String => Boolean =
       n => n.startsWith("stream_exec_") || n == "dedup_substring" ||
         n == "contamination_overlap"
-    // Superstep builders: localCheckpoint lineage truncation between
-    // rounds; under AQE, producing the checkpointed RDD materializes the
-    // superstep's stages at construction — the work is the query's own
-    // supersteps moved earlier, never redundant.
-    // (stress_centrality left the list after 8c69475 cut its construction
-    // jobs: the forward/backward frames are lazy once the shared graph
-    // layer is warm, which the un-instrumented first pass guarantees.)
-    val supersteps = Set(
-      "pagerank_integer", "bfs_hops", "sssp_weighted", "label_propagation",
-      "perceptron_steps", "bpe_merges_batch", "link_prediction",
-      "k_core", "closeness_centrality")
+    // Checkpointed DataFrame loops: perceptron_steps and bpe_merges_batch
+    // checkpoint eagerly between rounds, and link_prediction leafs its
+    // shared adjacency with a lazy localCheckpoint — under AQE producing
+    // the checkpoint RDD still runs its stages at construction. The work
+    // is the query's own stages moved earlier, never redundant.
+    // (The graph superstep loops — pagerank_integer, bfs_hops,
+    // sssp_weighted, label_propagation, k_core, closeness_centrality —
+    // left the list when they became GraphX rounds, which run inside the
+    // result's one job; stress_centrality left it earlier, after 8c69475
+    // made its frames lazy once the shared graph layer is warm.)
+    val supersteps = Set("perceptron_steps", "bpe_merges_batch", "link_prediction")
     // Ranks-based distributed ranking (globalRowNumber/globalNtile/
     // globalRunningSum/groupedRowNumber): the two-phase prefix sum reads
     // one long per partition at construction — the audited bounded
@@ -213,10 +213,11 @@ class ContractSpec extends SparkSpec {
 
   test("superstep builders leave no growing persisted-RDD footprint across invocations") {
     // VERDICT r13 #3: the SessionCache.retire discipline (each builder
-    // hands its loop frames over, and the PREVIOUS invocation's frames are
-    // unpersisted when it is re-invoked in the session) must hold
-    // mechanically for the whole superstep family, or repeated invocations
-    // accumulate MEMORY_AND_DISK blocks for the JVM lifetime. Checkpointed
+    // hands its loop frames — or, for the GraphX loops, the RDDs GraphX
+    // cached — over, and the PREVIOUS invocation's are unpersisted when it
+    // is re-invoked) must hold mechanically for the whole superstep
+    // family, or repeated invocations accumulate blocks for the JVM
+    // lifetime. Checkpointed
     // frames (localCheckpoint) are excluded: their blocks are their ONLY
     // storage (unpersisting one severs it), they are node-scale by design,
     // and the ContextCleaner reclaims them when the frame is GC'd.

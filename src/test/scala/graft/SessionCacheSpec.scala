@@ -87,4 +87,34 @@ class SessionCacheSpec extends SparkSpec {
     again.unpersist(false)
     other.unpersist(false)
   }
+
+  test("an RDD generation is released by the owner's next run from any session of the context") {
+    // GraphX loops cache their per-round RDDs outside the CacheManager; the
+    // generation is keyed by (context, owner), so a run from ANOTHER
+    // session of the same context releases the previous run's RDDs
+    val sc = spark.sparkContext
+    val child = spark.newSession()
+    val bfs = SparkEntry.queries("bfs_hops")
+    val kCore = SparkEntry.queries("k_core")
+    // build the shared graph layers in both sessions first, so each window
+    // below only sees the RDDs the GraphX loop itself persists
+    bfs(spark, sf); bfs(child, sf); kCore(spark, sf)
+    def persisted = sc.getPersistentRDDs.keySet.toSet
+    def generation(run: => Unit): Set[Int] = { val p0 = persisted; run; persisted -- p0 }
+    var first: org.apache.spark.sql.DataFrame = null
+    val firstGen = generation { first = bfs(spark, sf) }
+    val otherGen = generation(kCore(spark, sf))
+    assert(firstGen.nonEmpty && otherGen.nonEmpty)
+
+    var second: org.apache.spark.sql.DataFrame = null
+    val secondGen = generation { second = bfs(child, sf) }
+    assert((firstGen & persisted).isEmpty, "the first run's RDDs are released")
+    assert(secondGen.nonEmpty && secondGen.subsetOf(persisted))
+    assert(otherGen.subsetOf(persisted), "another owner's generation is untouched")
+    // the first run's lazy result recomputes from lineage after release
+    val rows = first.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(rows.nonEmpty && rows(1L) === 0)
+    assert(rows === second.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap)
+    SessionCache.evict(child)
+  }
 }
