@@ -68,7 +68,7 @@ object SparkEntry {
     * IncrementalMartSpec proves ANY slicing converges to the batch chain,
     * so the slicing is a pacing choice, not a semantics one. */
   private def incrementalStateRoot(s: SparkSession, d: String): String =
-    SessionCache.getOrElseUpdate(s, ("graft.incrRoot", d))(graft.streaming.StreamGate.scoped(s) {
+    SessionCache.getOrElseUpdate(s, ("graft.incrRoot", d)) {
       val root = graft.streaming.StreamGate.tempDir("iot_incr_")
       import org.apache.spark.sql.functions.{col, lit, to_date, to_timestamp}
       def applyAll(batch: DataFrame, batchId: Long): Unit = {
@@ -97,20 +97,14 @@ object SparkEntry {
         graft.streaming.IncrementalMart.applyBatchSliced(
           s, batch, batchId, root, weeks :+ remainder)
       }
-      val q = Tables.eventsStream(s, d).writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          applyAll(batch, batchId)
-          // duplicate delivery: every state write must be a fixpoint
-          if (batchId == 0) applyAll(batch, batchId)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamGate.recordState("stream_exec_iot_incremental", q)
+      graft.streaming.StreamGate.foreachBatch(s, "stream_exec_iot_incremental")(
+          Tables.eventsStream(s, d)) { (batch, batchId) =>
+        applyAll(batch, batchId)
+        // duplicate delivery: every state write must be a fixpoint
+        if (batchId == 0) applyAll(batch, batchId)
+      }
       root
-    })
+    }
 
   /** IoT model-chain queries (reference dbt DAG re-expressed). */
   private val iotQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -133,37 +127,31 @@ object SparkEntry {
     // oracle is the existing batch mart_readings SQL. Statelessness is
     // part of the contract: the gate records (0,0,0) in the state
     // manifest — all pipeline state lives in the raw table + checkpoint.
-    "stream_exec_iot_chain" -> ((s, d) => graft.streaming.StreamGate.scoped(s) {
+    "stream_exec_iot_chain" -> ((s, d) => {
       val root = graft.streaming.StreamGate.tempDir("iot_chain_")
       val raw = s"$root/raw"; val mart = s"$root/mart"
-      val q = Tables.eventsStream(s, d).writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // idempotent raw append: each micro-batch lands in a
-          // batchId-named subdirectory, skipped when it already exists —
-          // a re-delivered batch (driver recovery/retry) can no longer
-          // double-append into the raw layer and silently diverge the
-          // mart from the batch oracle (ADVICE r12)
-          def deliver(): Unit = {
-            val dst = new org.apache.hadoop.fs.Path(s"$raw/batch_id=$batchId")
-            val fs = dst.getFileSystem(s.sparkContext.hadoopConfiguration)
-            if (!fs.exists(dst)) batch.write.mode("append").parquet(dst.toString)
-            MartReadings.fromStaging(Staging.fromEvents(
-                s.read.option("basePath", raw).parquet(raw).drop("batch_id")))
-              .write.mode("overwrite").parquet(mart)
-          }
-          deliver()
-          // duplicate delivery of batch 0 (the jdbc_merge gate's trick):
-          // the skip-if-exists append must be a fixpoint, so the gate's
-          // oracle — the one-shot batch mart SQL — proves exactly-once
-          // semantics under redelivery, not just under the happy path
-          if (batchId == 0) deliver()
-          ()
+      graft.streaming.StreamGate.foreachBatch(s, "stream_exec_iot_chain")(
+          Tables.eventsStream(s, d)) { (batch, batchId) =>
+        // idempotent raw append: each micro-batch lands in a
+        // batchId-named subdirectory, skipped when it already exists —
+        // a re-delivered batch (driver recovery/retry) can no longer
+        // double-append into the raw layer and silently diverge the
+        // mart from the batch oracle (ADVICE r12)
+        def deliver(): Unit = {
+          val dst = new org.apache.hadoop.fs.Path(s"$raw/batch_id=$batchId")
+          val fs = dst.getFileSystem(s.sparkContext.hadoopConfiguration)
+          if (!fs.exists(dst)) batch.write.mode("append").parquet(dst.toString)
+          MartReadings.fromStaging(Staging.fromEvents(
+              s.read.option("basePath", raw).parquet(raw).drop("batch_id")))
+            .write.mode("overwrite").parquet(mart)
         }
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamGate.recordState("stream_exec_iot_chain", q)
+        deliver()
+        // duplicate delivery of batch 0 (the jdbc_merge gate's trick):
+        // the skip-if-exists append must be a fixpoint, so the gate's
+        // oracle — the one-shot batch mart SQL — proves exactly-once
+        // semantics under redelivery, not just under the happy path
+        if (batchId == 0) deliver()
+      }
       s.read.parquet(mart)
     }),
     // The INCREMENTAL flavor of the flagship chain (VERDICT r14 #7): same

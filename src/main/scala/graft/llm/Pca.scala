@@ -140,22 +140,13 @@ object Pca {
     // maintenance through the real engine, with the batch query's oracle.
     // The int64 buffer is what makes the incremental fold exact: merge
     // order across micro-batches cannot drift the result.
-    "stream_exec_gramian" -> ((s, d) => graft.streaming.StreamGate.scoped(s) {
-      val ga = udaf(graft.expr.VectorGramian, ExpressionEncoder[Array[Long]]())
-      val agg = Tables.embeddingsStream(s, d)
-        .select(quantized.as("eq"))
-        .agg(ga(col("eq")).as("g"))
-      val name = graft.streaming.StreamGate.uniqueName("graft_stream_gram_sink")
-      val ckpt = graft.streaming.StreamGate.tempDir("ckpt_gram_")
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamGate.recordState("stream_exec_gramian", q)
-      unpack(s.table(name))
-    }),
+    "stream_exec_gramian" -> ((s, d) =>
+      unpack(graft.streaming.StreamGate.memory(s, "stream_exec_gramian", "complete") {
+        val ga = udaf(graft.expr.VectorGramian, ExpressionEncoder[Array[Long]]())
+        Tables.embeddingsStream(s, d)
+          .select(quantized.as("eq"))
+          .agg(ga(col("eq")).as("g"))
+      })),
     "pca_power_component" -> ((s, d) => power(s, d)._1),
     "embed_pca_project" -> ((s, d) => {
       val vf = power(s, d)._2

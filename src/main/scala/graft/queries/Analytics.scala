@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.expr.Exact
 import graft.expr.Exact._
+import graft.streaming.StreamGate
 
 /** Statistical / temporal analytics beyond the reference's own operator set
   * (SURVEY §7.3 "general-capability" growth): exact bivariate statistics,
@@ -504,20 +505,10 @@ object Analytics {
     // not just the shared batch twin above. Complete-mode output of a
     // single AvailableNow pass == the batch result, so the oracle is the
     // identical full window set.
-    "stream_exec_window_counts" -> ((s, d) => graft.streaming.StreamGate.scoped(s) {
-      val src = Tables.eventsStream(s, d)
-      val agg = graft.streaming.StreamAggregates.windowedTypeCounts(src)
-      val name = graft.streaming.StreamGate.uniqueName("graft_stream_exec_sink")
-      val ckpt = graft.streaming.StreamGate.tempDir("ckpt_wc_")
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamGate.recordState("stream_exec_window_counts", q)
-      s.table(name)
-    }),
+    "stream_exec_window_counts" -> ((s, d) =>
+      StreamGate.memory(s, "stream_exec_window_counts", "complete") {
+        graft.streaming.StreamAggregates.windowedTypeCounts(Tables.eventsStream(s, d))
+      }),
 
     // Streaming DEDUPLICATION through the actual engine: the source is
     // read TWICE and unioned, so every event arrives as a true duplicate;
@@ -526,22 +517,13 @@ object Analytics {
     // verified by the downstream per-type counts equalling the batch
     // (single-copy) counts. Exercises T2/T3 plus the stateful-dedup
     // operator (the streaming half of W1) end-to-end.
-    "stream_exec_dedup" -> ((s, d) => graft.streaming.StreamGate.scoped(s) {
-      def src = Tables.eventsStream(s, d)
-      val deduped = src.union(src)
-        .dropDuplicates("event_id")
-        .groupBy("event_type").agg(count(lit(1)).as("n"))
-      val name = graft.streaming.StreamGate.uniqueName("graft_stream_dedup_sink")
-      val ckpt = graft.streaming.StreamGate.tempDir("ckpt_dd_")
-      val q = deduped.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamGate.recordState("stream_exec_dedup", q)
-      s.table(name)
-    }),
+    "stream_exec_dedup" -> ((s, d) =>
+      StreamGate.memory(s, "stream_exec_dedup", "complete") {
+        def src = Tables.eventsStream(s, d)
+        src.union(src)
+          .dropDuplicates("event_id")
+          .groupBy("event_type").agg(count(lit(1)).as("n"))
+      }),
 
     // dropDuplicatesWithinWatermark through the actual engine: unlike
     // stream_exec_dedup's dropDuplicates (whose seen-key state grows
@@ -551,47 +533,30 @@ object Analytics {
     // within the delay window. Same doubled source; with every duplicate
     // arriving inside the window the result equals the batch single-copy
     // counts, which is the oracle.
-    "stream_exec_dedup_wm" -> ((s, d) => graft.streaming.StreamGate.scoped(s) {
-      def src = Tables.eventsStream(s, d)
-      val deduped = src.union(src)
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("event_id")
-        .groupBy("event_type").agg(count(lit(1)).as("n"))
-      val name = graft.streaming.StreamGate.uniqueName("graft_stream_dedup_wm_sink")
-      val ckpt = graft.streaming.StreamGate.tempDir("ckpt_dw_")
-      val q = deduped.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamGate.recordState("stream_exec_dedup_wm", q)
-      s.table(name)
-    }),
+    "stream_exec_dedup_wm" -> ((s, d) =>
+      StreamGate.memory(s, "stream_exec_dedup_wm", "complete") {
+        def src = Tables.eventsStream(s, d)
+        src.union(src)
+          .withWatermark("ts", "1 hour")
+          .dropDuplicatesWithinWatermark("event_id")
+          .groupBy("event_type").agg(count(lit(1)).as("n"))
+      }),
 
     // mapGroupsWithState through the actual engine: per-user event counts
     // held in explicit GroupState, emitted in update mode each micro-batch;
     // the final state per key (max events snapshot) must equal the batch
     // group-by — the T4-style custom-state surface inside the gate rather
     // than only in ScalaTest.
-    "stream_exec_state" -> ((s, d) => graft.streaming.StreamGate.scoped(s) {
+    "stream_exec_state" -> ((s, d) => {
       import s.implicits._
-      val src = Tables.eventsStream(s, d)
-        .select(col("user_id"), col("value")).as[(Long, Double)]
-      val totals = graft.streaming.StreamAggregates.runningUserTotals(src)
-        .select(col("user_id"), col("events"))
-      val name = graft.streaming.StreamGate.uniqueName("graft_stream_state_sink")
-      val ckpt = graft.streaming.StreamGate.tempDir("ckpt_st_")
-      val q = totals.writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamGate.recordState("stream_exec_state", q)
       // update-mode sink holds one state snapshot per (key, micro-batch);
       // the final state is the max (counts grow monotonically)
-      s.table(name).groupBy("user_id").agg(max(col("events")).as("n_events"))
+      StreamGate.memory(s, "stream_exec_state", "update") {
+        val src = Tables.eventsStream(s, d)
+          .select(col("user_id"), col("value")).as[(Long, Double)]
+        graft.streaming.StreamAggregates.runningUserTotals(src)
+          .select(col("user_id"), col("events"))
+      }.groupBy("user_id").agg(max(col("events")).as("n_events"))
     }),
 
     // Spark 4 transformWithState through the ACTUAL engine (the successor
@@ -602,23 +567,15 @@ object Analytics {
     // monotonically) must equal the batch group-by. The value sum rides a
     // 1e6-quantized long so cross-batch merge order is exact, and the
     // oracle computes the identical quantized sum.
-    "stream_exec_tws" -> ((s, d) => graft.streaming.StreamGate.scopedTws(s) {
+    "stream_exec_tws" -> ((s, d) => {
       import s.implicits._
-      val src = Tables.eventsStream(s, d)
-        .select(col("user_id"),
-          round(col("value") * lit(1e6), 0).cast("long").as("q"))
-        .as[(Long, Long)]
-      val totals = graft.streaming.StreamAggregates.runningUserTotalsTws(src)
-      val name = graft.streaming.StreamGate.uniqueName("graft_stream_tws_sink")
-      val ckpt = graft.streaming.StreamGate.tempDir("ckpt_tws_")
-      val q = totals.toDF().writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamGate.recordState("stream_exec_tws", q)
-      s.table(name).groupBy("user_id")
+      StreamGate.memory(s, "stream_exec_tws", "update") {
+        val src = Tables.eventsStream(s, d)
+          .select(col("user_id"),
+            round(col("value") * lit(1e6), 0).cast("long").as("q"))
+          .as[(Long, Long)]
+        graft.streaming.StreamAggregates.runningUserTotalsTws(src).toDF()
+      }.groupBy("user_id")
         .agg(max(col("events")).as("n_events"), max(col("q_sum")).as("q_sum"))
         .select(col("user_id"), col("n_events"),
           (col("q_sum").cast("double") / lit(1e6)).as("value_sum"))
@@ -632,37 +589,32 @@ object Analytics {
     // query. State carries QUANTIZED integer sums, so merging partials
     // across any batch order is exact and equals the one-shot batch
     // aggregate the oracle computes.
-    "stream_exec_upsert" -> ((s, d) => graft.streaming.StreamGate.scoped(s) {
-      val tmp = graft.streaming.StreamGate.tempDir("fb_")
-      Tables.events(s, d)
-        .select(col("event_id"), col("event_type"),
-          round(col("value") * lit(1e6), 0).cast("long").as("q"))
-        .repartition(4).write.mode("overwrite").parquet(s"$tmp/src")
-      val src = s.readStream
-        .schema("event_id BIGINT, event_type STRING, q BIGINT")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$tmp/src")
+    "stream_exec_upsert" -> ((s, d) => {
+      val tmp = StreamGate.tempDir("fb_")
       @volatile var stateDir: Option[String] = None
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val partial = batch.groupBy("event_type")
-            .agg(count(lit(1)).as("n_events"), sum(col("q")).as("sum_q"))
-          val merged = stateDir match {
-            case None => partial
-            case Some(prev) =>
-              s.read.parquet(prev).unionByName(partial)
-                .groupBy("event_type")
-                .agg(sum(col("n_events")).as("n_events"), sum(col("sum_q")).as("sum_q"))
-          }
-          val next = s"$tmp/state_$id"
-          merged.write.mode("overwrite").parquet(next)
-          stateDir = Some(next)
+      StreamGate.foreachBatch(s, "stream_exec_upsert") {
+        Tables.events(s, d)
+          .select(col("event_id"), col("event_type"),
+            round(col("value") * lit(1e6), 0).cast("long").as("q"))
+          .repartition(4).write.mode("overwrite").parquet(s"$tmp/src")
+        s.readStream
+          .schema("event_id BIGINT, event_type STRING, q BIGINT")
+          .option("maxFilesPerTrigger", 1)
+          .parquet(s"$tmp/src")
+      } { (batch, id) =>
+        val partial = batch.groupBy("event_type")
+          .agg(count(lit(1)).as("n_events"), sum(col("q")).as("sum_q"))
+        val merged = stateDir match {
+          case None => partial
+          case Some(prev) =>
+            s.read.parquet(prev).unionByName(partial)
+              .groupBy("event_type")
+              .agg(sum(col("n_events")).as("n_events"), sum(col("sum_q")).as("sum_q"))
         }
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamGate.recordState("stream_exec_upsert", q)
+        val next = s"$tmp/state_$id"
+        merged.write.mode("overwrite").parquet(next)
+        stateDir = Some(next)
+      }
       s.read.parquet(stateDir.get)
         .select(col("event_type"), col("n_events"),
           (col("sum_q").cast("double") / lit(1e6)).as("value_sum"))
@@ -678,33 +630,28 @@ object Analytics {
     // strided (event_id % 20) to keep the single-node embedded database
     // out of the benchmark's critical path; the oracle aggregates the
     // same stride directly.
-    "stream_exec_jdbc_merge" -> ((s, d) => graft.streaming.StreamGate.scoped(s) {
-      val tmp = graft.streaming.StreamGate.tempDir("jm_")
+    "stream_exec_jdbc_merge" -> ((s, d) => {
+      val tmp = StreamGate.tempDir("jm_")
       val url = s"jdbc:derby:$tmp/db;create=true"
       val props = new java.util.Properties
       props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-      Tables.events(s, d)
-        .filter(col("event_id") % 20 === 0)
-        .select(col("event_id"), col("event_type"),
-          round(col("value") * lit(1e6), 0).cast("long").as("q"))
-        .repartition(4).write.mode("overwrite").parquet(s"$tmp/src")
-      val src = s.readStream
-        .schema("event_id BIGINT, event_type STRING, q BIGINT")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$tmp/src")
-      val q = src.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
+      StreamGate.foreachBatch(s, "stream_exec_jdbc_merge") {
+        Tables.events(s, d)
+          .filter(col("event_id") % 20 === 0)
+          .select(col("event_id"), col("event_type"),
+            round(col("value") * lit(1e6), 0).cast("long").as("q"))
+          .repartition(4).write.mode("overwrite").parquet(s"$tmp/src")
+        s.readStream
+          .schema("event_id BIGINT, event_type STRING, q BIGINT")
+          .option("maxFilesPerTrigger", 1)
+          .parquet(s"$tmp/src")
+      } { (batch, id) =>
+        graft.sources.Sinks.jdbcMerge(batch, url, "landing",
+          keys = Seq("event_id"), properties = props)
+        if (id == 0) // duplicate delivery: the merge must be a fixpoint
           graft.sources.Sinks.jdbcMerge(batch, url, "landing",
             keys = Seq("event_id"), properties = props)
-          if (id == 0) // duplicate delivery: the merge must be a fixpoint
-            graft.sources.Sinks.jdbcMerge(batch, url, "landing",
-              keys = Seq("event_id"), properties = props)
-        }
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamGate.recordState("stream_exec_jdbc_merge", q)
+      }
       graft.sources.Sinks.readJdbc(s, url, "landing", props)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"), sum(col("q")).as("sum_q"))
@@ -778,7 +725,7 @@ object Analytics {
     // sources as a checked query, not only a SinksSpec round-trip) —
     // counts per type must triple.
     "multi_format_union" -> ((s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_fmt_").toString
+      val tmp = StreamGate.tempDir("graft_fmt_")
       val base = Tables.events(s, d).select("event_id", "user_id", "event_type")
       // r16 output sizing (guide §6): the spread events frame would write
       // one sub-100kB file per core and the read-back then pays per-file
@@ -840,23 +787,15 @@ object Analytics {
     // cut, identical rule to the batch Temporal.sessionize whose SQL is
     // the oracle). Event times travel as epoch-micros longs to preserve
     // sub-millisecond parity.
-    "stream_exec_session" -> ((s, d) => graft.streaming.StreamGate.scoped(s) {
+    "stream_exec_session" -> ((s, d) => {
       import s.implicits._
-      val src = Tables.eventsStream(s, d)
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("event_id"), col("event_type"))
-        .as[(Long, Long, Long, String)]
-      val sessions = graft.streaming.StreamAggregates.sessionized(src)
-      val name = graft.streaming.StreamGate.uniqueName("graft_stream_session_sink")
-      val ckpt = graft.streaming.StreamGate.tempDir("ckpt_ss_")
-      val q = sessions.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamGate.recordState("stream_exec_session", q)
-      s.table(name).select(
+      StreamGate.memory(s, "stream_exec_session", "append") {
+        val src = Tables.eventsStream(s, d)
+          .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+            col("event_id"), col("event_type"))
+          .as[(Long, Long, Long, String)]
+        graft.streaming.StreamAggregates.sessionized(src).toDF()
+      }.select(
         col("user_id"), col("session_idx"), col("n_events"),
         timestamp_micros(col("start_us")).as("session_start"),
         timestamp_micros(col("end_us")).as("session_end"),
@@ -885,7 +824,7 @@ object Analytics {
     // dedup is needed and the append-mode output is unchanged. The
     // watermark columns are untouched; the explode only duplicates click
     // state 2×, while probe work drops to output scale at any key skew.
-    "stream_exec_join" -> ((s, d) => graft.streaming.StreamGate.scoped(s) {
+    "stream_exec_join" -> ((s, d) => StreamGate.memory(s, "stream_exec_join", "append") {
       def src = Tables.eventsStream(s, d)
       // r17: the composite key is now ADAPTIVE (StreamGate.hotPairProbe —
       // the estDupRate pattern): the bucket explode bounds a hot key's
@@ -895,7 +834,7 @@ object Analytics {
       // time-range predicate (p_bkt ∈ {cb, cb+1} whenever purchase_ts ∈
       // [click_ts, click_ts + 1h]) — so the pre-pass only ever trades
       // time (StreamJoinKeySpec pins the equivalence on skewed data).
-      val hot = graft.streaming.StreamGate.hotPairProbe(s, d)
+      val hot = StreamGate.hotPairProbe(s, d)
       val hourUs = 3600L * 1000000L
       def hbkt(c: org.apache.spark.sql.Column) =
         floor(unix_micros(c).cast("double") / lit(hourUs.toDouble)).cast("long")
@@ -923,19 +862,9 @@ object Analytics {
         if (hot) col("user_id") === col("p_user_id") &&
           col("bkt") === col("p_bkt") && range
         else col("user_id") === col("p_user_id") && range
-      val joined = clicks.join(purchases, cond)
+      clicks.join(purchases, cond)
         .select(col("click_id"), col("purchase_id"), col("user_id"),
           col("click_ts"), col("purchase_ts"), col("purchase_value"))
-      val name = graft.streaming.StreamGate.uniqueName("graft_stream_join_sink")
-      val ckpt = graft.streaming.StreamGate.tempDir("ckpt_sj_")
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamGate.recordState("stream_exec_join", q)
-      s.table(name)
     }),
 
     // Bootstrap resampling, distributed: 10 pseudo-Poisson resamples in
@@ -1111,7 +1040,7 @@ object Analytics {
       val needWrite = !s.catalog.tableExists("graft_bkt_o") ||
         !bucketedFor.contains(d)
       if (needWrite) {
-        val dir = java.nio.file.Files.createTempDirectory("graft_bkt_").toString
+        val dir = StreamGate.tempDir("graft_bkt_")
         Tables.orders(s, d).select("o_custkey", "o_totalprice", "o_orderstatus")
           .write.mode("overwrite").option("path", s"$dir/o")
           .bucketBy(8, "o_custkey").sortBy("o_custkey").saveAsTable("graft_bkt_o")
@@ -1321,7 +1250,7 @@ object Analytics {
     // listing), not a row filter (PlanShapeSpec pins it); results equal the
     // unpartitioned filtered aggregate.
     "partition_pruned_counts" -> ((s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_part_ev_").toString
+      val dir = StreamGate.tempDir("graft_part_ev_")
       // r16 output sizing (guide §6): cluster by the partition column
       // before the partitioned write — without it every input task writes
       // one file into EVERY partition dir (tasks × |event_type| tiny

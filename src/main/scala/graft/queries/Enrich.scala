@@ -771,7 +771,7 @@ FROM events"""
     * restriction, clicks near stream end would sit in state forever and
     * the result would depend on micro-batch slicing. */
   def streamLeftJoin(s: SparkSession, d: String): DataFrame =
-    graft.streaming.StreamGate.scoped(s) {
+    graft.streaming.StreamGate.memory(s, "stream_exec_left_join", "append") {
       // micros everywhere (Spark's timestamp→long cast is SECONDS and
       // DuckDB's epoch() is fractional — micros are the shared exact unit).
       // The terminal watermark is min over BOTH inputs of (own max − 1 h),
@@ -828,20 +828,10 @@ FROM events"""
         if (hot) col("user_id") === col("p_user_id") &&
           col("bkt") === col("p_bkt") && range
         else col("user_id") === col("p_user_id") && range
-      val joined = clicks.join(purchases, cond, "left_outer")
+      clicks.join(purchases, cond, "left_outer")
         .select(col("click_id"), col("user_id"), col("click_ts"),
           col("purchase_id"), col("purchase_ts"), col("purchase_value"))
-      val name = graft.streaming.StreamGate.uniqueName("graft_stream_left_join_sink")
-      val ckpt = graft.streaming.StreamGate.tempDir("ckpt_slj_")
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamGate.recordState("stream_exec_left_join", q)
-      s.table(name).filter(col("user_id") >= 0)
-    }
+    }.filter(col("user_id") >= 0)
 
   val streamLeftJoinSql: String = """
 WITH mx AS (

@@ -87,7 +87,8 @@ object StreamAggregates {
     * running (count, quantized value sum) held in two typed ValueStates,
     * snapshot emitted per key per micro-batch in update mode. Requires the
     * RocksDB state-store provider (changelog-capable stores are the
-    * operator's contract — see [[StreamGate.scopedTws]]). The sum travels
+    * operator's contract; the gate runner in [[StreamGate]] sets it for
+    * any plan holding this operator). The sum travels
     * as a QUANTIZED long so merging across any micro-batch order is exact.
     */
   class UserTotalsProcessor

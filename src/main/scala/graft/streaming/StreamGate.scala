@@ -2,9 +2,12 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-/** Shared run-time scaffolding for the `stream_exec_*` gate queries.
+/** Shared run-time scaffolding for the `stream_exec_*` gate queries:
+  * every gate reaches the engine through [[memory]] or [[foreachBatch]].
   *
   * Two fixed costs dominated those gates at sf0.1 (VERDICT r6: +27 s with no
   * code change):
@@ -15,17 +18,18 @@ import org.apache.spark.sql.SparkSession
   *     instantiates one HDFSBackedStateStore per shuffle partition per
   *     micro-batch. At the session default (32, sized for batch shuffles on
   *     local[32]) that is pure fixed overhead: the gates' state is a few
-  *     thousand keys. [[scoped]] drops `spark.sql.shuffle.partitions` to
+  *     thousand keys. The runner drops `spark.sql.shuffle.partitions` to
   *     [[StreamShufflePartitions]] for the duration of one gate query and
   *     restores it after — on a real cluster this knob is sized to state
   *     volume and store memory, not core count, and is safe to scope
   *     per-query because each gate starts from a fresh checkpoint (the
   *     partition count is pinned into the checkpoint at first batch).
-  *  2. **Checkpoint litter.** Each gate used to `createTempDirectory` under
-  *     /tmp and never delete it, so offset logs + state files accumulated
-  *     across bench/verify runs. All gate temp dirs now live under one
-  *     per-JVM root that is wiped on first use (clearing any previous run's
-  *     leftovers) and again on JVM exit.
+  *  2. **Checkpoint litter.** Each gate used to create a temp directory
+  *     under /tmp and never delete it, so offset logs + state files
+  *     accumulated across bench/verify runs. All temp dirs of the library
+  *     (gate checkpoints, builders' scratch table copies) now live under
+  *     one per-JVM root that is wiped on first use (clearing any previous
+  *     run's leftovers) and again on JVM exit.
   */
 object StreamGate {
 
@@ -53,7 +57,15 @@ object StreamGate {
     * near 7e2 pairs, the Zipf tier's hot key carries ~1e9), so the
     * threshold is not finely tuned. Memoized per (session, dir) like
     * contamination_overlap's collapse verdict; the pre-pass is one
-    * map-side-aggregable two-stage job over a 2-column projection. */
+    * map-side-aggregable two-stage job over a 2-column projection.
+    *
+    * Staleness window: the verdict is computed once per (session, dir) and
+    * never re-checked, so if files are added under `dir` while the session
+    * lives, later gates keep the key shape the first probe chose, even if
+    * the new data would flip it. The cost is time only: both key shapes
+    * emit identical rows, so a stale verdict can slow a gate (a newly hot
+    * key on the bare user key, or the explode on data that went benign)
+    * but never change its result. A fresh session re-probes. */
   val HotPairThreshold: Long = 1L << 20
   def hotPairProbe(s: SparkSession, d: String): Boolean =
     graft.SessionCache.getOrElseUpdate(s, ("graft.streamHotPair", d)) {
@@ -109,10 +121,62 @@ object StreamGate {
     }
 
   /** Fresh temp dir (checkpoint location or scratch space) under the shared
-    * cleaned root.
+    * cleaned root. The only place the library creates a temp directory.
     */
   def tempDir(tag: String): String =
     Files.createTempDirectory(root, tag).toString
+
+  /** Run one gate into a memory sink and return the sink table. `mode` is
+    * the sink's output mode ("append", "update" or "complete").
+    */
+  def memory(s: SparkSession, tag: String, mode: String)(build: => DataFrame): DataFrame = {
+    val name = uniqueName(tag)
+    run(s, tag, build)(_.format("memory").queryName(name).outputMode(mode))
+    s.table(name)
+  }
+
+  /** Run one gate with `fn` as its micro-batch sink. */
+  def foreachBatch(s: SparkSession, tag: String)(build: => DataFrame)(
+      fn: (DataFrame, Long) => Unit): Unit =
+    run(s, tag, build)(_.foreachBatch(fn))
+
+  /** The one gate runner. `build` is evaluated with the shuffle-partition
+    * count scoped down to [[StreamShufflePartitions]], so a batch pre-pass
+    * inside it ([[hotPairProbe]], a cutoff read) runs under the stream's
+    * conf. The RocksDB state-store provider is set only when the plan holds
+    * a `transformWithState` node: that operator is built on changelog-
+    * checkpointing stores and the default HDFS-backed provider rejects it
+    * at start, while every other gate keeps exercising the default
+    * provider. Both confs read as before once the gate ends. The run is one
+    * `AvailableNow` pass over a fresh checkpoint dir; its state metrics are
+    * recorded under `tag`.
+    */
+  private def run(s: SparkSession, tag: String, build: => DataFrame)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    val shuffleKey = "spark.sql.shuffle.partitions"
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val prevShuffle = s.conf.get(shuffleKey)
+    val prevProvider = s.conf.getOption(providerKey)
+    s.conf.set(shuffleKey, StreamShufflePartitions.toString)
+    try {
+      val df = build
+      if (df.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState]))
+        s.conf.set(providerKey,
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val q = sink(df.writeStream)
+        .option("checkpointLocation", tempDir(s"${tag}_ckpt_"))
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      recordState(tag, q)
+    } finally {
+      s.conf.set(shuffleKey, prevShuffle)
+      prevProvider match {
+        case Some(v) => s.conf.set(providerKey, v)
+        case None    => s.conf.unset(providerKey)
+      }
+    }
+  }
 
   private val nameCounter = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -120,10 +184,8 @@ object StreamGate {
     * session-global temp views AND active-query identifiers: a second
     * concurrent run of the same gate with a static name either fails to
     * start (duplicate active query name) or clobbers the first run's sink
-    * table between its awaitTermination and the table read (ADVICE r11).
-    * The tag prefix stays stable so [[recordState]] can aggregate runs of
-    * the same gate under one key. */
-  def uniqueName(tag: String): String = s"${tag}_u${nameCounter.incrementAndGet()}"
+    * table between the end of its run and the table read (ADVICE r11). */
+  private def uniqueName(tag: String): String = s"${tag}_u${nameCounter.incrementAndGet()}"
 
   /** Final state-store footprint per gate tag — (state rows, state bytes,
     * rows removed by eviction), maxed over the run's progress events so the
@@ -134,11 +196,11 @@ object StreamGate {
     .empty[String, (Long, Long, Long)]
 
   /** Record the state-operator metrics of a finished gate query under its
-    * stable tag (the [[uniqueName]] prefix). Reads the query's retained
-    * progress array — synchronous, no listener race with AvailableNow
-    * termination. Gates with no stateful operator record (0, 0, 0), which
-    * is itself the statelessness proof. */
-  def recordState(tag: String, q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    * tag, aggregating repeated runs of the same gate. Reads the query's
+    * retained progress array — synchronous, no listener race with
+    * AvailableNow termination. Gates with no stateful operator record
+    * (0, 0, 0), which is itself the statelessness proof. */
+  private def recordState(tag: String, q: StreamingQuery): Unit = {
     var rows = 0L; var bytes = 0L; var removed = 0L
     q.recentProgress.foreach { p =>
       var r = 0L; var b = 0L; var rm = 0L
@@ -155,37 +217,7 @@ object StreamGate {
     ()
   }
 
-  /** Sorted snapshot of [[recordState]]'s per-gate high-water marks. */
+  /** Sorted snapshot of the per-gate state high-water marks. */
   def stateSnapshot: Seq[(String, (Long, Long, Long))] =
     stateMetricsMap.toSeq.sortBy(_._1)
-
-  /** Run one streaming gate (start → awaitTermination → sink read) with the
-    * shuffle-partition count scoped down to [[StreamShufflePartitions]];
-    * the previous session value is restored afterwards, so surrounding
-    * batch queries keep their tuning.
-    */
-  def scoped[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, StreamShufflePartitions.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
-  /** [[scoped]] plus the RocksDB state-store provider, which
-    * `transformWithState` REQUIRES (the arbitrary-state API is built on
-    * changelog-checkpointing stores; the default HDFS-backed provider
-    * rejects it at query start). Restored afterwards so the
-    * mapGroupsWithState/windowed gates keep exercising the default
-    * provider too — both providers stay covered.
-    */
-  def scopedTws[T](s: SparkSession)(body: => T): T = scoped(s) {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
 }

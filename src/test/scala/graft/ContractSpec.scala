@@ -112,6 +112,32 @@ class ContractSpec extends SparkSpec {
       s"unpersist() inventory drifted — route frame lifetimes through SessionCache: $found")
   }
 
+  test("streaming queries run and temp dirs are made only in the gate runner") {
+    // StreamGate owns the gate lifecycle (scoped conf, plan-derived state
+    // provider, checkpoint dir, AvailableNow run, state record) and the
+    // temp root that dies with the JVM. A hand-started query elsewhere
+    // skips all of that; a stray temp directory outlives its session.
+    // IngestStream.run is the one library API that returns a started query.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val tokens = Seq("writeStream", ".start()", "awaitTermination(", "createTempDirectory(")
+    val audited = Map(
+      "streaming/StreamGate.scala" -> Map(
+        "writeStream" -> 1, ".start()" -> 1, "awaitTermination(" -> 1,
+        "createTempDirectory(" -> 1),
+      "streaming/IngestStream.scala" -> Map("writeStream" -> 1, ".start()" -> 1))
+    val found = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = java.nio.file.Files.readString(p)
+        val counts = tokens.map(t => t -> java.util.regex.Pattern.quote(t).r
+          .findAllIn(src).size).filter(_._2 > 0).toMap
+        if (counts.nonEmpty) Some(p.toString.replaceFirst(".*graft/", "") -> counts) else None
+      }.toMap
+    assert(found === audited,
+      s"streaming run / temp dir inventory drifted — route gates through StreamGate: $found")
+  }
+
   test("query construction runs no Spark jobs outside the audited mechanisms") {
     // VERDICT r12 #4: builders must be LAZY — a stray count()/head() at
     // construction is one driver job per call and, at 100 TB, an

@@ -49,8 +49,8 @@ class DedupSpec extends SparkSpec {
     // sink names are per-invocation unique since round 12 (ADVICE r11);
     // the run just executed registered the highest-numbered suffix
     val sink = spark.catalog.listTables().collect().map(_.name)
-      .filter(_.startsWith("graft_stream_neardup_sink_u"))
-      .maxBy(_.stripPrefix("graft_stream_neardup_sink_u").toLong)
+      .filter(_.startsWith("stream_exec_neardup_u"))
+      .maxBy(_.stripPrefix("stream_exec_neardup_u").toLong)
     val emitted = spark.table(sink).count()
     assert(emitted <= 96L,
       s"sink saw $emitted candidate rows — state is no longer content-keyed")
@@ -71,7 +71,6 @@ class DedupSpec extends SparkSpec {
     // content near-duplicate to batch 1's docs — the gate must emit both
     // in-horizon signature pairs, never a cross-horizon one, and must
     // physically remove expired state rows (numRowsRemoved > 0).
-    import org.apache.spark.sql.streaming.Trigger
     val s0 = spark; import s0.implicits._
     // in-horizon pairs are built by APPENDING a token (J = 10/11 — band
     // miss odds ~1e-16; a mid-text word swap gives J ≈ 0.54, where 32×4
@@ -94,24 +93,16 @@ class DedupSpec extends SparkSpec {
     addFile("f1.parquet", Seq((0L, tA), (10L, tB)))
     addFile("f2.parquet", Seq((6000L, tFar)))
     addFile("f3.parquet", Seq((6010L, tC), (6020L, tE)))
-    val out = graft.streaming.StreamGate.scoped(spark) {
+    val tag = "dedup_spec_ndttl"
+    val out = graft.streaming.StreamGate.memory(spark, tag, "append") {
       val src = spark.readStream.schema("doc_id BIGINT, text STRING")
         .option("maxFilesPerTrigger", 1).parquet(dir.toString)
-      val name = graft.streaming.StreamGate.uniqueName("graft_ndttl_test_sink")
-      val q = TextDedup.streamNearDupTtlCandidates(src)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", graft.streaming.StreamGate.tempDir("ckpt_ndttl_t_"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val removed = q.recentProgress
-        .map(_.stateOperators.map(_.numRowsRemoved).sum).sum
-      assert(removed > 0,
-        "expired signatures were never evicted from the state store")
-      spark.table(name).distinct().collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-    }
+      TextDedup.streamNearDupTtlCandidates(src).toDF()
+    }.distinct().collect().map(r => (r.getString(0), r.getString(1))).toSet
+    // rows removed by eviction, as Bench publishes it
+    val removed = graft.streaming.StreamGate.stateSnapshot.toMap.apply(tag)._3
+    assert(removed > 0,
+      "expired signatures were never evicted from the state store")
     def sigOf(text: String): String =
       TextDedup.gramsOf(Seq((0L, text)).toDF("doc_id", "text"))
         .withColumn("fp", sha2(array_join(sort_array(col("grams")), "|"), 256))

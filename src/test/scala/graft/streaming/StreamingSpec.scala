@@ -79,37 +79,38 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("transformWithState accumulates typed ValueState across micro-batches") {
-    import org.apache.spark.sql.streaming.Trigger
     val spark0 = spark
     import spark0.implicits._
-    graft.streaming.StreamGate.scopedTws(spark) {
-      val dir = Files.createTempDirectory("graft-tws")
-      // quantized longs in the CSV: the operator's contract is integer state
-      write(dir, "s1.csv", "user_id,q\n1,10000000\n1,5000000\n2,1000000")
-      write(dir, "s2.csv", "user_id,q\n1,2500000\n3,7000000")
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("q", org.apache.spark.sql.types.LongType)))
+    val dir = Files.createTempDirectory("graft-tws")
+    // quantized longs in the CSV: the operator's contract is integer state
+    write(dir, "s1.csv", "user_id,q\n1,10000000\n1,5000000\n2,1000000")
+    write(dir, "s2.csv", "user_id,q\n1,2500000\n3,7000000")
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("q", org.apache.spark.sql.types.LongType)))
+    val out = Files.createTempDirectory("graft-tws-out").toString + "/totals"
+    val confKeys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass")
+    val confBefore = confKeys.map(spark.conf.getOption)
+    // no provider is named here: the default HDFS-backed provider rejects
+    // transformWithState at start, so this run passing proves the runner
+    // derives the RocksDB provider from the plan
+    StreamGate.foreachBatch(spark, "streaming_spec_tws") {
       val stream = spark.readStream.option("header", "true").schema(schema)
         .option("maxFilesPerTrigger", 1) // force multiple micro-batches
         .csv(dir.toString).as[(Long, Long)]
-      val out = Files.createTempDirectory("graft-tws-out").toString + "/totals"
-      StreamAggregates.runningUserTotalsTws(stream).toDF().writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", Files.createTempDirectory("graft-tws-ckpt").toString)
-        .outputMode("update")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.write.mode("append").parquet(out); ()
-        }.start().awaitTermination()
-      val finalTotals = spark.read.parquet(out)
-        .groupBy("user_id")
-        .agg(org.apache.spark.sql.functions.max("events").as("events"),
-             org.apache.spark.sql.functions.max("q_sum").as("q_sum"))
-        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      assert(finalTotals(1L) === ((3L, 17500000L)))
-      assert(finalTotals(2L) === ((1L, 1000000L)))
-      assert(finalTotals(3L) === ((1L, 7000000L)))
-    }
+      StreamAggregates.runningUserTotalsTws(stream).toDF()
+    } { (b, _) => b.write.mode("append").parquet(out) }
+    assert(confKeys.map(spark.conf.getOption) === confBefore,
+      "the gate runner must restore the confs it scoped")
+    val finalTotals = spark.read.parquet(out)
+      .groupBy("user_id")
+      .agg(org.apache.spark.sql.functions.max("events").as("events"),
+           org.apache.spark.sql.functions.max("q_sum").as("q_sum"))
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    assert(finalTotals(1L) === ((3L, 17500000L)))
+    assert(finalTotals(2L) === ((1L, 1000000L)))
+    assert(finalTotals(3L) === ((1L, 7000000L)))
   }
 
   test("stream-stream interval join with watermarks matches the batch join") {
