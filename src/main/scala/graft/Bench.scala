@@ -211,12 +211,16 @@ object Bench {
       val fullLayers = layers.map { case (k, (b, n, r)) =>
         s"\"$k\":{\"build_s\":${r3(b)},\"builds\":$n,\"reuses\":$r}"
       }.mkString("{", ",", "}")
-      // Per-gate streaming state-store high-water marks (VERDICT r11 #7):
-      // {gate: [state rows, state bytes, rows evicted]} — the measured form
-      // of every "state is bounded" claim. Zeros prove a gate stateless.
-      val stateJson = graft.streaming.StreamGate.stateSnapshot
-        .map { case (k, (r, b, rm)) => s"\"$k\":[$r,$b,$rm]" }
-        .mkString("{", ",", "}")
+      // Per-gate streaming record (StreamGate.GateStats): the state-store
+      // high-water marks — the measured form of every "state is bounded"
+      // claim, zeros prove a gate stateless — and, summed over the gate's
+      // runs, its batches, wall time, progress phases and state commit time.
+      val stateJson = graft.streaming.StreamGate.gateStats.map { case (k, g) =>
+        val phases = g.phasesMs.toSeq.sorted.map { case (p, ms) => s"\"$p\":$ms" }.mkString("{", ",", "}")
+        s"\"$k\":{\"rows\":${g.rows},\"bytes\":${g.bytes},\"rows_evicted\":${g.rowsEvicted}," +
+          s"\"runs\":${g.runs},\"batches\":${g.batches},\"wall_ms\":${g.wallMs}," +
+          s"\"commit_ms\":${g.commitMs},\"phases_ms\":$phases}"
+      }.mkString("{", ",", "}")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"target/bench_full$suffix.json"),
         s"""{"total":$total,"n":${results.size},"first_run_total":$firstRunTotal,"layers_total":${r3(layersTotal)},"layers":$fullLayers,"state":$stateJson,"loadavg_start":"$loadStart","loadavg_end":"${loadavg()}","quiesce_wait":${r3(quiesceWait)},"prev_parse":$prevParse,"rechecked":$recheckJson,"regressions":$fullRegs,"failed":$failedJson,"profile":$profileJson,"queries":$fullQs}""" + "\n")

@@ -222,11 +222,11 @@ object Analytics {
       val clicks = ev.filter(col("event_type") === "click")
         .groupBy("user_id").agg(min(col("ts")).as("first_click"))
       val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"))
+        .select(col("user_id").as("p_user_id"), col("ts").as("p_ts"))
       clicks.join(purchases,
-          clicks("user_id") === purchases("user_id") && col("p_ts") >= col("first_click"),
+          col("user_id") === col("p_user_id") && col("p_ts") >= col("first_click"),
           "left")
-        .groupBy(clicks("user_id").as("user_id"), col("first_click"))
+        .groupBy(col("user_id"), col("first_click"))
         .agg(min(col("p_ts")).as("first_purchase"))
         .withColumn("converted", col("first_purchase").isNotNull)
         .withColumn("minutes_to_convert",

@@ -138,6 +138,23 @@ class ContractSpec extends SparkSpec {
       s"streaming run / temp dir inventory drifted — route gates through StreamGate: $found")
   }
 
+  test("the checkpoint file manager is chosen only by the gate runner") {
+    // LocalCheckpointFiles accepts local paths only, and the conf that
+    // selects it is scoped to one gate run; set anywhere else it would
+    // leak into user queries with their own (possibly remote) checkpoints.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val found = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter { p =>
+        val src = java.nio.file.Files.readString(p)
+        src.contains("checkpointFileManagerClass") || src.contains("LocalCheckpointFiles")
+      }
+      .map(_.toString.replaceFirst(".*graft/", "")).toSet
+    assert(found === Set("streaming/StreamGate.scala", "streaming/LocalCheckpointFiles.scala"),
+      s"checkpoint file manager referenced outside the gate runner: $found")
+  }
+
   test("query construction runs no Spark jobs outside the audited mechanisms") {
     // VERDICT r12 #4: builders must be LAZY — a stray count()/head() at
     // construction is one driver job per call and, at 100 TB, an

@@ -90,7 +90,8 @@ class StreamingSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("q", org.apache.spark.sql.types.LongType)))
     val out = Files.createTempDirectory("graft-tws-out").toString + "/totals"
     val confKeys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.streaming.stateStore.providerClass")
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.checkpointFileManagerClass")
     val confBefore = confKeys.map(spark.conf.getOption)
     // no provider is named here: the default HDFS-backed provider rejects
     // transformWithState at start, so this run passing proves the runner
@@ -103,6 +104,10 @@ class StreamingSpec extends SparkSpec {
     } { (b, _) => b.write.mode("append").parquet(out) }
     assert(confKeys.map(spark.conf.getOption) === confBefore,
       "the gate runner must restore the confs it scoped")
+    val g = StreamGate.gateStats.toMap.apply("streaming_spec_tws")
+    assert(g.runs === 1 && g.batches >= 2, s"one run of two or more batches: $g")
+    assert(Seq("triggerExecution", "addBatch", "queryPlanning", "walCommit").forall(g.phasesMs.contains),
+      s"progress phases missing: ${g.phasesMs}")
     val finalTotals = spark.read.parquet(out)
       .groupBy("user_id")
       .agg(org.apache.spark.sql.functions.max("events").as("events"),
