@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Content-skewed corpus tier (VERDICT r15 #2): rewrites the `documents`
@@ -33,11 +33,7 @@ object ContentSkewGen {
     val out = args.lift(1).getOrElse("/tmp/graft_cskew1")
     val spark = Sessions.local("graft-cskewgen")
 
-    def write(name: String, df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$out/$name.parquet")
-      println(s"CSKEWGEN $name rows=" +
-        spark.read.parquet(s"$out/$name.parquet").count())
-    }
+    val write = ScaleGen.write(spark, out, "CSKEWGEN") _
 
     // non-document tables: verbatim copies so every query still runs
     Seq("region", "nation", "customer", "supplier", "part",
@@ -45,24 +41,12 @@ object ContentSkewGen {
       .foreach(n => write(n, Tables.table(spark, src, n)))
 
     val docs = Tables.table(spark, src, "documents")
-    // rank→id placement is arithmetic, so the id domain must be dense —
-    // same generation-time assertion as SkewGen (ADVICE r15)
-    val r = docs.agg(min(col("doc_id")).cast("long"),
-      max(col("doc_id")).cast("long"), countDistinct(col("doc_id"))).head()
-    val (minId, n) = (r.getLong(0), r.getLong(2))
-    require(n == r.getLong(1) - minId + 1L,
-      s"doc_id is not dense: $n distinct over [$minId, ${r.getLong(1)}]")
-
-    /** Zipf(s=1) rank in [1, n] via the inverse-CDF floor(n^u) trick,
-      * u drawn deterministically from xxhash64 of the doc id. */
-    def zipfRank(k: Column): Column = {
-      val u = (xxhash64(k) / lit(2.0) / lit(Long.MaxValue.toDouble) + lit(0.5))
-      least(greatest(floor(pow(lit(n.toDouble), u)).cast("long"), lit(1L)), lit(n))
-    }
+    // rank→id placement is arithmetic, so the id domain must be dense
+    val (minId, n) = SkewGen.domain(docs, "doc_id")
 
     val texts = docs.select(col("doc_id").as("src_id"), col("text").as("src_text"))
     val skewed = docs.drop("text")
-      .withColumn("src_id", zipfRank(col("doc_id")) - 1L + lit(minId))
+      .withColumn("src_id", SkewGen.zipfRank(col("doc_id"), n) - 1L + lit(minId))
       .join(texts, "src_id")
       .withColumn("text",
         when(pmod(col("doc_id"), lit(10)) =!= 0,

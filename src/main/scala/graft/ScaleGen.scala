@@ -20,6 +20,14 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.ScaleGen [srcDir] [outDir] [factor]
   */
 object ScaleGen {
+  /** Write `df` to `<out>/<name>.parquet` and print `<tag> <name> rows=<n>`,
+    * counted from the written files (shared by the tier generators). */
+  private[graft] def write(spark: SparkSession, out: String, tag: String)(
+      name: String, df: DataFrame): Unit = {
+    df.write.mode("overwrite").parquet(s"$out/$name.parquet")
+    println(s"$tag $name rows=" + spark.read.parquet(s"$out/$name.parquet").count())
+  }
+
   def main(args: Array[String]): Unit = {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("target/sf1")
@@ -38,10 +46,7 @@ object ScaleGen {
     def keyBase(df: DataFrame, k: String): Long =
       df.agg(max(col(k))).head().getLong(0) + 1L
 
-    def write(name: String, df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$out/$name.parquet")
-      println(s"SCALEGEN $name rows=" + spark.read.parquet(s"$out/$name.parquet").count())
-    }
+    val write = ScaleGen.write(spark, out, "SCALEGEN") _
 
     val customer = Tables.table(spark, src, "customer")
     val supplier = Tables.table(spark, src, "supplier")

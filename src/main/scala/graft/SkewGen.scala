@@ -26,18 +26,36 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.SkewGen [srcDir] [outDir]
   */
 object SkewGen {
+  /** Zipf rank in [1, n] from a deterministic uniform in [0,1):
+    * xxhash64 of the key, mapped to u, then floor(n^u) — the standard
+    * inverse-CDF approximation for Zipf(s=1). */
+  private[graft] def zipfRank(k: Column, n: Long): Column = {
+    val u = (xxhash64(k) / lit(2.0) / lit(Long.MaxValue.toDouble) + lit(0.5))
+    least(greatest(floor(pow(lit(n.toDouble), u)).cast("long"), lit(1L)), lit(n))
+  }
+
+  /** The rank→key placement is ARITHMETIC (minKey + rank − 1), so
+    * it is only referentially sound when the parent key domain is dense:
+    * any gap would make some ranks orphan FKs, silently breaking the
+    * "referential integrity preserved exactly" contract and the
+    * referential_integrity audit on this tier (ADVICE r15). True for the
+    * driver testdata's contiguous keys — asserted here so any other
+    * input fails at generation time instead of producing a subtly
+    * wrong tier. */
+  private[graft] def domain(df: DataFrame, k: String): (Long, Long) = {
+    val r = df.agg(min(col(k)).cast("long"), max(col(k)).cast("long"),
+      countDistinct(col(k))).head()
+    val (lo, hi, nd) = (r.getLong(0), r.getLong(1), r.getLong(2))
+    require(nd == hi - lo + 1L,
+      s"parent key $k is not dense: $nd distinct over [$lo, $hi] — " +
+        "arithmetic rank placement would orphan FKs")
+    (lo, hi - lo + 1L)
+  }
+
   def main(args: Array[String]): Unit = {
     val src = args.lift(0).getOrElse("/tmp/graft_sf1")
     val out = args.lift(1).getOrElse("/tmp/graft_skew1")
     val spark = Sessions.local("graft-skewgen")
-
-    /** Zipf rank in [1, n] from a deterministic uniform in [0,1):
-      * xxhash64 of the key, mapped to u, then floor(n^u) — the standard
-      * inverse-CDF approximation for Zipf(s=1). */
-    def zipfRank(k: Column, n: Long): Column = {
-      val u = (xxhash64(k) / lit(2.0) / lit(Long.MaxValue.toDouble) + lit(0.5))
-      least(greatest(floor(pow(lit(n.toDouble), u)).cast("long"), lit(1L)), lit(n))
-    }
 
     /** Remap FK column `fk` of `df` to a Zipf-distributed key drawn from
       * the existing key domain [minKey, minKey+n): rank 1 (the hot key)
@@ -47,28 +65,7 @@ object SkewGen {
         when(col(fk).isNull, lit(null))
           .otherwise(zipfRank(col(fk), n) - 1L + lit(minKey)))
 
-    /** The rank→key placement below is ARITHMETIC (minKey + rank − 1), so
-      * it is only referentially sound when the parent key domain is dense:
-      * any gap would make some ranks orphan FKs, silently breaking the
-      * "referential integrity preserved exactly" contract and the
-      * referential_integrity audit on this tier (ADVICE r15). True for the
-      * driver testdata's contiguous keys — asserted here so any other
-      * input fails at generation time instead of producing a subtly
-      * wrong tier. */
-    def domain(df: DataFrame, k: String): (Long, Long) = {
-      val r = df.agg(min(col(k)).cast("long"), max(col(k)).cast("long"),
-        countDistinct(col(k))).head()
-      val (lo, hi, nd) = (r.getLong(0), r.getLong(1), r.getLong(2))
-      require(nd == hi - lo + 1L,
-        s"parent key $k is not dense: $nd distinct over [$lo, $hi] — " +
-          "arithmetic rank placement would orphan FKs")
-      (lo, hi - lo + 1L)
-    }
-
-    def write(name: String, df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$out/$name.parquet")
-      println(s"SKEWGEN $name rows=" + spark.read.parquet(s"$out/$name.parquet").count())
-    }
+    val write = ScaleGen.write(spark, out, "SKEWGEN") _
 
     val customer = Tables.table(spark, src, "customer")
     val supplier = Tables.table(spark, src, "supplier")

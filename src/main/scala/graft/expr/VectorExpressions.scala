@@ -98,6 +98,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // whole-operator extension: plans graft.plans.TopKPerGroup logical
     // nodes as the partial->exchange->final bounded-heap pipeline
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    // graft.operators.PrefixSum: distributed global row numbers and
+    // running sums, both passes inside the query's own execution
+    ext.injectPlannerStrategy(_ => graft.operators.PrefixSumStrategy)
     // opt-in optimizer rule: rewrite `row_number() ... WHERE rn <= k`
     // window patterns into TopKPerGroup (spark.graft.topkRewrite=true)
     ext.injectOptimizerRule(_ => graft.plans.RewriteWindowTopK)

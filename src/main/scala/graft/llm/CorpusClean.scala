@@ -248,8 +248,8 @@ FROM scored"""
     * division each), and AUC via the Mann-Whitney rank identity
     * AUC = (Σ rank(pos) − P(P+1)/2) / (P·N) over the ascending-score
     * ranking. The global ranking uses the DISTRIBUTED exact rank
-    * ([[graft.operators.Ranks.globalRowNumber]], range-partitioned sort +
-    * partition offsets — never an unpartitioned row_number window), so the
+    * ([[graft.operators.Ranks.globalRowNumber]] — never an unpartitioned
+    * row_number window), so the
     * metric computes at corpus scale; everything after the rank is ONE
     * grand aggregate of integer sums. Score ties rank by doc_id on both
     * engines (the convention stands in for midrank tie handling — the

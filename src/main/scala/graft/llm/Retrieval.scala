@@ -523,8 +523,8 @@ WHERE inter_n * 10 >= (sa.n + sb.n - inter_n) * 7"""
     * (tie-break doc_id) so both engines agree exactly; the two reciprocals
     * are single exact divisions summed in fixed order. Both rankings run
     * over the full doc dim, so they use the DISTRIBUTED exact global rank
-    * ([[graft.operators.Ranks.globalRowNumber]] — range-partitioned sort +
-    * partition offsets) instead of an unpartitioned row_number window,
+    * ([[graft.operators.Ranks.globalRowNumber]]) instead of an
+    * unpartitioned row_number window,
     * which would serialize every document through one task (the global-
     * window pin in PlanShapeSpec). */
   def rrfFusion(s: SparkSession, d: String, k: Int = 20): DataFrame = {

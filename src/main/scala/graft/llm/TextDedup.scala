@@ -607,10 +607,9 @@ WHERE CAST(n_shared AS DOUBLE) / CAST(s1.n + s2.n - n_shared AS DOUBLE) >= $Jacc
       // candidate join tests rank equality, and n_shared/containment
       // come from array_intersect SIZES of injectively mapped arrays —
       // so the output is bit-identical to the dense-rank form (oracle
-      // re-proven). Unlike Ranks.globalRowNumber this stays a lazy
-      // DataFrame (no zipWithIndex count job, no RDD round-trip): the
-      // only extra cost over the window form is the range sampling pass,
-      // and no task ever holds the whole dictionary.
+      // re-proven). Unlike Ranks.globalRowNumber this needs no totals
+      // pass: the only extra cost over the window form is the range
+      // sampling pass, and no task ever holds the whole dictionary.
       val grk = gdf.repartitionByRange(col("df"), col("g"))
         .sortWithinPartitions("df", "g")
         .withColumn("rk", monotonically_increasing_id())

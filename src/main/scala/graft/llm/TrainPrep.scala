@@ -50,7 +50,7 @@ object TrainPrep {
     *
     * Scale posture inherits from the verified stages: dedup is
     * banded-over-representatives, the global budget prefix sum is the
-    * distributed two-pass [[graft.operators.Ranks.globalRunningSum]], the
+    * distributed [[graft.operators.Ranks.globalRunningSum]], the
     * packing window partitions by source shard, and the epoch permutation
     * is [[graft.operators.Ranks.groupedRowNumber]] — no corpus-wide
     * single-task operator anywhere in the chain.
@@ -399,9 +399,8 @@ UNION ALL SELECT 4, 'export_rows', (SELECT CAST(count(*) AS BIGINT) FROM texp)""
     // here because the budget cuts a PREFIX of the quality order. The
     // running token total over that global order is the classic 100 TB
     // trap (a single-task window) — computed instead by the distributed
-    // two-pass prefix sum ([[graft.operators.Ranks.globalRunningSum]]:
-    // range-sort + per-partition offsets), with the budget a broadcast
-    // 1-row aggregate. Integer token arithmetic end-to-end.
+    // prefix sum [[graft.operators.Ranks.globalRunningSum]], with the
+    // budget a broadcast 1-row aggregate. Integer token arithmetic end-to-end.
     "corpus_budget_select" -> ((s, d) => {
       val q = TextAnalysis.qualityOf(Tables.documents(s, d))
       val ranked = graft.operators.Ranks.globalRunningSum(

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.LongType
 
 /** Distributed exact global ranking.
   *
@@ -13,9 +16,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   *   1. range-partition + sort by the order keys (a distributed sort —
   *      Spark samples split points, every partition sorts in parallel);
-  *   2. assign indices from per-partition offsets (`zipWithIndex` — one
-  *      lightweight count job, then a narrow map).
+  *   2. a [[PrefixSum]] over the sorted partitions: per-partition totals,
+  *      their exclusive scan, then each row's offset + running value.
   *
+  * Every function here returns a lazy frame: the planned [[PrefixSum]]
+  * operator runs both of its passes inside the query's own execution.
   * The order must be TOTAL (include a tiebreaker column) for the result to
   * be deterministic and oracle-comparable; range partitioning never splits
   * equal keys across partitions, so a total order guarantees the global
@@ -23,66 +28,32 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object Ranks {
 
-  /** Every operator here runs TWO jobs over the same sorted RDD (a count/
-    * totals pass, then the emit pass); correctness of the offsets needs
-    * both passes to see identical partition contents. Shuffle-output reuse
-    * makes that automatic for deterministic plans — but a nondeterministic
-    * upstream (rand(), sampling, first() over unordered groups) recomputed
-    * after shuffle-file loss could silently misalign the offsets (ADVICE
-    * r10). Detect the hazard from the optimized plan and pin the sorted
-    * RDD (MEMORY_AND_DISK) only then; deterministic callers — every
-    * registered query — pay nothing. The pinned RDD is released by
-    * Spark's ContextCleaner once the result frame is unreachable. */
-  private def pinIfNondeterministic(
-      df: DataFrame, rdd: org.apache.spark.rdd.RDD[Row]): org.apache.spark.rdd.RDD[Row] = {
-    val deterministic = df.queryExecution.optimizedPlan
-      .find(p => p.expressions.exists(e => !e.deterministic))
-      .isEmpty
-    if (deterministic) rdd
-    else rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  /** `df` range-partitioned and sorted by `order`, with the inclusive
+    * running sum of `value` (cast to BIGINT) appended as `out`. */
+  private def prefixSum(df: DataFrame, order: Seq[Column], value: Column, out: String): DataFrame = {
+    val sorted = df.repartitionByRange(order: _*).sortWithinPartitions(order: _*)
+    // analysis resolves `value` against the sorted frame's own attributes
+    Bridge.logicalPlan(sorted.select(value.cast("long"))) match {
+      case Project(Seq(Alias(v, _)), child) =>
+        Bridge.ofRows(df.sparkSession,
+          PrefixSum(v, AttributeReference(out, LongType, nullable = false)(), child))
+    }
   }
 
   /** Append a 1-based BIGINT `out` column holding the exact global
     * row_number of the TOTAL order `order`. Project `df` to the minimal
-    * columns first — the two passes carry every column through the sort. */
-  def globalRowNumber(df: DataFrame, order: Seq[Column], out: String): DataFrame = {
-    val spark = df.sparkSession
-    val sorted = df.repartitionByRange(order: _*).sortWithinPartitions(order: _*)
-    val schema = StructType(sorted.schema.fields :+ StructField(out, LongType, nullable = false))
-    // zipWithIndex internally runs the same count-then-emit two-job shape
-    val ranked = pinIfNondeterministic(sorted, sorted.rdd).zipWithIndex().map { case (r, i) =>
-      Row.fromSeq(r.toSeq :+ (i + 1L))
-    }
-    spark.createDataFrame(ranked, schema)
-  }
+    * columns first — every column is carried through the sort. */
+  def globalRowNumber(df: DataFrame, order: Seq[Column], out: String): DataFrame =
+    prefixSum(df, order, org.apache.spark.sql.functions.lit(1L), out)
 
   /** Append an exact global INCLUSIVE running sum (BIGINT `out`) of the
-    * integer column `value` over the TOTAL order `order` — the classic
-    * two-pass distributed prefix sum: range-partition + sort, a narrow
-    * pass collects per-partition totals (one long per partition on the
-    * driver), their exclusive scan seeds each partition's offset, and a
-    * second narrow pass emits offset + within-partition running sum.
-    * Equals `SUM(value) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)`
-    * without serializing the input through one window task. Integer-only
-    * by design: long addition is associative, so the result is exact and
+    * integer column `value` over the TOTAL order `order`. Equals
+    * `SUM(value) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)` without
+    * serializing the input through one window task. Integer-only by
+    * design: long addition is associative, so the result is exact and
     * engine-order-independent (a double variant would not be). */
-  def globalRunningSum(df: DataFrame, order: Seq[Column], value: Column, out: String): DataFrame = {
-    val spark = df.sparkSession
-    val sorted = df.withColumn("_grs_v", value.cast("long"))
-      .repartitionByRange(order: _*).sortWithinPartitions(order: _*)
-    val idx = sorted.schema.fieldIndex("_grs_v")
-    val rdd = pinIfNondeterministic(sorted, sorted.rdd)
-    val totals = rdd.mapPartitionsWithIndex { case (i, it) =>
-      var s = 0L; it.foreach(s += _.getLong(idx)); Iterator((i, s))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = totals.scanLeft(0L)(_ + _)
-    val schema = StructType(sorted.schema.fields :+ StructField(out, LongType, nullable = false))
-    val rows = rdd.mapPartitionsWithIndex { case (i, it) =>
-      var s = offsets(i)
-      it.map { r => s += r.getLong(idx); Row.fromSeq(r.toSeq :+ s) }
-    }
-    spark.createDataFrame(rows, schema).drop("_grs_v")
-  }
+  def globalRunningSum(df: DataFrame, order: Seq[Column], value: Column, out: String): DataFrame =
+    prefixSum(df, order, value, out)
 
   /** Append an exact SQL `ntile(k)` bucket (1-based INT) of the TOTAL
     * order `order`, computed without a single-task window: distributed

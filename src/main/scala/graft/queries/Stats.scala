@@ -746,8 +746,8 @@ FROM targets JOIN rk ON rk.g = targets.g AND rk.rn = targets.k"""
     * r of n maps to reference index ceil(r·m/n) ∈ [1, m], computed as the
     * exact integer (r·m + n − 1) div n; the mapped value is the reference
     * value at that rank. Both rankings use the DISTRIBUTED exact rank
-    * ([[graft.operators.Ranks.globalRowNumber]] — range-partitioned sort
-    * + partition offsets, never a single-task global window), the counts
+    * ([[graft.operators.Ranks.globalRowNumber]], never a single-task
+    * global window), the counts
     * stay in-plan as broadcast 1-row frames, and the mapping is one
     * integer equi-join — every stage shuffles on keys, nothing collects.
     * Rank ties on equal values order by event_id on both engines; the

@@ -63,7 +63,7 @@ class ContractSpec extends SparkSpec {
 
   test("driver-side collect() stays confined to the audited bounded sites") {
     // Every .collect() in main is bounded by construction (one long per
-    // partition in Ranks' prefix sums, the ≤4096-vector IVF codebook
+    // partition in PrefixSum's totals pass, the ≤4096-vector IVF codebook
     // sample, a 1-row argmax in the BPE trainer, the generator mains'
     // top-key reports). A new collect site means a new driver-bound
     // audit — this test forces that conversation instead of letting an
@@ -71,7 +71,7 @@ class ContractSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     val audited = Map(
-      "operators/Ranks.scala" -> 1, // per-partition totals (longs)
+      "operators/PrefixSum.scala" -> 1, // per-partition totals (longs)
       "llm/IvfAnn.scala" -> 1,      // bounded codebook sample
       "llm/LangModel.scala" -> 1,   // limit(1) argmax
       "llm/Pca.scala" -> 1,         // d²-bounded Gramian (driver eigensolve)
@@ -194,39 +194,33 @@ class ContractSpec extends SparkSpec {
     // result's one job; stress_centrality left it earlier, after 8c69475
     // made its frames lazy once the shared graph layer is warm.)
     val supersteps = Set("perceptron_steps", "bpe_merges_batch", "link_prediction")
-    // Ranks-based distributed ranking (globalRowNumber/globalNtile/
-    // globalRunningSum/groupedRowNumber): the two-phase prefix sum reads
-    // one long per partition at construction — the audited bounded
-    // collect (see the collect() inventory test).
-    // (train_export/train_export_funnel are NOT here: their stage frames
-    // build once into the session-cached layer — the warm pass below —
-    // and later constructions are job-free reads of the checkpointed
-    // leaves.)
-    val ranksBased = Set(
-      "corpus_budget_select", "epoch_shuffle", "length_batching",
-      "resume_page", "rfm_segments", "spearman_rho", "score_decile_lift",
-      "quantile_normalize", "classifier_eval",
-      // r16: exact price percentiles moved from the counts-map aggregate
-      // (single-threaded merge+eval) to Ranks.exactPercentileArray —
-      // same audited two-phase rank mechanism
-      "approx_quantiles", "numeric_profile")
     // Shared-frame eager checkpoint: a frame feeding several plan branches
     // is leafed once at construction, so the branch-shared compute runs
-    // once instead of per-branch at action time.
+    // once instead of per-branch at action time. (rrf_fusion left the
+    // list once its ranks became the planned PrefixSum: its construction
+    // jobs were the ranks', not a checkpoint's.)
     val sharedFrame = Set(
       "cosine_neardup", "semdedup", "doc_rarity_score", "tf_cosine_pairs",
-      "proto_outliers", "jaccard_prefix_join", "rrf_fusion", "acf_lags",
+      "proto_outliers", "jaccard_prefix_join", "acf_lags",
       "theil_sen_trend", "seasonal_decompose", "paragraph_dedup",
       "doc_surprisal_bits", "kendall_tau", "mutual_nn_pairs",
       "cdc_chunk_dedup", "markov_stationary", "cuped_adjustment",
       "kcenter_coreset", "kcenter_coreset_k16",
       // r16: the rank-array frame feeds prefix explode + probe + both
       // verify sides (the jaccard_prefix_join diamond, same mechanism)
-      "dedup_containment")
+      "dedup_containment",
+      // the per-customer / per-user base feeds every rank branch plus the
+      // join back (left the Ranks list when PrefixSum made ranks lazy;
+      // without the leaf the aggregate re-runs per branch: spearman_rho
+      // 10 -> 11 jobs, rfm_segments 19 -> 27 jobs at sf0.1)
+      "spearman_rho", "rfm_segments",
+      // lazy localCheckpoint(false) of the scored frame: under AQE its
+      // join stages run when the checkpoint RDD is produced
+      "score_decile_lift")
     // Write-lifecycle queries: the operator under test IS a write + read
     // back (partitioned layout pruning, multi-format round-trip).
     val writeLifecycle = Set("partition_pruned_counts", "multi_format_union")
-    val allowedJobs = supersteps ++ ranksBased ++ sharedFrame ++ writeLifecycle
+    val allowedJobs = supersteps ++ sharedFrame ++ writeLifecycle
 
     val sc = spark.sparkContext
     spark.catalog.clearCache()

@@ -71,26 +71,81 @@ class RanksSpec extends SparkSpec {
     assert(got === expected)
   }
 
-  test("nondeterministic upstream pins the sorted RDD; deterministic does not") {
-    // ADVICE r10: the two-pass operators must not silently misalign
-    // offsets when a nondeterministic input is recomputed — the hazard is
-    // answered by persisting the sorted frame, detected from the plan.
-    def pinnedCount = spark.sparkContext.getPersistentRDDs.size
-    val beforeKeys = spark.sparkContext.getPersistentRDDs.keySet
-    val before = pinnedCount
-    val det = Ranks.globalRunningSum(users, Seq(col("id")), col("id"), "cum")
-    det.count()
-    assert(pinnedCount === before, "deterministic input must not persist anything")
-    val nonDet = users.withColumn("r", rand(42))
-    val summed = Ranks.globalRunningSum(nonDet, Seq(col("id")), col("id"), "cum")
-    assert(summed.count() === 1013)
-    assert(pinnedCount > before, "rand() upstream must pin the sorted RDD")
-    // the pinned copy makes the result self-consistent: rank pass agrees
-    val ranked = Ranks.globalRowNumber(nonDet, Seq(col("id")), "rn")
-    assert(ranked.select("rn").distinct().count() === 1013)
-    spark.sparkContext.getPersistentRDDs
-      .filterNot { case (k, _) => beforeKeys.contains(k) }
-      .values.foreach(_.unpersist(false))
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("with rand() upstream, row numbers are exactly 1..n and the running sum ends at the total") {
+    // both passes of the operator must see identical rows: a rand() column
+    // recomputed between the totals pass and the emit pass would misalign
+    // the partition offsets (duplicate or missing numbers). Eight
+    // uncoalesced range partitions keep both passes in play.
+    withConf("spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      val nonDet = users.withColumn("r", (rand(42) * 1000).cast("long"))
+      val order = Seq(col("r"), col("id"))
+      val rn = Ranks.globalRowNumber(nonDet, order, "rn")
+        .select("rn").collect().map(_.getLong(0)).sorted
+      assert(rn.toSeq === (1L to 1013L))
+      val cum = Ranks.globalRunningSum(nonDet, order, col("id"), "cum")
+        .select(max("cum")).head().getLong(0)
+      assert(cum === (1L to 1013L).sum)
+      // a predicate on the rank stays above the operator: ranks are
+      // assigned over every row, then filtered
+      assert(Ranks.globalRowNumber(users, Seq(col("id")), "rn")
+        .filter(col("rn") <= 5).select("id").collect().map(_.getLong(0)).sorted.toSeq ===
+        (1L to 5L))
+    }
+  }
+
+  test("building the Ranks frames and their executed plans runs no Spark jobs") {
+    val sc = spark.sparkContext
+    val group = "ranks-construction"
+    sc.setJobGroup(group, group, interruptOnCancel = false)
+    try {
+      val order = Seq(col("score"), col("id"))
+      Seq(
+        Ranks.globalRowNumber(users, order, "rn"),
+        Ranks.globalRunningSum(users, order, col("id"), "cum"),
+        Ranks.globalNtile(users, order, 5, "t"),
+        Ranks.exactPercentileArray(users, col("score"), Seq(0.5), "p"),
+        Ranks.groupedRowNumber(users, Seq("grp_val"), order, "rn")
+      ).foreach(_.queryExecution.executedPlan)
+    } finally sc.clearJobGroup()
+    org.apache.spark.graft.Bus.drain(sc)
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
+  }
+
+  test("AQE-coalesced tiny range partitions still give window row_number and sum") {
+    // 64 range partitions of ~16 rows, coalesced by AQE to a few: each
+    // coalesced partition is a contiguous run of the range, so the
+    // offsets must follow the coalesced partitions, not the original ones
+    withConf("spark.sql.shuffle.partitions" -> "64",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1k") {
+      val order = Seq(col("grp_val").desc, col("id"))
+      val w = Window.orderBy(order: _*)
+      val expected = users
+        .withColumn("rn", row_number().over(w).cast("long"))
+        .withColumn("cum", sum(col("id")).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .select("id", "rn", "cum").collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
+        .toMap
+      val rn = Ranks.globalRowNumber(users, order, "rn")
+      val got = Ranks.globalRunningSum(rn, order, col("id"), "cum")
+        .select("id", "rn", "cum")
+      assert(got.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap === expected)
+      val reads = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collect(got.queryExecution.executedPlan) {
+          case r: org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec => r
+        }
+      assert(reads.exists(r => r.hasCoalescedPartition && r.partitionSpecs.size > 1),
+        s"expected a coalesced range read over several partitions: ${reads.map(_.partitionSpecs.size)}")
+    }
   }
 
   test("globalNtile equals ntile() for k not dividing n, k dividing n, and k > n") {
