@@ -80,7 +80,7 @@ class RanksSpec extends SparkSpec {
     }
   }
 
-  test("with rand() upstream, row numbers are exactly 1..n and the running sum ends at the total") {
+  test("with rand() upstream, row numbers are 1..n and the sum ends at the total") {
     // both passes of the operator must see identical rows: a rand() column
     // recomputed between the totals pass and the emit pass would misalign
     // the partition offsets (duplicate or missing numbers). Eight
