@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** 1/5/15-minute load averages — recorded at bench start and end so a
     * published number carries its own contention evidence (VERDICT r8:

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Content-skewed corpus tier (VERDICT r15 #2): rewrites the `documents`

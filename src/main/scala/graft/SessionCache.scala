@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.SparkContext
+import org.apache.spark.graphx.Graph
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -26,8 +27,13 @@ import org.apache.spark.storage.StorageLevel
   *    until the same builder runs again in the same session (the lazy
   *    result still reads them) or the session ends;
   *  - RDDs a builder persists outside the CacheManager (GraphX caches
-  *    every round's vertex and edge RDDs) go to the RDD [[retire]], alive
-  *    until the same builder runs again on the same context;
+  *    every round's vertex and edge RDDs) go to the RDD [[retire]] through
+  *    [[retiring]], alive until the same builder runs again on the same
+  *    context;
+  *  - a cached GraphX graph other queries read is a [[layer]] whose build
+  *    is [[retiring]] under the layer's name: the next build of that layer
+  *    on the context (a fresh session's) releases it, and a hit on a
+  *    released graph builds it again;
   *  - a frame whose whole life fits inside one synchronous call (a
   *    foreachBatch body, scratch consumed by an eager count or collect
   *    loop) may be released in that call — those sites are pinned by
@@ -140,14 +146,29 @@ object SessionCache {
       .foreach(_.filterNot(rdds.contains).foreach(_.unpersist(blocking = false)))
   }
 
+  /** Runs `body` and hands every RDD persisted while it ran to the RDD
+    * [[retire]] as `owner`'s generation. (A builder on another thread
+    * persisting in the same window would lose its cache early — a
+    * recompute, never a wrong result.) */
+  def retiring[T](sc: SparkContext, owner: String)(body: => T): T = {
+    val before = sc.getPersistentRDDs.keySet
+    val out = body
+    retire(sc, owner, sc.getPersistentRDDs.collect { case (id, r) if !before(id) => r }.toSeq)
+    out
+  }
+
   /** Memoized layer with [[LayerMetrics]] accounting: hits record a reuse,
     * misses run `mk` under the named build timer. The shared shape of the
-    * mart/gram/pair/vocab layer caches (SURVEY §4's materialize-once
+    * mart/gram/pair/vocab/graph layer caches (SURVEY §4's materialize-once
     * posture), now with session-end eviction in one place. */
   def layer[V](name: String, s: SparkSession, key: Any)(mk: => V): V = {
     hook(s.sparkContext)
     val k = (s, (name, key))
     store.get(k) match {
+      case Some(g: Graph[_, _]) if g.vertices.getStorageLevel == StorageLevel.NONE =>
+        // another session's build of this graph layer released it: build again
+        store.remove(k, g)
+        layer(name, s, key)(mk)
       case Some(v) =>
         LayerMetrics.reuse(name)
         v match { // self-heal a dropped persist registration (see builtLevel)

@@ -1,7 +1,6 @@
 package graft.model
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.expr.Exact

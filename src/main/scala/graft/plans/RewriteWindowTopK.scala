@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{
   Alias, And, Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual,
-  IntegerLiteral, LessThan, LessThanOrEqual, NamedExpression, RowNumber,
+  IntegerLiteral, LessThan, LessThanOrEqual, RowNumber,
   WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -71,7 +71,7 @@ object RewriteWindowTopK extends Rule[LogicalPlan] {
     if (!enabled) return plan
     plan.transformUp {
       case f @ Filter(cond,
-          w @ Window(
+          Window(
             Seq(a @ Alias(WindowExpression(RowNumber(), WindowSpecDefinition(part, order, _)), _)),
             _, _, child, _)) if part.nonEmpty && order.nonEmpty =>
         extractK(cond, a.toAttribute) match {

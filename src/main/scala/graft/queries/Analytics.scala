@@ -1364,9 +1364,10 @@ object Analytics {
       val members = Tables.supplier(s, d).select("s_suppkey").rdd.map(_.getLong(0))
       Graph.supersteps(s, "pagerank_integer",
           org.apache.spark.sql.types.StructType(Graph.longs("node", "mass"))) {
-        // the supplier count and the edge dedup run inside the job, on the
-        // RDD side: no construction-time action
-        val nSupp = Graph.reduceToOne(members.map(_ => 1L))(_ + _)
+        // the supplier count (none without a supplier, so no edge) and the
+        // edge dedup run inside the job, on the RDD side: no
+        // construction-time action
+        val nSupp = Graph.foldToOne(members.map(_ => 1L), 0L)(_ + _).filter(_ > 0)
         val edges = nSupp.cartesian(li)
           .map { case (n, r) => (r.getLong(0), r.getLong(1) % n) }
           .filter { case (src, dst) => src != dst }

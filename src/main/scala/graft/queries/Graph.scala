@@ -5,18 +5,24 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import scala.reflect.ClassTag
 
 import graft.Tables
 
-/** Graph analytics over the shared supplier graph layers. The fixed-round
-  * superstep loops (bfs_hops, sssp_weighted, label_propagation, k_core,
+/** Graph analytics over the shared supplier graph layers. Each edge layer
+  * is kept twice per (session, dir): as a persisted DataFrame and as a
+  * cached GraphX graph built from it, whose vertex attribute is the
+  * node's out-degree ([[graphLayer]]). The fixed-round superstep loops
+  * (bfs_hops, sssp_weighted, label_propagation, k_core,
   * closeness_centrality, and [[Analytics]]' pagerank_integer) run as
   * GraphX `aggregateMessages` rounds through [[supersteps]]: every round
   * of a loop executes inside the result's one job, with no SQL plan
-  * update between stages. stress_centrality, clustering_coefficient,
-  * degree_assortativity and link_prediction stay composed DataFrame plans.
+  * update between stages. All of them but pagerank_integer start from a
+  * shared graph, and degree_assortativity reads its degrees there in one
+  * triplet pass. stress_centrality, clustering_coefficient and
+  * link_prediction stay composed DataFrame plans.
   */
 object Graph {
 
@@ -38,7 +44,7 @@ object Graph {
     * ~1, and any operator that needs skewed degrees or interior
     * shortest-path structure degenerates). Shared by k_core,
     * stress_centrality and degree_assortativity. */
-  private def symmetricEdgesWide(s: SparkSession, d: String): DataFrame =
+  private[queries] def symmetricEdgesWide(s: SparkSession, d: String): DataFrame =
     edgesLayer("graph_edges_wide", s, d, 4)
 
   /** Both graph layers: part keys fold into a node domain `widen` times
@@ -61,56 +67,95 @@ object Graph {
         .unionByName(e.select(col("b").as("src"), col("a").as("dst")))
     }
 
+  /** The narrow layer's graph: the suppliers and every edge endpoint. */
+  private[graft] def narrowGraph(s: SparkSession, d: String): GraphX[Long, Unit] =
+    graphLayer("graphx_edges", s, d)(symmetricEdges(s, d),
+      Some(Tables.supplier(s, d).select("s_suppkey")))
+
+  /** The wide layer's graph: the edge endpoints. */
+  private[graft] def wideGraph(s: SparkSession, d: String): GraphX[Long, Unit] =
+    graphLayer("graphx_edges_wide", s, d)(symmetricEdgesWide(s, d), None)
+
+  /** A graph layer as a cached GraphX graph whose vertex attribute is the
+    * node's out-degree, built ONCE per (session, dir) from the DataFrame
+    * `layer` — GraphX's graph as a cached view many algorithms reuse.
+    * With `members`, the vertices are the members and every edge
+    * endpoint, and a non-member endpoint carries [[NonMember]]. Its RDDs
+    * are the layer name's RDD generation: a fresh session's build
+    * releases them, and a hit on a released graph builds it again
+    * ([[graft.SessionCache.layer]]). The triplet view is built and cached
+    * here, so no consumer upgrades or caches into the shared graph; each
+    * derives its own with `mapVertices` inside its [[supersteps]]. */
+  private def graphLayer(name: String, s: SparkSession, d: String)(
+      layer: => DataFrame, members: => Option[DataFrame]): GraphX[Long, Unit] =
+    graft.SessionCache.layer(name, s, d) {
+      // crossed before the build window: a DataFrame-layer cache that the
+      // crossing materializes belongs to that layer, not to this graph
+      val edges = layerRows(layer).map { case (a, b) => Edge(a, b, ()) }
+      val nodes = members.map(_.rdd.map(_.getLong(0) -> 0L))
+      graft.SessionCache.retiring(s.sparkContext, name) {
+        // edge partitions are cached only once upgraded (below), so no
+        // intermediate copy is kept; vertex RDDs, a consumer's per-round
+        // state included, cache as GraphX's default
+        val (edgeLevel, vertexLevel) = (StorageLevel.NONE, StorageLevel.MEMORY_ONLY)
+        val g0 = nodes.fold(GraphX.fromEdges(edges, 0L, edgeLevel, vertexLevel))(
+          GraphX(_, edges, NonMember, edgeLevel, vertexLevel))
+        val g = g0.outerJoinVertices(g0.outDegrees) { (_, a, deg) =>
+          if (a == NonMember) a else deg.getOrElse(0).toLong
+        }
+        // building the triplet view upgrades the edge partitions to carry
+        // both endpoints' attributes; persisting after it keeps the
+        // upgraded ones. Their blocks fill in the first consumer's job, so
+        // the build adds no job of its own.
+        g.triplets.setName(s"$name triplets")
+        g.persist(StorageLevel.MEMORY_ONLY)
+      }
+    }
+
   /** Runs a GraphX superstep loop and returns its rows as a frame with
     * `schema`. GraphX builds each round lazily, so construction runs no
     * job and the result's one action runs every round. `rounds` may only
-    * read RDDs crossed over from EXCHANGE-FREE frames (a materialized
-    * layer, a table scan), derived before this call: under AQE, `.rdd` on
-    * a frame with an exchange runs its stages at construction, as
-    * `localCheckpoint` does. Anything data-dependent (a dedup, a
-    * threshold) is computed on the RDD side, inside the job.
+    * read a shared graph layer and RDDs crossed over from EXCHANGE-FREE
+    * frames (a materialized layer, a table scan), all obtained before
+    * this call: under AQE, `.rdd` on a frame with an exchange runs its
+    * stages at construction, as `localCheckpoint` does, and a graph layer
+    * built inside the window would become this query's generation.
+    * Anything data-dependent (a dedup, a threshold) is computed on the
+    * RDD side, inside the job.
     *
     * GraphX `.cache()`s each round's vertex and edge RDDs itself: every
     * RDD persisted while `rounds` builds becomes `owner`'s generation in
-    * [[graft.SessionCache]], released when the same owner runs again. (A
-    * builder on another thread persisting in the same window would lose
-    * its cache early — a recompute, never a wrong result.) */
+    * [[graft.SessionCache]], released when the same owner runs again. A
+    * shared graph is read-only here: its triplet view is built and cached
+    * with the layer, so nothing caches into it. */
   private[queries] def supersteps(s: SparkSession, owner: String, schema: StructType)(
-      rounds: => RDD[Row]): DataFrame = {
-    val sc = s.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val rows = rounds
-    graft.SessionCache.retire(sc, owner,
-      sc.getPersistentRDDs.collect { case (id, r) if !before(id) => r }.toSeq)
-    s.createDataFrame(rows, schema)
-  }
+      rounds: => RDD[Row]): DataFrame =
+    s.createDataFrame(graft.SessionCache.retiring(s.sparkContext, owner)(rounds), schema)
 
   private[queries] def longs(names: String*): Seq[StructField] =
     names.map(StructField(_, LongType, nullable = false))
 
-  /** A graph layer's (src, dst) rows as GraphX edges. The layer is a
-    * materialized cache, so crossing to its RDD runs no job. Crossed from
-    * a fresh projection, not the memoized frame's own `.rdd`: that one
-    * keeps reading the first cache it saw after a `clearCache()`. */
+  /** A graph layer's (src, dst) rows. The layer is a materialized cache,
+    * so crossing to its RDD runs no job. Crossed from a fresh projection,
+    * not the memoized frame's own `.rdd`: that one keeps reading the
+    * first cache it saw after a `clearCache()`. */
   private def layerRows(layer: DataFrame): RDD[(Long, Long)] =
     layer.select("src", "dst").rdd.map(r => (r.getLong(0), r.getLong(1)))
 
-  private def graphEdges(layer: DataFrame): RDD[Edge[Unit]] =
-    layerRows(layer).map { case (a, b) => Edge(a, b, ()) }
-
-  /** One-partition RDD holding `xs` reduced by `op` (empty when `xs` is),
-    * computed inside the job that reads it: per-partition partials, then
-    * a one-task shuffle. Pair it with a big RDD as `one.cartesian(big)`,
-    * never the reverse: a cartesian re-reads its right side (here, a
-    * shuffle) for every left row. */
-  private[queries] def reduceToOne[T: ClassTag](xs: RDD[T])(op: (T, T) => T): RDD[T] =
-    xs.mapPartitions(_.reduceOption(op).iterator).repartition(1)
-      .mapPartitions(_.reduceOption(op).iterator)
+  /** One-partition RDD holding exactly one element, `xs` folded by `op`
+    * from `zero`, computed inside the job that reads it: per-partition
+    * partials, then a one-task shuffle. Pair it with a big RDD as
+    * `one.cartesian(big)`, never the reverse: a cartesian re-reads its
+    * right side (here, a shuffle) for every left row. */
+  private[queries] def foldToOne[T: ClassTag](xs: RDD[T], zero: T)(op: (T, T) => T): RDD[T] =
+    xs.mapPartitions(it => Iterator(it.foldLeft(zero)(op))).repartition(1)
+      .mapPartitions(it => Iterator(it.foldLeft(zero)(op)))
 
   /** Vertex attribute of a node no round has reached yet. */
   private val Unreached = Long.MaxValue
   /** Vertex attribute of an edge endpoint outside the supplier table (node
-    * 0 of `l_partkey % n_supp`): it neither votes nor appears in output. */
+    * 0 of `l_partkey % n_supp`) in the narrow graph layer: it neither votes
+    * nor appears in output. */
   private[queries] val NonMember = Long.MinValue
   /** Vertex attribute of a node k_core has peeled. */
   private val Peeled = -1L
@@ -118,12 +163,13 @@ object Graph {
   /** Bounded BFS from node 1: min-hop label per node within 4 hops. Each
     * round, nodes discovered in the previous round message their
     * unvisited neighbours; a node keeps the hop of its first discovery.
-    * The hop bound makes the loop statically 4 supersteps. */
+    * The hop bound makes the loop statically 4 supersteps. Node 1 is a
+    * supplier, so it is a vertex of the narrow graph even without edges. */
   def bfsHops(s: SparkSession, d: String): DataFrame = {
-    val edges = graphEdges(symmetricEdges(s, d))
+    val g0 = narrowGraph(s, d)
     supersteps(s, "bfs_hops",
       StructType(longs("node") :+ StructField("hops", IntegerType, nullable = false))) {
-      var g = GraphX(s.sparkContext.parallelize(Seq((1L, 0L))), edges, Unreached)
+      var g = g0.mapVertices((n, _) => if (n == 1L) 0L else Unreached)
       for (h <- 1L to 4L) {
         val found = g.aggregateMessages[Long](
           c => if (c.srcAttr == h - 1 && c.dstAttr == Unreached) c.sendToDst(h),
@@ -268,14 +314,13 @@ SELECT CAST(rnk AS INT) AS rnk, u, w, cn, deg_u, deg_w, jaccard FROM (
     * exactly the min cost over ≤r-edge paths, the bound the oracle's
     * macro-expanded relaxation computes. */
   def ssspWeighted(s: SparkSession, d: String): DataFrame = {
-    val edges = layerRows(symmetricEdges(s, d)).map { case (a, b) =>
-      Edge(a, b, 1L + (math.min(a, b) * 31 + math.max(a, b)) % 9)
-    }
+    val g0 = narrowGraph(s, d)
     supersteps(s, "sssp_weighted", StructType(longs("node", "dist"))) {
-      var g = GraphX(s.sparkContext.parallelize(Seq((1L, 0L))), edges, Unreached)
+      var g = g0.mapVertices((n, _) => if (n == 1L) 0L else Unreached)
       for (_ <- 1 to SsspRounds) {
         val offers = g.aggregateMessages[Long](
-          c => if (c.srcAttr != Unreached) c.sendToDst(c.srcAttr + c.attr),
+          c => if (c.srcAttr != Unreached) c.sendToDst(c.srcAttr + 1L +
+            (math.min(c.srcId, c.dstId) * 31 + math.max(c.srcId, c.dstId)) % 9),
           math.min, TripletFields.Src)
         g = g.joinVertices(offers)((_, dist, offer) => math.min(dist, offer))
       }
@@ -326,11 +371,10 @@ d$r AS (
     * labeled. Suppliers with no edges keep their initial label. The
     * oracle macro-expands the same [[LpRounds]] rounds as CTE stages. */
   def labelPropagation(s: SparkSession, d: String): DataFrame = {
-    val edges = graphEdges(symmetricEdges(s, d))
-    val members = Tables.supplier(s, d).select("s_suppkey").rdd.map(_.getLong(0))
+    val g0 = narrowGraph(s, d)
     supersteps(s, "label_propagation", StructType(longs("node", "label"))) {
-      val init = members.map(n => n -> (if (n % 10 == 0) n % 5 else -1L))
-      var g = GraphX(init, edges, NonMember)
+      var g = g0.mapVertices((n, a) =>
+        if (a == NonMember) a else if (n % 10 == 0) n % 5 else -1L)
       for (_ <- 1 to LpRounds) {
         val votes = g.aggregateMessages[Map[Long, Long]](
           c => if (c.srcAttr >= 0) c.sendToDst(Map(c.srcAttr -> 1L)),
@@ -397,8 +441,10 @@ l$t AS (
     * degree, floor(2·|E_sym| / 3·|V|)) so the peel bites at every scale
     * factor — the supplier graph's density is sf-invariant, a fixed small
     * k would never remove a node. It is computed inside the job: a
-    * one-partition summary of the out-degrees, paired with every node by
-    * `cartesian`. Bounded at [[KCoreRounds]] rounds; the oracle
+    * one-partition summary of the graph layer's degree attribute, paired
+    * with every node by `cartesian`, which also runs the first peel (every
+    * node is live then, so its live degree is that attribute). Bounded at
+    * [[KCoreRounds]] rounds; the oracle
     * macro-expands the same rounds. The node domain is 4× wider than the
     * shared supplier graph's (l_partkey mod 4·|supplier|) so the degree
     * distribution is skewed — supplier-id nodes sit far above the mean,
@@ -407,25 +453,25 @@ l$t AS (
     * every degree equals the mean and nothing peels).
     * Output: surviving nodes with their degree in the surviving subgraph. */
   def kCore(s: SparkSession, d: String): DataFrame = {
-    val edges = graphEdges(symmetricEdgesWide(s, d))
+    val g0 = wideGraph(s, d)
     supersteps(s, "k_core", StructType(longs("node", "deg"))) {
-      val g0 = GraphX.fromEdges(edges, 0L)
       // ⅔ of the mean degree: measured across sf0.001/0.01/0.1 this peels
       // 55-65% of nodes and always leaves a nonempty core (40→17, 400→149,
       // 4000→1523 survivors); the full mean — and even ¾ of it at sf0.001 —
       // cascades to an empty graph (hubs lose their below-mean neighbors,
       // then fall themselves), and half the mean barely bites.
-      val kth = reduceToOne(g0.outDegrees.map { case (_, deg) => (deg.toLong, 1L) }) {
+      val kth = foldToOne(g0.vertices.map { case (_, deg) => (deg, 1L) }, (0L, 0L)) {
         case ((e1, v1), (e2, v2)) => (e1 + e2, v1 + v2)
       }.map { case (e, v) => math.floor(e.toDouble * 2 / (v.toDouble * 3)).toLong }
       // a live node carries k, a peeled one Peeled
-      val withK = kth.cartesian(g0.vertices).map { case (k, (n, _)) => n -> k }
-      var g = g0.outerJoinVertices(withK)((_, _, k) => k.getOrElse(Peeled))
+      val firstPeel = kth.cartesian(g0.vertices)
+        .map { case (k, (n, deg)) => n -> (if (deg >= k) k else Peeled) }
+      var g = g0.outerJoinVertices(firstPeel)((_, _, k) => k.getOrElse(Peeled))
       // degree in the surviving subgraph; nodes with no live edge are absent
       def liveDegrees(g: GraphX[Long, Unit]) = g.aggregateMessages[Long](
         c => if (c.srcAttr != Peeled && c.dstAttr != Peeled) c.sendToSrc(1L),
         _ + _, TripletFields.All)
-      for (_ <- 1 to KCoreRounds)
+      for (_ <- 2 to KCoreRounds)
         g = g.outerJoinVertices(liveDegrees(g)) { (_, k, deg) =>
           if (k != Peeled && deg.getOrElse(0L) >= k) k else Peeled
         }
@@ -483,11 +529,10 @@ e$r AS (
     * node: seeds reached within [[CcRounds]] hops and the summed hop
     * distance — exact integers. */
   def closenessCentrality(s: SparkSession, d: String): DataFrame = {
-    val edges = graphEdges(symmetricEdges(s, d))
-    val seeds = Tables.supplier(s, d).filter(col("s_suppkey") <= CcSeeds)
-      .select("s_suppkey").rdd.map(_.getLong(0))
+    val g0 = narrowGraph(s, d)
     supersteps(s, "closeness_centrality", StructType(longs("node", "n_reached", "sum_dist"))) {
-      var g = GraphX(seeds.map(n => n -> Map(n -> 0)), edges, Map.empty[Long, Int])
+      var g = g0.mapVertices((n, a) =>
+        if (a != NonMember && n <= CcSeeds) Map(n -> 0) else Map.empty[Long, Int])
       for (h <- 1 to CcRounds) {
         val reached = g.aggregateMessages[Set[Long]](
           c => {
@@ -749,31 +794,30 @@ FROM deg LEFT JOIN tri ON tri.node = deg.node"""
   /** DEGREE ASSORTATIVITY (Newman 2002) of the k-core domain graph —
     * the Pearson correlation of endpoint degrees over the directed edge
     * list, reduced to four exact BIGINT sums (M, Σj, Σj², Σjk) in ONE
-    * partial-aggregable pass, with the correlation assembled from them
-    * in a fixed double chain. Uses the k_core 4×-wide node domain
+    * pass over the wide graph layer's triplets, whose endpoints carry
+    * their degrees, with the correlation assembled from them in a fixed
+    * double chain. Uses the k_core 4×-wide node domain
     * (l_partkey mod 4·|supplier|) because its degree distribution is
     * genuinely skewed — the shared supplier graph is near-regular at
-    * small sf, which degenerates the correlation to 0/0.
+    * small sf, which degenerates the correlation to 0/0. With no edge the
+    * result is the SQL grand aggregate's one row: m = 0, the rest null.
     *
-    * Scale contract: two node-keyed hash joins to attach endpoint
-    * degrees (node-scale dims — shuffle_hash, never broadcast at real
-    * graph sizes) and one map-side-combinable grand aggregate; the BIGINT
-    * sums are exact to |E|·maxdeg² ≈ 2⁶² (far past any tested sf; the
-    * same documented bound idiom as priority_sample's LCG mix). */
+    * Scale contract: per-partition partial sums and a one-task merge;
+    * the BIGINT sums are exact to |E|·maxdeg² ≈ 2⁶² (far past any tested
+    * sf; the same documented bound idiom as priority_sample's LCG mix). */
   def degreeAssortativity(s: SparkSession, d: String): DataFrame = {
-    val sym = symmetricEdgesWide(s, d) // shared wide layer
-    val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-      .select(col("src").as("node"), col("deg"))
-    val sums = sym
-      .join(deg.select(col("node").as("src"), col("deg").as("jd"))
-        .hint("shuffle_hash"), "src")
-      .join(deg.select(col("node").as("dst"), col("deg").as("kd"))
-        .hint("shuffle_hash"), "dst")
-      .agg(
-        count(lit(1)).as("m"),
-        sum(col("jd")).as("s1"),
-        sum(col("jd") * col("jd")).as("s2"),
-        sum(col("jd") * col("kd")).as("s11"))
+    val g = wideGraph(s, d)
+    val sums = supersteps(s, "degree_assortativity", StructType(longs("m") ++
+        Seq("s1", "s2", "s11").map(StructField(_, LongType, nullable = true)))) {
+      val perEdge = g.triplets.map { t =>
+        (1L, t.srcAttr, t.srcAttr * t.srcAttr, t.srcAttr * t.dstAttr)
+      }
+      foldToOne(perEdge, (0L, 0L, 0L, 0L)) { (a, b) =>
+        (a._1 + b._1, a._2 + b._2, a._3 + b._3, a._4 + b._4)
+      }.map { case (m, s1, s2, s11) =>
+        if (m == 0) Row(0L, null, null, null) else Row(m, s1, s2, s11)
+      }
+    }
     sums.select(col("m"), col("s1"), col("s2"), col("s11"),
       ((col("m").cast("double") * col("s11").cast("double")
           - col("s1").cast("double") * col("s1").cast("double"))

@@ -52,7 +52,7 @@ object StreamAggregates {
         org.apache.spark.sql.streaming.OutputMode.Append(),
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
         (user: Long, rows: Iterator[(Long, Long, Long, String)],
-         state: GroupState[Long]) =>
+         _: GroupState[Long]) =>
           val sorted = rows.toArray.sortBy(r => (r._2, r._3))
           if (sorted.isEmpty) Iterator.empty
           else {

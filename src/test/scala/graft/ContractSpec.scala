@@ -261,7 +261,7 @@ class ContractSpec extends SparkSpec {
     val names = Seq("bfs_hops", "sssp_weighted", "k_core", "closeness_centrality",
       "pagerank_integer", "label_propagation", "link_prediction",
       "dedup_clusters", "dedup_keep_best", "stress_centrality",
-      "triangle_count", "perceptron_steps")
+      "triangle_count", "perceptron_steps", "degree_assortativity")
     def run(n: String): Unit = SparkEntry.queries(n)(spark, sf)
       .write.format("noop").mode("overwrite").save()
     // Count AFTER a GC pass: a lazily-checkpointed frame whose

@@ -96,17 +96,20 @@ class SessionCacheSpec extends SparkSpec {
     val child = spark.newSession()
     val bfs = SparkEntry.queries("bfs_hops")
     val kCore = SparkEntry.queries("k_core")
-    // build the shared graph layers in both sessions first, so each window
-    // below only sees the RDDs the GraphX loop itself persists
-    bfs(spark, sf); bfs(child, sf); kCore(spark, sf)
+    // each window below must see only the RDDs the GraphX loop itself
+    // persists, so the session's shared graph layers are built (or, when
+    // another session's build released them, rebuilt) just before it
+    import graft.queries.Graph.{narrowGraph, wideGraph}
     def persisted = sc.getPersistentRDDs.keySet.toSet
     def generation(run: => Unit): Set[Int] = { val p0 = persisted; run; persisted -- p0 }
     var first: org.apache.spark.sql.DataFrame = null
+    narrowGraph(spark, sf); wideGraph(spark, sf)
     val firstGen = generation { first = bfs(spark, sf) }
     val otherGen = generation(kCore(spark, sf))
     assert(firstGen.nonEmpty && otherGen.nonEmpty)
 
     var second: org.apache.spark.sql.DataFrame = null
+    narrowGraph(child, sf)
     val secondGen = generation { second = bfs(child, sf) }
     assert((firstGen & persisted).isEmpty, "the first run's RDDs are released")
     assert(secondGen.nonEmpty && secondGen.subsetOf(persisted))

@@ -1,7 +1,6 @@
 package graft.expr
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 

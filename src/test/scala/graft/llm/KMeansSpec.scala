@@ -62,7 +62,6 @@ class KMeansSpec extends SparkSpec {
   }
 
   test("kcenter_coreset matches a driver-side greedy farthest-point replay") {
-    import org.apache.spark.sql.functions._
     val vecs = graft.Tables.embeddings(spark, sf)
       .select("vec_id", "embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).sortBy(_._1)

@@ -1,7 +1,5 @@
 package graft.llm
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 /** Semantics checks for the label-space embedding operators, against a

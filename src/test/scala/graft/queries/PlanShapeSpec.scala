@@ -405,8 +405,7 @@ class PlanShapeSpec extends SparkSpec {
   // proof for those.
 
   import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec,
-    GlobalLimitExec, LocalLimitExec, CollectLimitExec, LocalTableScanExec,
-    RangeExec, ReusedSubqueryExec, SubqueryExec}
+    GlobalLimitExec, CollectLimitExec, LocalTableScanExec, RangeExec}
   import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
   import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
