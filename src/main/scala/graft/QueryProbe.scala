@@ -3,13 +3,17 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.graft.Bus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** The one way to measure a query, shared by [[Bench]] and [[Dev]]. A run
   * times build (the query function), plan (forcing `executedPlan`) and
   * exec (a noop write: every column executed, no sink cost); the probe's
   * one listener counts its jobs and each completed stage's task metrics.
+  * `compiles`/`compile_ms` are the JVM-wide generated-class compilations
+  * (Spark's codegen cache misses) and their Janino time during the run.
   * Jobs submitted while the query function runs carry a local property
   * (stream threads started then inherit it) and count as construction.
   * Counters are read after the listener bus drains, so no late event of
@@ -40,6 +44,7 @@ final class QueryProbe(spark: SparkSession) extends AutoCloseable {
   def run(name: String, fn: (SparkSession, String) => DataFrame, sfDir: String): Run = {
     Bus.drain(sc)
     synchronized { jobsBuild = 0; jobsExec = 0; stages.clear() }
+    val (compiles0, compileNs0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
     val secs = Array(0.0, 0.0, 0.0)
     def timed[A](i: Int)(body: => A): A = {
       val t0 = System.nanoTime()
@@ -57,7 +62,8 @@ final class QueryProbe(spark: SparkSession) extends AutoCloseable {
           Some(s"${e.getClass.getName}: ${e.getMessage}".take(400).map(c => if (c < ' ') ' ' else c))
       }
     Bus.drain(sc)
-    synchronized(Run(secs(0), secs(1), secs(2), error, jobsBuild, jobsExec, stages.toList))
+    synchronized(Run(secs(0), secs(1), secs(2), error, jobsBuild, jobsExec, stages.toList,
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0, (CodeGenerator.compileTime - compileNs0) / 1e6))
   }
 
   def close(): Unit = sc.removeSparkListener(listener)
@@ -75,7 +81,8 @@ object QueryProbe {
   }
 
   final case class Run(buildS: Double, planS: Double, execS: Double,
-      error: Option[String], jobsBuild: Int, jobsExec: Int, stages: Seq[Stage]) {
+      error: Option[String], jobsBuild: Int, jobsExec: Int, stages: Seq[Stage],
+      compiles: Long, compileMs: Double) {
     def totalS: Double = buildS + planS + execS
     def ok: Boolean = error.isEmpty
     def sum: Stage = stages.foldLeft(Stage(-1, "all", 0, 0, 0, 0, 0, 0, 0))(_ + _)
@@ -86,7 +93,7 @@ object QueryProbe {
         "jobs_build" -> jobsBuild, "jobs_exec" -> jobsExec, "stages" -> stages.size,
         "tasks" -> s.tasks, "run_ms" -> s.runMs, "deser_ms" -> s.deserMs, "gc_ms" -> s.gcMs,
         "shuffle_read_bytes" -> s.shuffleReadBytes, "shuffle_write_bytes" -> s.shuffleWriteBytes,
-        "spill_bytes" -> s.spillBytes)
+        "spill_bytes" -> s.spillBytes, "compiles" -> compiles, "compile_ms" -> f"$compileMs%.1f")
     }
     def json: String = fields.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
   }

@@ -22,6 +22,19 @@ import org.apache.spark.sql.SparkSession
   *    removes a whole class of run-time-crash drift vs Spark 4 defaults.
   *  - shuffle partitions sized to the local core count — on a real cluster
   *    this would be tuned to ~2-3x total executor cores / AQE-coalesced.
+  *  - `spark.sql.artifact.isolation.enabled=false`: Spark caches compiled
+  *    generated classes under (task context class loader, code text). With
+  *    isolation on (the default), every session gets its own artifact state
+  *    and its tasks run under their own class loader, and a streaming query
+  *    runs in a clone of its session, so every fresh session and every gate
+  *    run compiled all of its generated classes again although the code was
+  *    identical (`stream_exec_join`: 25 classes per warm run, about 300 ms
+  *    of Janino time, most of it on task threads waiting on the cache's
+  *    lock). With it off, all sessions share the context's loader and the
+  *    cache. graft adds no artifacts (no `addArtifact`/`addJar`); the
+  *    trade-off is that an artifact added through one graft session is
+  *    visible to every graft session on the context. Read only when a
+  *    session is created; cloned and new sessions inherit it.
   */
 object Sessions {
   def local(appName: String = "graft"): SparkSession = {
@@ -51,6 +64,7 @@ object Sessions {
       // exchange — scale-adaptive in both directions (few partitions at
       // sf0.1, many at 100 TB), not a local[32] constant.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -58,7 +72,9 @@ object Sessions {
 
   /** Apply the semantics knobs to an externally built session (e.g. the
     * driver's own session invoking [[SparkEntry.entry]]). Runtime-settable
-    * confs only; idempotent.
+    * confs only; idempotent. Artifact isolation is fixed when a session is
+    * created, so a caller-built session keeps it on and still recompiles
+    * its generated classes in each new session and each gate run.
     */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

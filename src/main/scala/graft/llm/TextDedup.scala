@@ -253,6 +253,29 @@ WHERE CAST(n_shared AS DOUBLE) / CAST(s1.n + s2.n - n_shared AS DOUBLE) >= $Jacc
     // materialize, so the timing wraps the checkpoint job itself
     graft.SessionCache.layer("collapse", s, d)(collapse(gramSets(s, d)))
 
+  /** Each vocabulary gram's rank `rk` for `dedup_containment`.
+    * r17 (ADVICE r16): the rank is DISTRIBUTED — a range-partitioned
+    * sort on the total order (df, g) plus monotonically_increasing_id.
+    * The gram dictionary grows with the corpus (shingle vocab is
+    * near-linear in tokens), so the r16 single-task row_number window
+    * over it was the exact shape the global-window audit exists to
+    * catch. The id is NOT dense, but it is ORDER-ISOMORPHIC to the
+    * (df, g) total order (range partitions respect the sort order and
+    * the id's high bits are the partition index), and every consumer
+    * is invariant under any order-isomorphic injective gram->long map:
+    * the prefix slice takes the k smallest (same gram set), the
+    * candidate join tests rank equality, and n_shared/containment
+    * come from array_intersect SIZES of injectively mapped arrays —
+    * so the output is bit-identical to the dense-rank form (oracle
+    * re-proven). Unlike Ranks.globalRowNumber this needs no totals
+    * pass: the only extra cost over the window form is the range
+    * sampling pass, and no task ever holds the whole dictionary.
+    * DedupSpec pins the isomorphism. */
+  private[llm] def gramRanks(gdf: DataFrame): DataFrame =
+    gdf.repartitionByRange(col("df"), col("g"))
+      .sortWithinPartitions("df", "g")
+      .withColumn("rk", monotonically_increasing_id())
+
   /** Adaptive-collapse gate (round 10): the exact-collapse tier buys its
     * (1+r)-to-(1+r)² shuffle reduction only when the duplication rate r is
     * material — on a dup-free corpus the fp groupBy + expansion join are
@@ -594,25 +617,7 @@ WHERE CAST(n_shared AS DOUBLE) / CAST(s1.n + s2.n - n_shared AS DOUBLE) >= $Jacc
       // one sort_array(collect_list) aggregate whose slice IS the
       // rarest-grams prefix. Same prefix set, same candidate set, same
       // intersection sizes — oracle unchanged.
-      // r17 (ADVICE r16): the rank is DISTRIBUTED — a range-partitioned
-      // sort on the total order (df, g) plus monotonically_increasing_id.
-      // The gram dictionary grows with the corpus (shingle vocab is
-      // near-linear in tokens), so the r16 single-task row_number window
-      // over it was the exact shape the global-window audit exists to
-      // catch. The id is NOT dense, but it is ORDER-ISOMORPHIC to the
-      // (df, g) total order (range partitions respect the sort order and
-      // the id's high bits are the partition index), and every consumer
-      // is invariant under any order-isomorphic injective gram->long map:
-      // the prefix slice takes the k smallest (same gram set), the
-      // candidate join tests rank equality, and n_shared/containment
-      // come from array_intersect SIZES of injectively mapped arrays —
-      // so the output is bit-identical to the dense-rank form (oracle
-      // re-proven). Unlike Ranks.globalRowNumber this needs no totals
-      // pass: the only extra cost over the window form is the range
-      // sampling pass, and no task ever holds the whole dictionary.
-      val grk = gdf.repartitionByRange(col("df"), col("g"))
-        .sortWithinPartitions("df", "g")
-        .withColumn("rk", monotonically_increasing_id())
+      val grk = gramRanks(gdf)
       // prefix length: n − ⌈t·n⌉ + 1 = n − (4n+4) div 5 + 1 at t = 4/5,
       // in pure integer arithmetic (a double t·n can round the boundary).
       // Checkpointed once: feeds the prefix explode, the probe side and

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
 /** Shared run-time scaffolding for the `stream_exec_*` gate queries:
   * every gate reaches the engine through [[memory]] or [[foreachBatch]].
   *
-  * Three fixed costs dominated those gates at sf0.1 (VERDICT r6: +27 s with
+  * Four fixed costs dominated those gates at sf0.1 (VERDICT r6: +27 s with
   * no code change):
   *
   *  1. **State stores are per-shuffle-partition per-operator.** Every
@@ -37,6 +37,12 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   *     most of them on the state-store commit path. The runner scopes
   *     `spark.sql.streaming.checkpointFileManagerClass` to
   *     [[LocalCheckpointFiles]], which creates them through `java.nio`.
+  *  4. **Generated classes compiled again per run.** A gate runs in a clone
+  *     of its session; with Spark's artifact isolation on, each clone's
+  *     tasks had their own class loader and missed the codegen cache, so
+  *     every run recompiled identical code (`stream_exec_join`: 25 classes
+  *     per warm run). [[graft.Sessions.local]] turns isolation off, and a
+  *     warm gate run compiles no class.
   */
 object StreamGate {
 

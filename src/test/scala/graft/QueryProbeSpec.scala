@@ -43,6 +43,19 @@ class QueryProbeSpec extends SparkSpec {
     assert(counts(a) === counts(b))
   }
 
+  test("a lazy query run again in a fresh session compiles no class") {
+    // Spark's codegen cache is keyed by the task class loader; with
+    // artifact isolation off every session shares the context's loader
+    val fn: (SparkSession, String) => DataFrame =
+      (s, _) => s.range(0, 1000, 1, 4).selectExpr("id % 11 AS k", "id * 3 AS v").groupBy("k").sum("v")
+    val first = withProbe(_.run("compiles", fn, sf))
+    val p = new QueryProbe(spark.newSession())
+    val again = try p.run("compiles", fn, sf) finally p.close()
+    assert(first.ok && again.ok)
+    assert(first.compiles > 0 && first.compileMs > 0, "a new query shape compiles its classes")
+    assert(again.compiles === 0)
+  }
+
   test("a throwing builder is returned as an error, not thrown") {
     val r = withProbe(_.run("boom", (_, _) => throw new IllegalStateException("boom"), sf))
     assert(!r.ok)

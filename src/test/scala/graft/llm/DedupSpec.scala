@@ -1,6 +1,8 @@
 package graft.llm
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.{SparkSpec, Tables}
 
@@ -214,6 +216,39 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(brute.nonEmpty, "testdata should contain containment pairs")
     assert(pruned === brute)
+  }
+
+  test("containment gram rank rk is strictly increasing in (df, g) order") {
+    // rk is monotonically_increasing_id over a range-partitioned sort; the
+    // containment output is exact only while rk is order-isomorphic to
+    // (df, g). That rests on range partitions keeping the sort order under
+    // AQE coalescing and on the sort surviving beneath the id's project.
+    // Checked on the query's own vocabulary at the session's settings, and
+    // on a larger vocabulary spread over several range partitions, with
+    // and without coalescing.
+    // asserts the order; returns how many partitions the ids came from
+    def rankPartitions(gdf: DataFrame): Int = {
+      val rows = TextDedup.gramRanks(gdf).collect()
+        .map(r => (r.getAs[Long]("rk"), r.getAs[Long]("df"), UTF8String.fromString(r.getAs[String]("g"))))
+        .sortBy(_._1)
+      rows.sliding(2).foreach {
+        case Array((_, df1, g1), (_, df2, g2)) =>
+          assert(df1 < df2 || (df1 == df2 && g1.compareTo(g2) < 0), s"rk out of (df, g) order at ($df2, $g2)")
+        case _ =>
+      }
+      rows.map(_._1 >>> 33).distinct.length
+    }
+    val (_, reps) = TextDedup.collapsedOf(spark, sf)
+    val vocab = reps.select(explode(col("grams")).as("g")).groupBy("g").agg(count(lit(1)).as("df"))
+    assert(rankPartitions(vocab) >= 1, "empty vocabulary")
+    val wide = spark.range(0, 40000, 1, 8)
+      .selectExpr("concat('g', CAST(id * 7919 % 40000 AS STRING)) AS g", "id % 23 AS df")
+    for (coalesce <- Seq("false", "true")) withConf("spark.sql.shuffle.partitions" -> "16",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64k",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1k",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> coalesce) {
+      assert(rankPartitions(wide) > 1, s"coalesce=$coalesce: one range partition exercises nothing")
+    }
   }
 
   test("collapse stats are internally consistent and exact on planted duplicates") {

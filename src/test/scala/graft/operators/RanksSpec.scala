@@ -71,15 +71,6 @@ class RanksSpec extends SparkSpec {
     assert(got === expected)
   }
 
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("with rand() upstream, row numbers are 1..n and the sum ends at the total") {
     // both passes of the operator must see identical rows: a rand() column
     // recomputed between the totals pass and the emit pass would misalign
