@@ -7,6 +7,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.storage.BroadcastBlockId
 
 /** The one way to measure a query, shared by [[Bench]] and [[Dev]]. A run
   * times build (the query function), plan (forcing `executedPlan`) and
@@ -14,6 +15,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * one listener counts its jobs and each completed stage's task metrics.
   * `compiles`/`compile_ms` are the JVM-wide generated-class compilations
   * (Spark's codegen cache misses) and their Janino time during the run.
+  * `broadcasts` counts the broadcast variables stored during the run (their
+  * first piece) and `broadcast_bytes` the stored size of all their pieces.
   * Jobs submitted while the query function runs carry a local property
   * (stream threads started then inherit it) and count as construction.
   * Counters are read after the listener bus drains, so no late event of
@@ -24,6 +27,7 @@ final class QueryProbe(spark: SparkSession) extends AutoCloseable {
 
   private val sc = spark.sparkContext
   private var jobsBuild, jobsExec = 0
+  private var broadcasts, broadcastBytes = 0L
   private val stages = mutable.ArrayBuffer.empty[Stage]
 
   private[graft] val listener: SparkListener = new SparkListener {
@@ -36,6 +40,15 @@ final class QueryProbe(spark: SparkSession) extends AutoCloseable {
         m.jvmGCTime, m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
         m.memoryBytesSpilled + m.diskBytesSpilled)
     }
+    override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = QueryProbe.this.synchronized {
+      val b = e.blockUpdatedInfo
+      b.blockId match {
+        case BroadcastBlockId(_, field) if field.startsWith("piece") && b.storageLevel.isValid =>
+          if (field == "piece0") broadcasts += 1
+          broadcastBytes += b.memSize + b.diskSize
+        case _ =>
+      }
+    }
   }
   sc.addSparkListener(listener)
 
@@ -43,7 +56,7 @@ final class QueryProbe(spark: SparkSession) extends AutoCloseable {
     * failure is returned as `error`, with the time spent until it. */
   def run(name: String, fn: (SparkSession, String) => DataFrame, sfDir: String): Run = {
     Bus.drain(sc)
-    synchronized { jobsBuild = 0; jobsExec = 0; stages.clear() }
+    synchronized { jobsBuild = 0; jobsExec = 0; broadcasts = 0; broadcastBytes = 0; stages.clear() }
     val (compiles0, compileNs0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
     val secs = Array(0.0, 0.0, 0.0)
     def timed[A](i: Int)(body: => A): A = {
@@ -63,7 +76,8 @@ final class QueryProbe(spark: SparkSession) extends AutoCloseable {
       }
     Bus.drain(sc)
     synchronized(Run(secs(0), secs(1), secs(2), error, jobsBuild, jobsExec, stages.toList,
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0, (CodeGenerator.compileTime - compileNs0) / 1e6))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0, (CodeGenerator.compileTime - compileNs0) / 1e6,
+      broadcasts, broadcastBytes))
   }
 
   def close(): Unit = sc.removeSparkListener(listener)
@@ -82,7 +96,7 @@ object QueryProbe {
 
   final case class Run(buildS: Double, planS: Double, execS: Double,
       error: Option[String], jobsBuild: Int, jobsExec: Int, stages: Seq[Stage],
-      compiles: Long, compileMs: Double) {
+      compiles: Long, compileMs: Double, broadcasts: Long, broadcastBytes: Long) {
     def totalS: Double = buildS + planS + execS
     def ok: Boolean = error.isEmpty
     def sum: Stage = stages.foldLeft(Stage(-1, "all", 0, 0, 0, 0, 0, 0, 0))(_ + _)
@@ -93,7 +107,8 @@ object QueryProbe {
         "jobs_build" -> jobsBuild, "jobs_exec" -> jobsExec, "stages" -> stages.size,
         "tasks" -> s.tasks, "run_ms" -> s.runMs, "deser_ms" -> s.deserMs, "gc_ms" -> s.gcMs,
         "shuffle_read_bytes" -> s.shuffleReadBytes, "shuffle_write_bytes" -> s.shuffleWriteBytes,
-        "spill_bytes" -> s.spillBytes, "compiles" -> compiles, "compile_ms" -> f"$compileMs%.1f")
+        "spill_bytes" -> s.spillBytes, "compiles" -> compiles, "compile_ms" -> f"$compileMs%.1f",
+        "broadcasts" -> broadcasts, "broadcast_bytes" -> broadcastBytes)
     }
     def json: String = fields.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
   }

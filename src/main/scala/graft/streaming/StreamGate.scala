@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.util.Using
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -9,7 +11,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
 /** Shared run-time scaffolding for the `stream_exec_*` gate queries:
   * every gate reaches the engine through [[memory]] or [[foreachBatch]].
   *
-  * Four fixed costs dominated those gates at sf0.1 (VERDICT r6: +27 s with
+  * Five fixed costs dominated those gates at sf0.1 (VERDICT r6: +27 s with
   * no code change):
   *
   *  1. **State stores are per-shuffle-partition per-operator.** Every
@@ -43,6 +45,14 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   *     every run recompiled identical code (`stream_exec_join`: 25 classes
   *     per warm run). [[graft.Sessions.local]] turns isolation off, and a
   *     warm gate run compiles no class.
+  *  5. **The Hadoop conf broadcast once per plan copy.** Spark's stream-
+  *     stream join broadcasts the session's Hadoop conf from its
+  *     constructor, so every plan copy (state-operator ids, watermark
+  *     propagation, each child rewrite) broadcasts it again: about 29 times
+  *     per micro-batch, 58 broadcasts per warm `stream_exec_join` run. The
+  *     count stays; [[graft.Sessions]] drops the conf's per-key property
+  *     sources, which took a serialized copy from 69,079 B to 112,855 B
+  *     and made it several times slower to write.
   */
 object StreamGate {
 
@@ -102,7 +112,7 @@ object StreamGate {
     val pid = ProcessHandle.current().pid()
     try {
       val cutoff = java.time.Instant.now().minusSeconds(24 * 3600)
-      Files.list(base).iterator().forEachRemaining { sib =>
+      Using.resource(Files.list(base))(_.iterator().forEachRemaining { sib =>
         val name = sib.getFileName.toString
         if (name.startsWith("graft_stream_gate_")) {
           // Liveness first, age only as a fallback: an mtime-only reap
@@ -117,7 +127,7 @@ object StreamGate {
           val dead = sibPid.isDefined && !alive
           if (dead || (sibPid.isEmpty && old)) deleteRecursively(sib)
         }
-      }
+      })
     } catch { case _: Exception => () }
     val p = base.resolve(s"graft_stream_gate_$pid")
     deleteRecursively(p)
@@ -129,7 +139,7 @@ object StreamGate {
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse
+      Using.resource(Files.walk(p))(_.iterator().asScala.toSeq.reverse)
         .foreach(f => try Files.deleteIfExists(f) catch { case _: Exception => () })
     }
 

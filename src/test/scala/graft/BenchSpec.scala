@@ -35,7 +35,7 @@ class BenchSpec extends AnyFunSuite {
   }
 
   private def run(secs: Double, error: Option[String] = None) =
-    QueryProbe.Run(secs, 0.0, 0.0, error, 0, 0, Nil, 0, 0.0)
+    QueryProbe.Run(secs, 0.0, 0.0, error, 0, 0, Nil, 0, 0.0, 0, 0)
 
   test("a query that throws on every run is failed, not a fast time, and is left out of total") {
     val t = Bench.tally(Seq(

@@ -56,6 +56,17 @@ class QueryProbeSpec extends SparkSpec {
     assert(again.compiles === 0)
   }
 
+  test("warm runs of a gate report the same nonzero broadcast count") {
+    // the stream-stream join broadcasts the Hadoop conf once per plan copy
+    val fn = SparkEntry.queries("stream_exec_join")
+    val runs = withProbe(p => Seq.fill(3)(p.run("stream_exec_join", fn, sf)))
+    assert(runs.forall(_.ok), runs.flatMap(_.error))
+    val Seq(_, a, b) = runs
+    assert(a.broadcasts > 0)
+    assert(a.broadcasts === b.broadcasts)
+    assert(a.broadcastBytes > 0 && b.broadcastBytes > 0)
+  }
+
   test("a throwing builder is returned as an error, not thrown") {
     val r = withProbe(_.run("boom", (_, _) => throw new IllegalStateException("boom"), sf))
     assert(!r.ok)

@@ -1,6 +1,13 @@
 package graft
 
-/** Pins the session settings that [[Sessions.local]] fixes at creation. */
+import java.io.{ByteArrayOutputStream, ObjectOutputStream}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.util.SerializableConfiguration
+
+/** Pins the session settings that [[Sessions.local]] fixes at creation and
+  * the Hadoop property sources it drops from the context's conf. */
 class SessionsSpec extends SparkSpec {
   private val Isolation = "spark.sql.artifact.isolation.enabled"
 
@@ -17,5 +24,36 @@ class SessionsSpec extends SparkSpec {
       finally p.close()
     assert(runs.forall(_.ok), runs.flatMap(_.error))
     assert(runs(1).compiles === 0)
+  }
+
+  /** No key of the context's Hadoop conf carries a property source. */
+  private def assertNoSources(): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = conf.iterator().asScala.map(_.getKey).filter(k => conf.getPropertySources(k) != null).toSeq
+    assert(keys.size === 0, keys.take(5))
+  }
+
+  test("the context's Hadoop conf tracks no property source after local and after tune") {
+    assertNoSources()
+    Sessions.tune(spark)
+    assertNoSources()
+  }
+
+  test("no property source comes back after parquet, RocksDB and multi-format runs") {
+    // a foreachBatch parquet gate, the RocksDB gate and a multi-format scan
+    val qs = Seq("stream_exec_upsert", "stream_exec_tws", "multi_format_union")
+    val p = new QueryProbe(spark)
+    val runs = try qs.map(q => p.run(q, SparkEntry.queries(q), sf)) finally p.close()
+    assert(runs.forall(_.ok), runs.flatMap(_.error))
+    assertNoSources()
+  }
+
+  test("a serialized conf broadcast carries no property sources") {
+    // about 113,000 B with Hadoop's ~1,100 property sources tracked
+    val bytes = new ByteArrayOutputStream()
+    val out = new ObjectOutputStream(bytes)
+    out.writeObject(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    out.close()
+    assert(bytes.size < 80000, bytes.size)
   }
 }
