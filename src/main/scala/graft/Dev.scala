@@ -5,10 +5,12 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
-/** Dev main (usage below). `profile` runs each query twice in
-  * one session and prints the [[QueryProbe]] record [[Bench]] publishes
-  * for each run (`--stages`: every stage's counters too), then the
-  * [[LayerMetrics]] manifest of the shared-layer builds the runs paid for.
+/** Dev main (usage below). `profile` runs each query twice and prints
+  * the [[QueryProbe]] record [[Bench]] publishes for each run (`--stages`:
+  * every stage's counters too), then the [[LayerMetrics]] manifest of the
+  * shared-layer builds the runs paid for. p1 runs in a fresh session with
+  * the shared cache cleared, so it is cold: it builds every shared layer
+  * and table reader it reads. p2 re-runs in that session, warm.
   * `plan` prints each formatted physical plan, or writes it to
   * `<dir>/<q>_<s>.txt`. Query names are checked before a session starts.
   */
@@ -51,8 +53,10 @@ object Dev {
     // codegen, shuffle machinery: not charged to the first query
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
     val probe = new QueryProbe(spark)
+    var session = spark
     val runs = for (q <- p.queries; pass <- 1 to 2) yield {
-      val r = probe.run(q, SparkEntry.queries(q), p.dir)
+      if (pass == 1) { spark.catalog.clearCache(); session = spark.newSession() }
+      val r = probe.run(q, (_, d) => SparkEntry.queries(q)(session, d), p.dir)
       println(s"PROBE $q p$pass ${r.fields.map { case (k, v) => s"$k=$v" }.mkString(" ")}" +
         r.error.fold("")(e => s" error=$e"))
       if (p.stages) r.stages.foreach { s =>

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.graphx.{Edge, TripletFields, Graph => GraphX}
+import org.apache.spark.graphx.TripletFields
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1355,26 +1355,17 @@ object Analytics {
     // 1e6, each round a node keeps 15% (150000) and routes
     // floor(mass*85 / (100*outdeg)) along each out-edge (floor remainder
     // deliberately evaporates — deterministic, order-independent integer
-    // sums, no float drift). Three rounds over the supplier graph (edges:
-    // supplier → partkey folded into the supplier id space), run as
-    // GraphX rounds (Graph.supersteps); the oracle macro-expands the same
-    // three rounds as CTE stages.
+    // sums, no float drift). Three rounds over the directed supply graph
+    // layer (supplier → partkey folded into the supplier id space, its
+    // out-degree the vertex attribute), run as GraphX rounds
+    // (Graph.supersteps); the oracle macro-expands the same three rounds
+    // as CTE stages.
     "pagerank_integer" -> ((s, d) => {
-      val li = Tables.lineitem(s, d).select("l_suppkey", "l_partkey").rdd
-      val members = Tables.supplier(s, d).select("s_suppkey").rdd.map(_.getLong(0))
+      val g0 = Graph.supplyGraph(s, d)
       Graph.supersteps(s, "pagerank_integer",
           org.apache.spark.sql.types.StructType(Graph.longs("node", "mass"))) {
-        // the supplier count (none without a supplier, so no edge) and the
-        // edge dedup run inside the job, on the RDD side: no
-        // construction-time action
-        val nSupp = Graph.foldToOne(members.map(_ => 1L), 0L)(_ + _).filter(_ > 0)
-        val edges = nSupp.cartesian(li)
-          .map { case (n, r) => (r.getLong(0), r.getLong(1) % n) }
-          .filter { case (src, dst) => src != dst }
-          .distinct()
-          .map { case (src, dst) => Edge(src, dst, ()) }
-        val g0 = GraphX(members.map(_ -> 1000000L), edges, Graph.NonMember)
-        var g = g0.outerJoinVertices(g0.outDegrees)((_, mass, deg) => (mass, deg.getOrElse(0)))
+        var g = g0.mapVertices((_, deg) =>
+          if (deg == Graph.NonMember) (deg, 0L) else (1000000L, deg))
         for (_ <- 1 to 3) {
           val contrib = g.aggregateMessages[Long](
             c => if (c.srcAttr._1 != Graph.NonMember)

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.graphx.{Edge, TripletFields, Graph => GraphX}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -7,48 +8,48 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
+import scala.collection.mutable
 import scala.reflect.ClassTag
 
 import graft.Tables
 
-/** Graph analytics over the shared supplier graph layers. Each edge layer
-  * is kept twice per (session, dir): as a persisted DataFrame and as a
-  * cached GraphX graph built from it, whose vertex attribute is the
-  * node's out-degree ([[graphLayer]]). The fixed-round superstep loops
-  * (bfs_hops, sssp_weighted, label_propagation, k_core,
-  * closeness_centrality, and [[Analytics]]' pagerank_integer) run as
-  * GraphX `aggregateMessages` rounds through [[supersteps]]: every round
-  * of a loop executes inside the result's one job, with no SQL plan
-  * update between stages. All of them but pagerank_integer start from a
-  * shared graph, and degree_assortativity reads its degrees there in one
-  * triplet pass. stress_centrality, clustering_coefficient and
-  * link_prediction stay composed DataFrame plans.
+/** Graph analytics over the supplier graph. Its GraphX consumers read
+  * cached GraphX graph layers ([[graphLayer]]), built once per (session,
+  * dir) straight from the lineitem scan, whose vertex attribute is the
+  * node's out-degree. The fixed-round superstep loops (bfs_hops,
+  * sssp_weighted, label_propagation, k_core, closeness_centrality, and
+  * [[Analytics]]' pagerank_integer) run as GraphX `aggregateMessages`
+  * rounds through [[supersteps]]: every round of a loop executes inside
+  * the result's one job, with no SQL plan update between stages, and
+  * degree_assortativity reads its degrees in one triplet pass. The SQL
+  * consumers (triangle_count, clustering_coefficient, stress_centrality)
+  * read persisted DataFrame edge layers of the same rows
+  * ([[symmetricEdges]]); neither representation is built from the other.
+  * link_prediction stays a composed DataFrame plan.
   */
 object Graph {
 
-  /** The shared undirected supplier graph, built ONCE per (session, dir)
-    * and fanned out to every consumer (bfs_hops, label_propagation,
-    * closeness_centrality, ...) — the production posture: a pipeline
-    * materializes its graph edges once, not per algorithm. Each
-    * consumer's supersteps start from cached blocks instead of re-running
-    * the lineitem scan + pair distinct (round 14: closeness_centrality's
-    * driver-flagged cold cost was dominated by exactly that rebuild).
-    * Sampled lineitem rows project to canonical undirected edges
-    * (least, greatest), distinct, emitted in both directions. */
+  /** The narrow undirected supplier graph as a persisted DataFrame, built
+    * ONCE per (session, dir) for the SQL consumers (triangle_count,
+    * clustering_coefficient): a pipeline materializes its graph edges
+    * once, not per algorithm. Sampled lineitem rows project to canonical
+    * undirected edges (least, greatest), distinct, emitted in both
+    * directions. The GraphX consumers read [[narrowGraph]] instead, whose
+    * edges are these rows. */
   private[queries] def symmetricEdges(s: SparkSession, d: String): DataFrame =
     edgesLayer("graph_edges", s, d, 1)
 
-  /** The WIDE variant of the shared graph (node domain 4× the supplier
-    * count — the k_core rationale: the narrow graph is near-complete at
-    * small sf, so every degree equals the mean, the diameter collapses to
-    * ~1, and any operator that needs skewed degrees or interior
-    * shortest-path structure degenerates). Shared by k_core,
-    * stress_centrality and degree_assortativity. */
+  /** The WIDE variant (node domain 4× the supplier count — the k_core
+    * rationale: the narrow graph is near-complete at small sf, so every
+    * degree equals the mean, the diameter collapses to ~1, and any
+    * operator that needs skewed degrees or interior shortest-path
+    * structure degenerates). Read by stress_centrality; k_core and
+    * degree_assortativity read [[wideGraph]]. */
   private[queries] def symmetricEdgesWide(s: SparkSession, d: String): DataFrame =
     edgesLayer("graph_edges_wide", s, d, 4)
 
-  /** Both graph layers: part keys fold into a node domain `widen` times
-    * the supplier count. */
+  /** Both DataFrame layers: part keys fold into a node domain `widen`
+    * times the supplier count. */
   private def edgesLayer(name: String, s: SparkSession, d: String, widen: Int): DataFrame =
     graft.SessionCache.persisted(name, s, d) {
       // supplier count stays IN the plan (broadcast 1-row frame, the
@@ -67,50 +68,95 @@ object Graph {
         .unionByName(e.select(col("b").as("src"), col("a").as("dst")))
     }
 
-  /** The narrow layer's graph: the suppliers and every edge endpoint. */
+  /** The narrow graph: the suppliers and every edge endpoint, with the
+    * edges of [[symmetricEdges]]. */
   private[graft] def narrowGraph(s: SparkSession, d: String): GraphX[Long, Unit] =
-    graphLayer("graphx_edges", s, d)(symmetricEdges(s, d),
-      Some(Tables.supplier(s, d).select("s_suppkey")))
+    graphLayer("graphx_edges", s, d, widen = 1, symmetric = true, withSuppliers = true)
 
-  /** The wide layer's graph: the edge endpoints. */
+  /** The wide graph: the edge endpoints, with the edges of
+    * [[symmetricEdgesWide]]. */
   private[graft] def wideGraph(s: SparkSession, d: String): GraphX[Long, Unit] =
-    graphLayer("graphx_edges_wide", s, d)(symmetricEdgesWide(s, d), None)
+    graphLayer("graphx_edges_wide", s, d, widen = 4, symmetric = true, withSuppliers = false)
+
+  /** The directed supply graph of pagerank_integer: every lineitem line
+    * (unsampled) links its supplier to its part key folded into the
+    * supplier id space; the suppliers and every endpoint are vertices. */
+  private[graft] def supplyGraph(s: SparkSession, d: String): GraphX[Long, Unit] =
+    graphLayer("graphx_supply", s, d, widen = 1, symmetric = false, withSuppliers = true)
 
   /** A graph layer as a cached GraphX graph whose vertex attribute is the
-    * node's out-degree, built ONCE per (session, dir) from the DataFrame
-    * `layer` — GraphX's graph as a cached view many algorithms reuse.
-    * With `members`, the vertices are the members and every edge
-    * endpoint, and a non-member endpoint carries [[NonMember]]. Its RDDs
-    * are the layer name's RDD generation: a fresh session's build
+    * node's out-degree, built ONCE per (session, dir) from the lineitem
+    * scan ([[scanEdges]]) — GraphX's graph as the cached view many
+    * algorithms reuse, with no second cached representation under it.
+    * The build adds no job of its own: the edge build runs as stages of
+    * the first consumer's job. A `symmetric` layer samples the lines
+    * (l_orderkey % 10 = 0, as its DataFrame twin does); the directed one
+    * reads them all. `withSuppliers` makes the vertices the suppliers and
+    * every edge endpoint, a non-supplier endpoint carrying [[NonMember]].
+    * Its RDDs are the layer name's RDD generation: a fresh session's build
     * releases them, and a hit on a released graph builds it again
     * ([[graft.SessionCache.layer]]). The triplet view is built and cached
     * here, so no consumer upgrades or caches into the shared graph; each
     * derives its own with `mapVertices` inside its [[supersteps]]. */
-  private def graphLayer(name: String, s: SparkSession, d: String)(
-      layer: => DataFrame, members: => Option[DataFrame]): GraphX[Long, Unit] =
+  private def graphLayer(name: String, s: SparkSession, d: String, widen: Int,
+      symmetric: Boolean, withSuppliers: Boolean): GraphX[Long, Unit] =
     graft.SessionCache.layer(name, s, d) {
-      // crossed before the build window: a DataFrame-layer cache that the
-      // crossing materializes belongs to that layer, not to this graph
-      val edges = layerRows(layer).map { case (a, b) => Edge(a, b, ()) }
-      val nodes = members.map(_.rdd.map(_.getLong(0) -> 0L))
+      // scan crossings carry no exchange, so they run no job
+      val suppliers = Tables.supplier(s, d).select("s_suppkey").queryExecution.toRdd
+        .map(_.getLong(0))
+      val li = Tables.lineitem(s, d)
+      val lines = (if (symmetric) li.filter(col("l_orderkey") % 10 === 0) else li)
+        .filter(col("l_suppkey").isNotNull && col("l_partkey").isNotNull)
+        .select("l_suppkey", "l_partkey").queryExecution.toRdd
+        .map(r => (r.getLong(0), r.getLong(1)))
       graft.SessionCache.retiring(s.sparkContext, name) {
+        val edges = scanEdges(suppliers, lines, widen, symmetric)
         // edge partitions are cached only once upgraded (below), so no
         // intermediate copy is kept; vertex RDDs, a consumer's per-round
         // state included, cache as GraphX's default
         val (edgeLevel, vertexLevel) = (StorageLevel.NONE, StorageLevel.MEMORY_ONLY)
-        val g0 = nodes.fold(GraphX.fromEdges(edges, 0L, edgeLevel, vertexLevel))(
-          GraphX(_, edges, NonMember, edgeLevel, vertexLevel))
+        val g0 =
+          if (withSuppliers)
+            GraphX(suppliers.map(_ -> 0L), edges, NonMember, edgeLevel, vertexLevel)
+          else GraphX.fromEdges(edges, 0L, edgeLevel, vertexLevel)
         val g = g0.outerJoinVertices(g0.outDegrees) { (_, a, deg) =>
           if (a == NonMember) a else deg.getOrElse(0).toLong
         }
         // building the triplet view upgrades the edge partitions to carry
         // both endpoints' attributes; persisting after it keeps the
-        // upgraded ones. Their blocks fill in the first consumer's job, so
-        // the build adds no job of its own.
+        // upgraded ones. Their blocks fill in the first consumer's job.
         g.triplets.setName(s"$name triplets")
         g.persist(StorageLevel.MEMORY_ONLY)
       }
     }
+
+  /** A graph layer's edges from the (suppkey, partkey) `lines`: the part
+    * key folds into a node domain `widen` times the supplier count, and a
+    * line whose two nodes are equal is dropped. Without a supplier there is
+    * no edge. Duplicates go by a hash partitioning on the pair and a
+    * per-partition set, with no map-side combine: that would run in the
+    * one task that reads a one-split scan. A `symmetric` edge set is
+    * canonical (least, greatest) pairs emitted in both directions. Every
+    * step is an RDD stage, so the build runs inside the job that reads
+    * the graph. */
+  private def scanEdges(suppliers: RDD[Long], lines: RDD[(Long, Long)], widen: Int,
+      symmetric: Boolean): RDD[Edge[Unit]] = {
+    val nSupp = foldToOne(suppliers.map(_ => 1L), 0L)(_ + _).filter(_ > 0)
+    nSupp.cartesian(lines)
+      .flatMap { case (n, (x, part)) =>
+        val y = part % (n * widen)
+        if (x == y) None
+        else Some((if (symmetric) (math.min(x, y), math.max(x, y)) else (x, y)) -> (()))
+      }
+      .partitionBy(new HashPartitioner(lines.sparkContext.defaultParallelism))
+      .mapPartitions { it =>
+        val pairs = mutable.HashSet.empty[(Long, Long)]
+        it.foreach(kv => pairs += kv._1)
+        pairs.iterator.flatMap { case (a, b) =>
+          if (symmetric) Iterator(Edge(a, b, ()), Edge(b, a, ())) else Iterator.single(Edge(a, b, ()))
+        }
+      }
+  }
 
   /** Runs a GraphX superstep loop and returns its rows as a frame with
     * `schema`. GraphX builds each round lazily, so construction runs no
@@ -135,27 +181,20 @@ object Graph {
   private[queries] def longs(names: String*): Seq[StructField] =
     names.map(StructField(_, LongType, nullable = false))
 
-  /** A graph layer's (src, dst) rows. The layer is a materialized cache,
-    * so crossing to its RDD runs no job. Crossed from a fresh projection,
-    * not the memoized frame's own `.rdd`: that one keeps reading the
-    * first cache it saw after a `clearCache()`. */
-  private def layerRows(layer: DataFrame): RDD[(Long, Long)] =
-    layer.select("src", "dst").rdd.map(r => (r.getLong(0), r.getLong(1)))
-
   /** One-partition RDD holding exactly one element, `xs` folded by `op`
     * from `zero`, computed inside the job that reads it: per-partition
     * partials, then a one-task shuffle. Pair it with a big RDD as
     * `one.cartesian(big)`, never the reverse: a cartesian re-reads its
     * right side (here, a shuffle) for every left row. */
-  private[queries] def foldToOne[T: ClassTag](xs: RDD[T], zero: T)(op: (T, T) => T): RDD[T] =
+  private def foldToOne[T: ClassTag](xs: RDD[T], zero: T)(op: (T, T) => T): RDD[T] =
     xs.mapPartitions(it => Iterator(it.foldLeft(zero)(op))).repartition(1)
       .mapPartitions(it => Iterator(it.foldLeft(zero)(op)))
 
   /** Vertex attribute of a node no round has reached yet. */
   private val Unreached = Long.MaxValue
   /** Vertex attribute of an edge endpoint outside the supplier table (node
-    * 0 of `l_partkey % n_supp`) in the narrow graph layer: it neither votes
-    * nor appears in output. */
+    * 0 of `l_partkey % n_supp`) in the narrow and supply graph layers: it
+    * neither votes nor holds mass nor appears in output. */
   private[queries] val NonMember = Long.MinValue
   /** Vertex attribute of a node k_core has peeled. */
   private val Peeled = -1L

@@ -1,17 +1,55 @@
 package graft.queries
 
+import org.apache.spark.graphx.{Graph => GraphX}
 import org.apache.spark.sql.DataFrame
 
 import graft.{LayerMetrics, QueryProbe, SessionCache, SparkEntry, SparkSpec, Tables}
 
-/** Pins the graph layers: each edge layer is also a cached GraphX graph,
-  * built once per (session, dir), whose vertex attribute is the node's
-  * out-degree, and which every GraphX consumer reads without building or
+/** Pins the graph layers: cached GraphX graphs built once per (session,
+  * dir) straight from the lineitem scan, whose vertex attribute is the
+  * node's out-degree, whose edges are the SQL consumers' DataFrame layer
+  * rows, and which every GraphX consumer reads without building or
   * caching into it. */
 class GraphLayerSpec extends SparkSpec {
 
   private def outDegrees(layer: DataFrame): Map[Long, Long] =
     layer.groupBy("src").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Every edge, sorted, duplicates kept. */
+  private def edges(g: GraphX[Long, Unit]): Seq[(Long, Long)] =
+    g.edges.map(e => (e.srcId, e.dstId)).collect().toSeq.sorted
+
+  private def rows(layer: DataFrame): Seq[(Long, Long)] =
+    layer.select("src", "dst").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+
+  /** pagerank_integer's edge set as its oracle derives it. */
+  private def supplyRows(d: String): Seq[(Long, Long)] = {
+    import org.apache.spark.sql.functions._
+    val nSupp = Tables.supplier(spark, d).agg(count(lit(1)).as("n"))
+    rows(Tables.lineitem(spark, d).crossJoin(nSupp)
+      .select(col("l_suppkey").as("src"), (col("l_partkey") % col("n")).as("dst"))
+      .filter(col("src") =!= col("dst")).distinct())
+  }
+
+  /** Each layer's edges against the derivation its SQL twin uses. */
+  private def assertEdgesMatchSql(d: String): Unit = {
+    assert(edges(Graph.narrowGraph(spark, d)) === rows(Graph.symmetricEdges(spark, d)))
+    assert(edges(Graph.wideGraph(spark, d)) === rows(Graph.symmetricEdgesWide(spark, d)))
+    assert(edges(Graph.supplyGraph(spark, d)) === supplyRows(d))
+  }
+
+  /** Writes the fixture tables under a temp dir, runs `body` on it. */
+  private def withFixture(suppliers: Seq[Long], lines: Seq[(Long, Option[Long], Option[Long])])(
+      body: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-graph-fixture")
+    try {
+      val s0 = spark
+      import s0.implicits._
+      suppliers.toDF("s_suppkey").write.parquet(s"$dir/supplier.parquet")
+      lines.toDF("l_orderkey", "l_partkey", "l_suppkey").write.parquet(s"$dir/lineitem.parquet")
+      body(dir.toString)
+    } finally new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+  }
 
   private def builds(layer: String): Int =
     LayerMetrics.snapshot.collectFirst { case (`layer`, (_, n, _)) => n }.getOrElse(0)
@@ -73,25 +111,58 @@ class GraphLayerSpec extends SparkSpec {
     assert(counts.tail.forall(_ <= counts.head), s"persisted RDDs per round: $counts")
   }
 
+  test("each graph layer's edges are its SQL twin's rows, each once") {
+    assertEdgesMatchSql(sf)
+  }
+
+  test("a cold graph layer builds inside its first consumer's one job") {
+    for ((q, layer) <- Seq("label_propagation" -> "graphx_edges",
+        "degree_assortativity" -> "graphx_edges_wide")) {
+      spark.catalog.clearCache()
+      val fresh = spark.newSession()
+      val probe = new QueryProbe(spark)
+      try {
+        // the table readers' own footer jobs are not the layer's
+        Tables.lineitem(fresh, sf); Tables.supplier(fresh, sf)
+        val b0 = builds(layer)
+        val run = probe.run(q, (_, d) => SparkEntry.queries(q)(fresh, d), sf)
+        assert(run.error === None, q)
+        assert((run.jobsBuild, run.jobsExec) === ((0, 1)), q)
+        assert(builds(layer) === b0 + 1, q)
+      } finally { probe.close(); SessionCache.evict(fresh) }
+    }
+  }
+
   test("tiny fixture: NonMember endpoint, edgeless node 1 at hop 0, edgeless layer's one row") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-graph-fixture")
-    try {
-      val s0 = spark
-      import s0.implicits._
-      Seq(1L, 2L, 3L, 4L).toDF("s_suppkey").write.parquet(s"$dir/supplier.parquet")
-      // one sampled line, supplier 4 and part 4: in the narrow domain
-      // (mod 4) the edge 4-0, node 0 being no supplier; in the wide domain
-      // (mod 16) the self-pair 4-4, which is dropped
-      Seq((10L, 4L, 4L)).toDF("l_orderkey", "l_partkey", "l_suppkey")
-        .write.parquet(s"$dir/lineitem.parquet")
-      assert(Graph.narrowGraph(spark, dir.toString).vertices.collect().toMap ===
+    // one sampled line, supplier 4 and part 4: in the narrow domain (mod 4)
+    // the edge 4-0, node 0 being no supplier; in the wide domain (mod 16)
+    // the self-pair 4-4, which is dropped. Lines with a null supplier or
+    // part key are no edge.
+    withFixture(Seq(1L, 2L, 3L, 4L),
+        Seq((10L, Some(4L), Some(4L)), (20L, None, Some(3L)), (30L, Some(5L), None))) { dir =>
+      assertEdgesMatchSql(dir)
+      assert(edges(Graph.narrowGraph(spark, dir)) === Seq(0L -> 4L, 4L -> 0L))
+      assert(edges(Graph.supplyGraph(spark, dir)) === Seq(4L -> 0L))
+      assert(Graph.narrowGraph(spark, dir).vertices.collect().toMap ===
         Map(0L -> Graph.NonMember, 1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 1L))
-      val hops = Graph.queries("bfs_hops")(spark, dir.toString).collect()
+      val hops = Graph.queries("bfs_hops")(spark, dir).collect()
       assert(hops.map(r => r.getLong(0) -> r.getInt(1)).toSeq === Seq(1L -> 0))
       // the SQL grand aggregate over no row: count 0, every sum and r null
-      val rows = Graph.queries("degree_assortativity")(spark, dir.toString).collect()
-      assert(rows.length === 1)
-      assert(rows.head.getLong(0) === 0L && (1 to 4).forall(rows.head.isNullAt))
-    } finally new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+      val assort = Graph.queries("degree_assortativity")(spark, dir).collect()
+      assert(assort.length === 1)
+      assert(assort.head.getLong(0) === 0L && (1 to 4).forall(assort.head.isNullAt))
+    }
+  }
+
+  test("tiny fixture without suppliers: every layer is edgeless, as its SQL twin") {
+    // the SQL layer's part key modulo a zero count is null, so no line is
+    // an edge; the graph builds must not divide by that zero
+    withFixture(Nil, Seq((10L, Some(4L), Some(3L)), (11L, Some(5L), Some(2L)))) { dir =>
+      assertEdgesMatchSql(dir)
+      assert(edges(Graph.wideGraph(spark, dir)).isEmpty)
+      assert(Graph.narrowGraph(spark, dir).vertices.count() === 0)
+      assert(SparkEntry.queries("pagerank_integer")(spark, dir).count() === 0)
+      assert(Graph.queries("degree_assortativity")(spark, dir).collect().head.getLong(0) === 0L)
+    }
   }
 }
