@@ -1169,34 +1169,6 @@ object Analytics {
           col("w.end").as("session_end"), col("n_events"))
     }),
 
-    // Distributed triangle counting: canonicalized (a<b) supplier edges,
-    // wedges by joining on the middle node under a<b<c ordering, closed by
-    // a second join — each triangle counted exactly once, two hash joins
-    // total (the standard MR/GraphX shape; no node ever materializes its
-    // full neighborhood cross-product beyond its wedge set). The edge list
-    // is sampled by order key to keep wedge counts bounded at every SF.
-    // Both joins carry an explicit SHUFFLE_HASH hint: the stream side is
-    // the WEDGE set (~50M rows at sf2, linear in data), and without the
-    // hint the planner's choice flips from broadcast (edges under the
-    // 10 MB threshold at sf1) to SortMergeJoin one doubling up — sorting
-    // the wedge stream, the measured 4.6×-at-2× knee. Hash joins build on
-    // the edge side (per-partition slices of |E|) and keep the wedge
-    // stream sort-free at every scale.
-    "triangle_count" -> ((s, d) => {
-      // the canonical (a<b) half of the shared supplier graph layer
-      val edges = Graph.symmetricEdges(s, d).filter(col("src") < col("dst"))
-        .select(col("src").as("a"), col("dst").as("b"))
-      val e1 = edges
-      val e2 = edges.select(col("a").as("b"), col("b").as("c")).hint("shuffle_hash")
-      val e3 = edges.select(col("a").as("a2"), col("b").as("c2")).hint("shuffle_hash")
-      val triangles = e1.join(e2, "b")
-        .join(e3, col("a") === col("a2") && col("c") === col("c2"))
-        .agg(count(lit(1)).as("n_triangles"))
-      val out = triangles.crossJoin(
-        edges.agg(count(lit(1)).as("n_edges")))
-      out
-    }),
-
     // IQR-fence outlier detection (Tukey's rule): exact quartiles per
     // return flag, fences at 1.5×IQR, count of prices outside — the robust
     // complement to the z-score anomaly chain. Expression order for the
@@ -2517,23 +2489,6 @@ SELECT user_id, MIN(ts) AS session_start,
   MAX(ts) + INTERVAL 6 HOUR AS session_end,
   COUNT(*) AS n_events
 FROM sess GROUP BY user_id, session_idx""",
-
-    "triangle_count" -> """
-WITH raw AS (
-  SELECT l_suppkey AS x, l_partkey % (SELECT COUNT(*) FROM supplier) AS y
-  FROM lineitem WHERE l_orderkey % 10 = 0
-),
-edges AS (
-  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
-  FROM raw WHERE x <> y
-),
-t AS (
-  SELECT COUNT(*) AS n_triangles
-  FROM edges e1
-  JOIN edges e2 ON e1.b = e2.a
-  JOIN edges e3 ON e3.a = e1.a AND e3.b = e2.b
-)
-SELECT n_triangles, (SELECT COUNT(*) FROM edges) AS n_edges FROM t""",
 
     "outlier_iqr" -> s"""
 WITH q AS (

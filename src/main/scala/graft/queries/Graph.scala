@@ -1,11 +1,11 @@
 package graft.queries
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.graphx.{Edge, TripletFields, Graph => GraphX}
+import org.apache.spark.graphx.{Edge, TripletFields, VertexRDD, Graph => GraphX}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable
@@ -13,68 +13,37 @@ import scala.reflect.ClassTag
 
 import graft.Tables
 
-/** Graph analytics over the supplier graph. Its GraphX consumers read
-  * cached GraphX graph layers ([[graphLayer]]), built once per (session,
-  * dir) straight from the lineitem scan, whose vertex attribute is the
-  * node's out-degree. The fixed-round superstep loops (bfs_hops,
-  * sssp_weighted, label_propagation, k_core, closeness_centrality, and
-  * [[Analytics]]' pagerank_integer) run as GraphX `aggregateMessages`
-  * rounds through [[supersteps]]: every round of a loop executes inside
-  * the result's one job, with no SQL plan update between stages, and
-  * degree_assortativity reads its degrees in one triplet pass. The SQL
-  * consumers (triangle_count, clustering_coefficient, stress_centrality)
-  * read persisted DataFrame edge layers of the same rows
-  * ([[symmetricEdges]]); neither representation is built from the other.
-  * link_prediction stays a composed DataFrame plan.
+/** Graph analytics over the supplier graph. Every supplier-graph query
+  * reads one of three cached GraphX graph layers ([[graphLayer]]), built
+  * once per (session, dir) straight from the lineitem scan, whose vertex
+  * attribute is the node's out-degree: [[narrowGraph]], [[wideGraph]] or
+  * [[supplyGraph]]. Each graph is the one cached representation of its
+  * edges; no query reads a second copy of them. The superstep loops
+  * (bfs_hops, sssp_weighted, label_propagation, k_core,
+  * closeness_centrality, stress_centrality, and [[Analytics]]'
+  * pagerank_integer) run as GraphX `aggregateMessages` rounds through
+  * [[supersteps]]: every round of a loop executes inside the result's one
+  * job, with no SQL plan update between stages. triangle_count and
+  * clustering_coefficient read GraphX's triangle census, and
+  * degree_assortativity reads its degrees in one triplet pass.
+  * link_prediction stays a composed DataFrame plan over its own
+  * co-purchase graph.
   */
 object Graph {
 
-  /** The narrow undirected supplier graph as a persisted DataFrame, built
-    * ONCE per (session, dir) for the SQL consumers (triangle_count,
-    * clustering_coefficient): a pipeline materializes its graph edges
-    * once, not per algorithm. Sampled lineitem rows project to canonical
-    * undirected edges (least, greatest), distinct, emitted in both
-    * directions. The GraphX consumers read [[narrowGraph]] instead, whose
-    * edges are these rows. */
-  private[queries] def symmetricEdges(s: SparkSession, d: String): DataFrame =
-    edgesLayer("graph_edges", s, d, 1)
-
-  /** The WIDE variant (node domain 4× the supplier count — the k_core
-    * rationale: the narrow graph is near-complete at small sf, so every
-    * degree equals the mean, the diameter collapses to ~1, and any
-    * operator that needs skewed degrees or interior shortest-path
-    * structure degenerates). Read by stress_centrality; k_core and
-    * degree_assortativity read [[wideGraph]]. */
-  private[queries] def symmetricEdgesWide(s: SparkSession, d: String): DataFrame =
-    edgesLayer("graph_edges_wide", s, d, 4)
-
-  /** Both DataFrame layers: part keys fold into a node domain `widen`
-    * times the supplier count. */
-  private def edgesLayer(name: String, s: SparkSession, d: String, widen: Int): DataFrame =
-    graft.SessionCache.persisted(name, s, d) {
-      // supplier count stays IN the plan (broadcast 1-row frame, the
-      // drift_tvd pattern), the same shape as the oracle's scalar subquery
-      val nSupp = Tables.supplier(s, d).agg(count(lit(1)).as("n_supp"))
-      val raw = Tables.lineitem(s, d)
-        .filter(col("l_orderkey") % 10 === 0)
-        .crossJoin(broadcast(nSupp))
-        .select(col("l_suppkey").as("x"),
-          (col("l_partkey") % (col("n_supp") * widen)).as("y"))
-        .filter(col("x") =!= col("y"))
-      val e = raw.select(
-          least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
-        .distinct()
-      e.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(e.select(col("b").as("src"), col("a").as("dst")))
-    }
-
-  /** The narrow graph: the suppliers and every edge endpoint, with the
-    * edges of [[symmetricEdges]]. */
+  /** The narrow undirected graph: the suppliers and every edge endpoint.
+    * Sampled lineitem lines (l_orderkey % 10 = 0) link the supplier to the
+    * part key folded into the supplier id space, as canonical undirected
+    * edges emitted in both directions. */
   private[graft] def narrowGraph(s: SparkSession, d: String): GraphX[Long, Unit] =
     graphLayer("graphx_edges", s, d, widen = 1, symmetric = true, withSuppliers = true)
 
-  /** The wide graph: the edge endpoints, with the edges of
-    * [[symmetricEdgesWide]]. */
+  /** The WIDE variant: the edge endpoints only, with part keys folded
+    * into a node domain 4× the supplier count (the k_core rationale: the
+    * narrow graph is near-complete at small sf, so every degree equals
+    * the mean, the diameter collapses to ~1, and any operator that needs
+    * skewed degrees or interior shortest-path structure degenerates).
+    * Read by k_core, stress_centrality and degree_assortativity. */
   private[graft] def wideGraph(s: SparkSession, d: String): GraphX[Long, Unit] =
     graphLayer("graphx_edges_wide", s, d, widen = 4, symmetric = true, withSuppliers = false)
 
@@ -90,7 +59,7 @@ object Graph {
     * algorithms reuse, with no second cached representation under it.
     * The build adds no job of its own: the edge build runs as stages of
     * the first consumer's job. A `symmetric` layer samples the lines
-    * (l_orderkey % 10 = 0, as its DataFrame twin does); the directed one
+    * (l_orderkey % 10 = 0, as the oracle SQL does); the directed one
     * reads them all. `withSuppliers` makes the vertices the suppliers and
     * every edge endpoint, a non-supplier endpoint carrying [[NonMember]].
     * Its RDDs are the layer name's RDD generation: a fresh session's build
@@ -190,6 +159,10 @@ object Graph {
     xs.mapPartitions(it => Iterator(it.foldLeft(zero)(op))).repartition(1)
       .mapPartitions(it => Iterator(it.foldLeft(zero)(op)))
 
+  /** Merges two keyed counts by summing them per key. */
+  private def addCounts(a: Map[Long, Long], b: Map[Long, Long]): Map[Long, Long] =
+    b.foldLeft(a) { case (m, (k, n)) => m.updated(k, m.getOrElse(k, 0L) + n) }
+
   /** Vertex attribute of a node no round has reached yet. */
   private val Unreached = Long.MaxValue
   /** Vertex attribute of an edge endpoint outside the supplier table (node
@@ -233,7 +206,7 @@ object Graph {
     * are NOT already capped edges (left anti join); score = common
     * capped-neighbors and Jaccard cn/(deg_u+deg_w−cn) — integers and one
     * division — ranked to a deterministic top-20. Orders are strided
-    * (l_orderkey % 10, the `symmetricEdges` convention) to keep this
+    * (l_orderkey % 10, the symmetric graph layers' convention) to keep this
     * bench gate's wedge volume proportionate; the shape is
     * stride-invariant. */
   private def linkPrediction(s: SparkSession, d: String): DataFrame = {
@@ -417,8 +390,7 @@ d$r AS (
       for (_ <- 1 to LpRounds) {
         val votes = g.aggregateMessages[Map[Long, Long]](
           c => if (c.srcAttr >= 0) c.sendToDst(Map(c.srcAttr -> 1L)),
-          (a, b) => b.foldLeft(a) { case (m, (l, n)) => m.updated(l, m.getOrElse(l, 0L) + n) },
-          TripletFields.Src)
+          addCounts, TripletFields.Src)
         g = g.joinVertices(votes) { (n, lbl, vs) =>
           if (lbl == NonMember || n % 10 == 0) lbl
           else vs.maxBy { case (l, cnt) => (cnt, -l) }._1
@@ -627,82 +599,70 @@ FROM v$CcRounds GROUP BY node"""
   private val StressRounds = 3
 
   /** STRESS centrality (Shimbel 1953) via the integer-exact two-pass
-    * Brandes decomposition, from a bounded seed set: for each seed s and
-    * node v, θ_s(v) = σ_s(v) · c_s(v) counts the shortest s-paths through
-    * v to any target within [[StressRounds]] hops, where σ is the BFS
-    * shortest-path count (forward pass) and c(v) = Σ_{w ∈ succ(v)}
-    * (c(w) + 1) counts shortest-path CONTINUATIONS from v down the BFS
-    * DAG (backward pass, levels descending). Unlike betweenness's
-    * rational δ accumulation, every quantity here is an exact BIGINT —
-    * the cross-engine-hashable member of the centrality family.
+    * Brandes decomposition, from a bounded seed set (suppliers
+    * 1..[[StressSeeds]]): for each seed s and node v, θ_s(v) = σ_s(v) ·
+    * c_s(v) counts the shortest s-paths through v to any target within
+    * [[StressRounds]] hops, where σ is the BFS shortest-path count
+    * (forward pass) and c(v) = Σ_{w ∈ succ(v)} (c(w) + 1) counts
+    * shortest-path CONTINUATIONS from v down the BFS DAG (backward pass,
+    * levels descending). Unlike betweenness's rational δ accumulation,
+    * every quantity here is an exact BIGINT — the cross-engine-hashable
+    * member of the centrality family.
     *
-    * Scale contract: the seed bound (exact all-sources is O(N·E));
-    * forward = [[StressRounds]] frontier-delta supersteps keyed on
-    * (seed, node) — the closeness shape — and backward = one
-    * level-to-level equi-join per level, each proportional to the
-    * DAG's edges at that level, never whole-graph state. The BFS-DAG
-    * invariant (every shortest-path predecessor of a level-h node is at
-    * level h−1) is what lets σ accumulate level-synchronously. */
+    * Runs on the WIDE graph layer: interior shortest-path structure needs
+    * a diameter > 2 (on the near-complete narrow graph every non-endpoint
+    * stress is identically zero at small sf). Each node carries seed →
+    * (level, σ, c) for every seed that reached it — at most seeds × nodes
+    * entries, the seed bound being the scale contract (exact all-sources
+    * is O(N·E)). Forward round h: a node at level h−1 sends its σ to each
+    * neighbour the seed has not reached, which sums the offers at level h
+    * (the BFS-DAG invariant: every shortest-path predecessor of a level-h
+    * node is at level h−1). Backward round l: a node at level l sums
+    * c(w) + 1 over its neighbours w at level l+1. The seeds are the
+    * supplier table's, never vertex ids: with fewer than [[StressSeeds]]
+    * suppliers a small id can be a part residue. */
   def stressCentrality(s: SparkSession, d: String): DataFrame = {
-    val gen = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // the WIDE shared layer: interior shortest-path structure needs a
-    // diameter > 2 (on the near-complete narrow graph every non-endpoint
-    // stress is identically zero at small sf)
-    val sym = symmetricEdgesWide(s, d)
-    var visited = Tables.supplier(s, d)
-      .filter(col("s_suppkey") <= StressSeeds)
-      .select(col("s_suppkey").as("seed"), col("s_suppkey").as("node"),
-        lit(0).as("dist"), lit(1L).as("sigma"))
-    var frontier = visited.select("seed", "node", "sigma")
-    for (h <- 1 to StressRounds) {
-      // σ(new node) = Σ σ(frontier predecessors): aggregate BEFORE the
-      // visited anti-join so every level-(h−1) predecessor contributes.
-      // No join hint: AQE flips to a shuffled join on its own once the
-      // visited set outgrows the broadcast threshold at real graph sizes.
-      val next = frontier.join(sym, col("node") === col("src"))
-        .select(col("seed"), col("dst"), col("sigma"))
-        .groupBy("seed", "dst").agg(sum("sigma").as("sigma"))
-        .withColumnRenamed("dst", "node")
-        .join(visited.select("seed", "node"), Seq("seed", "node"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      gen += next
-      visited = visited
-        .unionByName(next.withColumn("dist", lit(h))
-          .select("seed", "node", "dist", "sigma"))
-      frontier = next.select("seed", "node", "sigma")
+    val g0 = wideGraph(s, d)
+    // a scan crossing carries no exchange, so it runs no job
+    val seeds = Tables.supplier(s, d).filter(col("s_suppkey") <= StressSeeds)
+      .select("s_suppkey").queryExecution.toRdd.map(r => r.getLong(0) -> r.getLong(0))
+    supersteps(s, "stress_centrality", StructType(longs("node", "stress"))) {
+      var g = g0.outerJoinVertices(seeds) { (n, _, seed) =>
+        if (seed.isDefined) Map(n -> (0, 1L, 0L)) else Map.empty[Long, (Int, Long, Long)]
+      }
+      for (h <- 1 to StressRounds) {
+        val sigmas = g.aggregateMessages[Map[Long, Long]](
+          c => {
+            val offers = c.srcAttr.collect {
+              case (seed, (lvl, sigma, _)) if lvl == h - 1 && !c.dstAttr.contains(seed) =>
+                seed -> sigma
+            }
+            if (offers.nonEmpty) c.sendToDst(offers)
+          },
+          addCounts, TripletFields.All)
+        g = g.joinVertices(sigmas)((_, st, got) => st ++ got.map { case (seed, sigma) =>
+          seed -> (h, sigma, 0L) })
+      }
+      for (l <- (StressRounds - 1) to 0 by -1) {
+        val conts = g.aggregateMessages[Map[Long, Long]](
+          c => {
+            val succ = c.srcAttr.collect {
+              case (seed, (lvl, _, _)) if lvl == l && c.dstAttr.get(seed).exists(_._1 == l + 1) =>
+                seed -> (c.dstAttr(seed)._3 + 1)
+            }
+            if (succ.nonEmpty) c.sendToSrc(succ)
+          },
+          addCounts, TripletFields.All)
+        g = g.joinVertices(conts)((_, st, got) => st ++ got.map { case (seed, cont) =>
+          val (lvl, sigma, _) = st(seed)
+          seed -> (lvl, sigma, cont)
+        })
+      }
+      g.vertices.flatMap { case (n, st) =>
+        val through = st.collect { case (seed, (_, sigma, cont)) if seed != n => sigma * cont }
+        if (through.isEmpty) None else Some(Row(n, through.sum))
+      }
     }
-    // ONE lazy checkpoint after the (statically bounded) forward loop —
-    // not per round: [[StressRounds]] is a compile-time constant, so the
-    // un-truncated plan depth is bounded and the per-round checkpoints
-    // were pure job overhead (each materialization is its own AQE job
-    // chain; dropping them + the per-level backward persists cut the
-    // query from ~40 jobs / 11.8 s to single digits at sf0.1/32 threads).
-    // Loops with DATA-DEPENDENT round counts (the CC label loop) still
-    // need periodic truncation — this is the bounded-rounds special case.
-    visited = visited.localCheckpoint(false)
-    // backward pass: continuation counts, deepest level first, composed
-    // as ONE lazy plan — every level filter reads the single checkpointed
-    // visited frame, and the doubly-consumed cont_l subtrees dedupe via
-    // AQE exchange reuse instead of per-level persisted frames
-    var cont = visited.filter(col("dist") === StressRounds)
-      .select(col("seed"), col("node"), lit(0L).as("c"))
-    var acc = cont
-    for (l <- (StressRounds - 1) to 0 by -1) {
-      val cur = visited.filter(col("dist") === l).select("seed", "node")
-      val contrib = cur.join(sym, col("node") === col("src"))
-        .select(col("seed"), col("node"), col("dst"))
-        .join(cont.select(col("seed"), col("node").as("dst"), col("c")),
-          Seq("seed", "dst"))
-        .groupBy("seed", "node").agg(sum(col("c") + 1).as("c"))
-      cont = cur.join(contrib, Seq("seed", "node"), "left")
-        .select(col("seed"), col("node"), coalesce(col("c"), lit(0L)).as("c"))
-      acc = acc.unionByName(cont)
-    }
-    graft.SessionCache.retire(s, "stress_centrality", gen.toSeq)
-    visited.filter(col("node") =!= col("seed"))
-      .join(acc, Seq("seed", "node"))
-      .groupBy("node")
-      .agg(sum(col("sigma") * col("c")).cast("long").as("stress"))
   }
 
   private val stressCentralitySql: String = {
@@ -765,35 +725,57 @@ WHERE v.node <> v.seed
 GROUP BY v.node"""
   }
 
-  /** Per-node LOCAL CLUSTERING COEFFICIENT over the shared supplier
-    * graph: lcc(v) = 2·tri(v) / (deg(v)·(deg(v)−1)), with the triangle
-    * census enumerated once as id-oriented (a<b<c) wedge+closure joins —
-    * every count an exact integer, the one division the only float.
-    *
-    * Scale contract: orientation bounds the wedge join by per-node
-    * OUT-degree under the a<b order (production systems orient by
-    * (degree, id) to cap hub fan-out; on this near-uniform-degree graph
-    * id-orientation has the same bound and keeps the oracle twin exact),
-    * and the closure check is a shuffle_hash semi-join against the
-    * edge list — never broadcast (edge-scale) and never node×node. */
+  /** Each node of the narrow graph that has an edge, with its degree and
+    * the triangles it closes, from GraphX's triangle census (which
+    * canonicalizes the edges, intersects neighbour sets per edge and
+    * counts each triangle at its three corners). The degree comes from the
+    * edges, not the vertex attribute, which is [[NonMember]] for node 0.
+    * GraphX counts a node's triangles in an `Int`: exact while no node
+    * closes more than 2³¹−1 of them. */
+  private def triangles(g: GraphX[Long, Unit]): VertexRDD[(Long, Long)] =
+    g.triangleCount().vertices.innerJoin(g.outDegrees)((_, tri, deg) => (deg.toLong, tri.toLong))
+
+  /** Distributed triangle counting over the narrow supplier graph: the
+    * per-node census of [[triangles]] folded to one row, each triangle
+    * counted once (Σtri / 3) and each undirected edge once (Σdeg / 2).
+    * With no edge the result is still one row, (0, 0). */
+  def triangleCount(s: SparkSession, d: String): DataFrame = {
+    val g0 = narrowGraph(s, d)
+    supersteps(s, "triangle_count", StructType(longs("n_triangles", "n_edges"))) {
+      foldToOne(triangles(g0).values, (0L, 0L)) { case ((d1, t1), (d2, t2)) => (d1 + d2, t1 + t2) }
+        .map { case (deg, tri) => Row(tri / 3, deg / 2) }
+    }
+  }
+
+  private val triangleCountSql: String = """
+WITH raw AS (
+  SELECT l_suppkey AS x, l_partkey % (SELECT COUNT(*) FROM supplier) AS y
+  FROM lineitem WHERE l_orderkey % 10 = 0
+),
+edges AS (
+  SELECT DISTINCT least(x, y) AS a, greatest(x, y) AS b
+  FROM raw WHERE x <> y
+),
+t AS (
+  SELECT COUNT(*) AS n_triangles
+  FROM edges e1
+  JOIN edges e2 ON e1.b = e2.a
+  JOIN edges e3 ON e3.a = e1.a AND e3.b = e2.b
+)
+SELECT n_triangles, (SELECT COUNT(*) FROM edges) AS n_edges FROM t"""
+
+  /** Per-node LOCAL CLUSTERING COEFFICIENT over the narrow supplier
+    * graph: lcc(v) = 2·tri(v) / (deg(v)·(deg(v)−1)) from the census of
+    * [[triangles]] — every count an exact integer, the one division (in
+    * the oracle's double chain) the only float. */
   def clusteringCoefficient(s: SparkSession, d: String): DataFrame = {
-    val sym = symmetricEdges(s, d) // shared layer
-    val canon = sym.filter(col("src") < col("dst"))
-    val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-      .select(col("src").as("node"), col("deg"))
-    val tris = canon.select(col("src").as("a"), col("dst").as("b"))
-      .join(canon.select(col("src").as("b"), col("dst").as("c")), "b")
-      .join(canon.select(col("src").as("a"), col("dst").as("c"))
-        .hint("shuffle_hash"), Seq("a", "c"), "left_semi")
-    val triPerNode = tris
-      .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("tri"))
-    deg.join(triPerNode, Seq("node"), "left")
-      .select(col("node"), col("deg"), coalesce(col("tri"), lit(0L)).as("tri"))
-      .withColumn("lcc", when(col("deg") >= 2,
-          (col("tri") * 2).cast("double")
-            / (col("deg") * (col("deg") - 1)).cast("double"))
-        .otherwise(lit(0.0)))
+    val g0 = narrowGraph(s, d)
+    supersteps(s, "clustering_coefficient", StructType(longs("node", "deg", "tri") :+
+        StructField("lcc", DoubleType, nullable = false))) {
+      triangles(g0).map { case (n, (deg, tri)) =>
+        Row(n, deg, tri, if (deg >= 2) (tri * 2).toDouble / (deg * (deg - 1)).toDouble else 0.0)
+      }
+    }
   }
 
   private val clusteringCoefficientSql: String = """
@@ -895,6 +877,7 @@ FROM sums"""
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "bfs_hops"          -> ((s, d) => bfsHops(s, d)),
+    "triangle_count"    -> ((s, d) => triangleCount(s, d)),
     "link_prediction"   -> ((s, d) => linkPrediction(s, d)),
     "label_propagation" -> ((s, d) => labelPropagation(s, d)),
     "sssp_weighted"     -> ((s, d) => ssspWeighted(s, d)),
@@ -931,6 +914,7 @@ WITH RECURSIVE raw AS (
 )
 SELECT node, CAST(min(d) AS INT) AS hops FROM walk GROUP BY node""",
 
+    "triangle_count" -> triangleCountSql,
     "link_prediction" -> linkPredictionSql,
     "label_propagation" -> labelPropagationSql,
     "sssp_weighted" -> ssspWeightedSql,

@@ -188,11 +188,11 @@ class ContractSpec extends SparkSpec {
     // shared adjacency with a lazy localCheckpoint — under AQE producing
     // the checkpoint RDD still runs its stages at construction. The work
     // is the query's own stages moved earlier, never redundant.
-    // (The graph superstep loops — pagerank_integer, bfs_hops,
-    // sssp_weighted, label_propagation, k_core, closeness_centrality —
-    // left the list when they became GraphX rounds, which run inside the
-    // result's one job; stress_centrality left it earlier, after 8c69475
-    // made its frames lazy once the shared graph layer is warm.)
+    // (The supplier-graph queries — pagerank_integer, bfs_hops,
+    // sssp_weighted, label_propagation, k_core, closeness_centrality,
+    // stress_centrality, triangle_count, clustering_coefficient — run as
+    // GraphX rounds over the cached graph layers, inside the result's one
+    // job.)
     val supersteps = Set("perceptron_steps", "bpe_merges_batch", "link_prediction")
     // Shared-frame eager checkpoint: a frame feeding several plan branches
     // is leafed once at construction, so the branch-shared compute runs
@@ -261,7 +261,8 @@ class ContractSpec extends SparkSpec {
     val names = Seq("bfs_hops", "sssp_weighted", "k_core", "closeness_centrality",
       "pagerank_integer", "label_propagation", "link_prediction",
       "dedup_clusters", "dedup_keep_best", "stress_centrality",
-      "triangle_count", "perceptron_steps", "degree_assortativity")
+      "triangle_count", "clustering_coefficient", "perceptron_steps",
+      "degree_assortativity")
     def run(n: String): Unit = SparkEntry.queries(n)(spark, sf)
       .write.format("noop").mode("overwrite").save()
     // Count AFTER a GC pass: a lazily-checkpointed frame whose
@@ -276,7 +277,7 @@ class ContractSpec extends SparkSpec {
       Thread.sleep(1500)
       spark.sparkContext.getPersistentRDDs.values.count(r => !r.isCheckpointed)
     }
-    names.foreach(run) // shared layers (graph_edges, clusters, ...) build once
+    names.foreach(run) // shared layers (graph layers, clusters, ...) build once
     names.foreach(run) // steady state: every retire() key now has a generation
     val before = persistedNonCkpt
     names.foreach(run)

@@ -2,18 +2,18 @@ package graft.queries
 
 import org.apache.spark.graphx.{Graph => GraphX}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 import graft.{LayerMetrics, QueryProbe, SessionCache, SparkEntry, SparkSpec, Tables}
 
 /** Pins the graph layers: cached GraphX graphs built once per (session,
   * dir) straight from the lineitem scan, whose vertex attribute is the
-  * node's out-degree, whose edges are the SQL consumers' DataFrame layer
-  * rows, and which every GraphX consumer reads without building or
-  * caching into it. */
+  * node's out-degree, whose edges are the oracle SQL's edges, and which
+  * every consumer reads without building or caching into it. */
 class GraphLayerSpec extends SparkSpec {
 
-  private def outDegrees(layer: DataFrame): Map[Long, Long] =
-    layer.groupBy("src").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  private def outDegrees(edges: Seq[(Long, Long)]): Map[Long, Long] =
+    edges.groupBy(_._1).map { case (n, es) => n -> es.size.toLong }
 
   /** Every edge, sorted, duplicates kept. */
   private def edges(g: GraphX[Long, Unit]): Seq[(Long, Long)] =
@@ -22,21 +22,38 @@ class GraphLayerSpec extends SparkSpec {
   private def rows(layer: DataFrame): Seq[(Long, Long)] =
     layer.select("src", "dst").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
 
-  /** pagerank_integer's edge set as its oracle derives it. */
-  private def supplyRows(d: String): Seq[(Long, Long)] = {
-    import org.apache.spark.sql.functions._
-    val nSupp = Tables.supplier(spark, d).agg(count(lit(1)).as("n"))
-    rows(Tables.lineitem(spark, d).crossJoin(nSupp)
-      .select(col("l_suppkey").as("src"), (col("l_partkey") % col("n")).as("dst"))
-      .filter(col("src") =!= col("dst")).distinct())
+  private def nSupp(d: String): DataFrame =
+    Tables.supplier(spark, d).agg(count(lit(1)).as("n"))
+
+  /** A symmetric layer's edges as the oracle SQL derives them: sampled
+    * lines, the part key modulo `widen` times the supplier count,
+    * self-pairs dropped, the DISTINCT (least, greatest) `canon` pairs
+    * emitted in both directions. */
+  private def canonRows(d: String, widen: Int): Seq[(Long, Long)] = {
+    val canon = Tables.lineitem(spark, d).filter(col("l_orderkey") % 10 === 0)
+      .crossJoin(nSupp(d))
+      .select(col("l_suppkey").as("x"), (col("l_partkey") % (col("n") * widen)).as("y"))
+      .filter(col("x") =!= col("y"))
+      .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
+      .distinct()
+    rows(canon.select(col("a").as("src"), col("b").as("dst"))
+      .unionByName(canon.select(col("b").as("src"), col("a").as("dst"))))
   }
 
-  /** Each layer's edges against the derivation its SQL twin uses. */
+  /** pagerank_integer's edge set as its oracle derives it. */
+  private def supplyRows(d: String): Seq[(Long, Long)] =
+    rows(Tables.lineitem(spark, d).crossJoin(nSupp(d))
+      .select(col("l_suppkey").as("src"), (col("l_partkey") % col("n")).as("dst"))
+      .filter(col("src") =!= col("dst")).distinct())
+
+  /** Each layer's edges against the derivation of its oracle SQL. */
   private def assertEdgesMatchSql(d: String): Unit = {
-    assert(edges(Graph.narrowGraph(spark, d)) === rows(Graph.symmetricEdges(spark, d)))
-    assert(edges(Graph.wideGraph(spark, d)) === rows(Graph.symmetricEdgesWide(spark, d)))
+    assert(edges(Graph.narrowGraph(spark, d)) === canonRows(d, 1))
+    assert(edges(Graph.wideGraph(spark, d)) === canonRows(d, 4))
     assert(edges(Graph.supplyGraph(spark, d)) === supplyRows(d))
   }
+
+  private def query(name: String, d: String) = SparkEntry.queries(name)(spark, d).collect()
 
   /** Writes the fixture tables under a temp dir, runs `body` on it. */
   private def withFixture(suppliers: Seq[Long], lines: Seq[(Long, Option[Long], Option[Long])])(
@@ -54,13 +71,13 @@ class GraphLayerSpec extends SparkSpec {
   private def builds(layer: String): Int =
     LayerMetrics.snapshot.collectFirst { case (`layer`, (_, n, _)) => n }.getOrElse(0)
 
-  test("each graph layer's degree attribute is its DataFrame layer's out-degree") {
+  test("each graph layer's degree attribute is its oracle edges' out-degree") {
     val wide = Graph.wideGraph(spark, sf).vertices.collect().toMap
-    assert(wide === outDegrees(Graph.symmetricEdgesWide(spark, sf)))
+    assert(wide === outDegrees(canonRows(sf, 4)))
 
     // the narrow graph also holds every supplier; an endpoint that is no
     // supplier carries NonMember instead of its degree
-    val deg = outDegrees(Graph.symmetricEdges(spark, sf))
+    val deg = outDegrees(canonRows(sf, 1))
     val members = Tables.supplier(spark, sf).select("s_suppkey").collect().map(_.getLong(0)).toSet
     val narrow = Graph.narrowGraph(spark, sf).vertices.collect().toMap
     assert(narrow.keySet === members ++ deg.keySet)
@@ -70,7 +87,8 @@ class GraphLayerSpec extends SparkSpec {
 
   test("every consumer of a warm graph layer runs no construction job and one job in all") {
     val consumers = Seq("bfs_hops", "sssp_weighted", "label_propagation",
-      "closeness_centrality", "k_core", "degree_assortativity")
+      "closeness_centrality", "k_core", "degree_assortativity", "triangle_count",
+      "clustering_coefficient", "stress_centrality")
     Graph.narrowGraph(spark, sf); Graph.wideGraph(spark, sf)
     val probe = new QueryProbe(spark)
     try consumers.foreach { n =>
@@ -151,6 +169,15 @@ class GraphLayerSpec extends SparkSpec {
       val assort = Graph.queries("degree_assortativity")(spark, dir).collect()
       assert(assort.length === 1)
       assert(assort.head.getLong(0) === 0L && (1 to 4).forall(assort.head.isNullAt))
+      // the oracle's deg groups every edge source, node 0 included; the
+      // one edge closes no triangle, and deg < 2 reads lcc 0.0
+      val lcc = query("clustering_coefficient", dir)
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
+      assert(lcc === Map(0L -> ((1L, 0L, 0.0)), 4L -> ((1L, 0L, 0.0))))
+      assert(query("triangle_count", dir).map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+        Seq((0L, 1L)))
+      // the wide graph is edgeless: no seed reaches a node besides itself
+      assert(query("stress_centrality", dir).isEmpty)
     }
   }
 
@@ -163,6 +190,32 @@ class GraphLayerSpec extends SparkSpec {
       assert(Graph.narrowGraph(spark, dir).vertices.count() === 0)
       assert(SparkEntry.queries("pagerank_integer")(spark, dir).count() === 0)
       assert(Graph.queries("degree_assortativity")(spark, dir).collect().head.getLong(0) === 0L)
+      // the oracle's t is a grand aggregate: one row over no edge
+      assert(query("triangle_count", dir).map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+        Seq((0L, 0L)))
+      assert(query("clustering_coefficient", dir).isEmpty)
+      assert(query("stress_centrality", dir).isEmpty)
+    }
+  }
+
+  test("tiny fixture: stress seeds are the suppliers, never part residues") {
+    // suppliers 1 and 2, so the wide domain is mod 8 and its nodes 3 and 4
+    // are part residues, which id <= 4 must not make seeds. Sampled lines
+    // give the edges 1-3 (part 3), 2-3 (part 11) and 1-4 (part 4).
+    //   seed 1: levels {1} {3, 4} {2}, sigma 1 each; c(2) = 0, c(3) = 1,
+    //           c(4) = 0, so 3 carries 1·1 and 2, 4 carry 0;
+    //   seed 2: levels {2} {3} {1} {4}, sigma 1 each; c(4) = 0, c(1) = 1,
+    //           c(3) = 2, so 3 carries 2, 1 carries 1 and 4 carries 0.
+    // Summed per node over the seeds other than itself (the oracle's
+    // v.node <> v.seed): 1 -> 1, 2 -> 0, 3 -> 3, 4 -> 0.
+    withFixture(Seq(1L, 2L),
+        Seq((10L, Some(3L), Some(1L)), (20L, Some(11L), Some(2L)), (30L, Some(4L), Some(1L)))) {
+      dir =>
+        assertEdgesMatchSql(dir)
+        assert(edges(Graph.wideGraph(spark, dir)) ===
+          Seq(1L -> 3L, 1L -> 4L, 2L -> 3L, 3L -> 1L, 3L -> 2L, 4L -> 1L))
+        val stress = query("stress_centrality", dir).map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(stress === Map(1L -> 1L, 2L -> 0L, 3L -> 3L, 4L -> 0L))
     }
   }
 }

@@ -230,6 +230,20 @@ class GraphSpec extends SparkSpec {
     assert(out.values.exists(_._2 > 0L))
   }
 
+  test("triangle_count matches a brute-force triangle census") {
+    val out = Graph.queries("triangle_count")(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // each triangle once, as its a < b < c orientation
+    val canon = symAdj().filter(e => e._1 < e._2).toSet
+    val succ = canon.groupBy(_._1).map { case (a, es) => a -> es.map(_._2) }
+    val tri = canon.toSeq.map { case (a, b) =>
+      succ.getOrElse(b, Set.empty[Long]).count(c => canon((a, c))).toLong
+    }.sum
+    assert(out === Seq((tri, canon.size.toLong)))
+    // the graph must actually close triangles or the census is vacuous
+    assert(tri > 0L)
+  }
+
   test("degree_assortativity matches the brute-force Newman formula") {
     val row = Graph.queries("degree_assortativity")(spark, sf).collect().head
     val nSupp = Tables.supplier(spark, sf).count()

@@ -769,17 +769,6 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  test("triangle_count hash-joins the wedge stream — never sorts it") {
-    // Round-12 fix pinned: without the SHUFFLE_HASH hints the planner
-    // broadcasts the edge side at small SF and flips to SortMergeJoin one
-    // doubling up — sorting the ~|wedges| stream (measured 4.6× at the
-    // sf1→sf2 doubling). The hinted plan builds per-partition hash maps
-    // on the edge side and keeps the wedge stream sort-free at any scale.
-    val p = plan("triangle_count")
-    assert(p.contains("ShuffledHashJoin"), s"wedge joins must be hash joins:\n$p")
-    assert(!p.contains("SortMergeJoin"), s"wedge stream must never be sorted:\n$p")
-  }
-
   test("gramian_features is ONE aggregation pass — no join, no explode-side shuffle") {
     // The PCA Gramian's scale claim: a fixed d²-slot buffer per partition
     // (graft.expr.VectorGramian), merged pairwise — the n·d² exploded
