@@ -36,6 +36,11 @@ import org.apache.spark.sql.SparkSession
   *    trade-off is that an artifact added through one graft session is
   *    visible to every graft session on the context. Read only when a
   *    session is created; cloned and new sessions inherit it.
+  *  - `fs.file.impl` is [[NioLocalFileSystem]], which sets modes without
+  *    the `chmod` fork Hadoop's local file system pays per file created.
+  *    Every local write goes through it: parquet output and committers,
+  *    foreachBatch sinks, gate checkpoints and RocksDB state uploads.
+  *    Caller-built sessions ([[tune]]) keep Hadoop's.
   *  - No Hadoop property sources on the context's Hadoop configuration.
   *    Hadoop records, per key, the resource file that set it, and
   *    `Configuration.write` gzips those names one string at a time. Spark
@@ -78,6 +83,7 @@ object Sessions {
       // sf0.1, many at 100 TB), not a local[32] constant.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     dropPropertySources(spark)
@@ -88,7 +94,10 @@ object Sessions {
     * driver's own session invoking [[SparkEntry.entry]]). Runtime-settable
     * confs only; idempotent. Artifact isolation is fixed when a session is
     * created, so a caller-built session keeps it on and still recompiles
-    * its generated classes in each new session and each gate run.
+    * its generated classes in each new session and each gate run. The
+    * `file:` file system is fixed with the context, so a caller-built one
+    * keeps Hadoop's, which forks a `chmod` per file it creates, and the
+    * gate runner keeps Spark's default checkpoint manager over it.
     */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

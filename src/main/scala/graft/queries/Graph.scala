@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.graphx.{Edge, TripletFields, VertexRDD, Graph => GraphX}
+import org.apache.spark.graphx.lib.TriangleCount
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -727,13 +728,17 @@ GROUP BY v.node"""
 
   /** Each node of the narrow graph that has an edge, with its degree and
     * the triangles it closes, from GraphX's triangle census (which
-    * canonicalizes the edges, intersects neighbour sets per edge and
-    * counts each triangle at its three corners). The degree comes from the
-    * edges, not the vertex attribute, which is [[NonMember]] for node 0.
-    * GraphX counts a node's triangles in an `Int`: exact while no node
-    * closes more than 2³¹−1 of them. */
+    * intersects neighbour sets per edge and counts each triangle at its
+    * three corners). The graph is symmetric and deduplicated, so its edges
+    * with srcId < dstId are already the canonical edge set the census
+    * needs; `triangleCount()` would shuffle and regroup them into it again
+    * on every run. The degree comes from the symmetric edges, not the
+    * vertex attribute, which is [[NonMember]] for node 0. GraphX counts a
+    * node's triangles in an `Int`: exact while no node closes more than
+    * 2³¹−1 of them. */
   private def triangles(g: GraphX[Long, Unit]): VertexRDD[(Long, Long)] =
-    g.triangleCount().vertices.innerJoin(g.outDegrees)((_, tri, deg) => (deg.toLong, tri.toLong))
+    TriangleCount.runPreCanonicalized(g.subgraph(epred = t => t.srcId < t.dstId)).vertices
+      .innerJoin(g.outDegrees)((_, tri, deg) => (deg.toLong, tri.toLong))
 
   /** Distributed triangle counting over the narrow supplier graph: the
     * per-node census of [[triangles]] folded to one row, each triangle

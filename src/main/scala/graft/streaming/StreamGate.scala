@@ -4,8 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.util.Using
 
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Shared run-time scaffolding for the `stream_exec_*` gate queries:
@@ -32,13 +34,12 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   *     (gate checkpoints, builders' scratch table copies) now live under
   *     one per-JVM root that is wiped on first use (clearing any previous
   *     run's leftovers) and again on JVM exit.
-  *  3. **A process fork per checkpoint file.** On a local file system
-  *     without libhadoop, Hadoop forks a shell `chmod` for every file and
-  *     dir it creates, and Spark's default checkpoint manager forks a
-  *     `readlink` for every rename: a few hundred forks per gate run,
-  *     most of them on the state-store commit path. The runner scopes
-  *     `spark.sql.streaming.checkpointFileManagerClass` to
-  *     [[LocalCheckpointFiles]], which creates them through `java.nio`.
+  *  3. **A process fork per checkpoint file.** Without libhadoop, Hadoop
+  *     forks a `chmod` per local file created, and Spark's default
+  *     checkpoint manager a `readlink` per rename. The runner scopes
+  *     `spark.sql.streaming.checkpointFileManagerClass` to Spark's file-
+  *     system-based manager over [[graft.NioLocalFileSystem]], which forks
+  *     neither.
   *  4. **Generated classes compiled again per run.** A gate runs in a clone
   *     of its session; with Spark's artifact isolation on, each clone's
   *     tasks had their own class loader and missed the codegen cache, so
@@ -170,10 +171,12 @@ object StreamGate {
     * a `transformWithState` node: that operator is built on changelog-
     * checkpointing stores and the default HDFS-backed provider rejects it
     * at start, while every other gate keeps exercising the default
-    * provider. Checkpoint files (logs, state deltas, RocksDB uploads) are
-    * written through [[LocalCheckpointFiles]]. All three confs read as
-    * before once the gate ends. The run is one `AvailableNow` pass over a
-    * fresh checkpoint dir; its progress is recorded under `tag`.
+    * provider. The checkpoint manager is Spark's file-system-based one
+    * only over [[graft.NioLocalFileSystem]]: over the `file:` file system
+    * Hive registers, its overwriting renames silently keep the old file.
+    * All three confs read as before once the gate ends. The run is one
+    * `AvailableNow` pass over a fresh checkpoint dir; its progress is
+    * recorded under `tag`.
     */
   private def run(s: SparkSession, tag: String, build: => DataFrame)(
       sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
@@ -182,8 +185,11 @@ object StreamGate {
       "spark.sql.streaming.stateStore.providerClass",
       "spark.sql.streaming.checkpointFileManagerClass")
     val prev = scoped.map(k => k -> s.conf.getOption(k))
+    val ckpt = tempDir(s"${tag}_ckpt_")
     s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions.toString)
-    s.conf.set("spark.sql.streaming.checkpointFileManagerClass", classOf[LocalCheckpointFiles].getName)
+    if (new HPath(ckpt).getFileSystem(s.sessionState.newHadoopConf()).isInstanceOf[graft.NioLocalFileSystem])
+      s.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[FileSystemBasedCheckpointFileManager].getName)
     try {
       val df = build
       if (df.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState]))
@@ -191,7 +197,7 @@ object StreamGate {
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       val t0 = System.nanoTime()
       val q = sink(df.writeStream)
-        .option("checkpointLocation", tempDir(s"${tag}_ckpt_"))
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()

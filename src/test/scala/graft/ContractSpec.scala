@@ -138,21 +138,18 @@ class ContractSpec extends SparkSpec {
       s"streaming run / temp dir inventory drifted — route gates through StreamGate: $found")
   }
 
-  test("the checkpoint file manager is chosen only by the gate runner") {
-    // LocalCheckpointFiles accepts local paths only, and the conf that
-    // selects it is scoped to one gate run; set anywhere else it would
-    // leak into user queries with their own (possibly remote) checkpoints.
+  test("the file: file system is registered only where sessions are built") {
+    // one class decides how graft writes local files, fixed with the
+    // context; the checkpoint manager that routes checkpoints through it is
+    // scoped to one gate run, and set anywhere else it would leak into user
+    // queries with their own (possibly remote) checkpoints
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
-    val found = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filter { p =>
-        val src = java.nio.file.Files.readString(p)
-        src.contains("checkpointFileManagerClass") || src.contains("LocalCheckpointFiles")
-      }
+    def filesWith(token: String): Set[String] = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && java.nio.file.Files.readString(p).contains(token))
       .map(_.toString.replaceFirst(".*graft/", "")).toSet
-    assert(found === Set("streaming/StreamGate.scala", "streaming/LocalCheckpointFiles.scala"),
-      s"checkpoint file manager referenced outside the gate runner: $found")
+    assert(filesWith("fs.file.impl") === Set("Sessions.scala"))
+    assert(filesWith("checkpointFileManagerClass") === Set("streaming/StreamGate.scala"))
   }
 
   test("query construction runs no Spark jobs outside the audited mechanisms") {

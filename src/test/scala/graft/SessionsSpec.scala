@@ -1,13 +1,19 @@
 package graft
 
 import java.io.{ByteArrayOutputStream, ObjectOutputStream}
+import java.net.URI
+import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.util.SerializableConfiguration
 
-/** Pins the session settings that [[Sessions.local]] fixes at creation and
-  * the Hadoop property sources it drops from the context's conf. */
+/** Pins the session settings that [[Sessions.local]] fixes at creation,
+  * the `file:` file system it registers and the Hadoop property sources it
+  * drops from the context's conf. */
 class SessionsSpec extends SparkSpec {
   private val Isolation = "spark.sql.artifact.isolation.enabled"
 
@@ -46,6 +52,36 @@ class SessionsSpec extends SparkSpec {
     val runs = try qs.map(q => p.run(q, SparkEntry.queries(q), sf)) finally p.close()
     assert(runs.forall(_.ok), runs.flatMap(_.error))
     assertNoSources()
+  }
+
+  test("the context's file: file system is the graft one") {
+    val fs = FileSystem.get(URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    assert(fs.getClass === classOf[NioLocalFileSystem])
+  }
+
+  test("a parquet write and the state, join and RocksDB gates fork no file command") {
+    // commands Hadoop's local file system forks without libhadoop: chmod
+    // on create, readlink on a FileContext rename, stat and ls for file
+    // status. Spark's own `rm -rf` of artifact and RocksDB dirs is not
+    // counted.
+    val fileCommands = Set("chmod", "readlink", "stat", "ls")
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val p = new QueryProbe(spark)
+    val runs = try {
+      // the recording sees a fork
+      new ProcessBuilder("true").start().waitFor()
+      spark.range(1000).repartition(2).write.parquet(Files.createTempDirectory("graft-fork").toString + "/t")
+      Seq("stream_exec_state", "stream_exec_join", "stream_exec_tws").map(q => p.run(q, SparkEntry.queries(q), sf))
+    } finally { p.close(); rec.stop() }
+    val file = Files.createTempFile("graft-forks", ".jfr")
+    val commands = try { rec.dump(file); RecordingFile.readAllEvents(file).asScala.map(_.getString("command")) }
+      finally { rec.close(); Files.delete(file) }
+    assert(runs.forall(_.ok), runs.flatMap(_.error))
+    def program(c: String) = c.trim.split("\\s+").head.split('/').last
+    assert(commands.exists(c => program(c) == "true"), commands)
+    assert(commands.filter(c => fileCommands(program(c))).isEmpty)
   }
 
   test("a serialized conf broadcast carries no property sources") {

@@ -2,21 +2,27 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path => JPath}
+import java.nio.file.attribute.PosixFilePermissions
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
-import graft.SparkSpec
+import graft.{NioLocalFileSystem, SparkSpec}
 
-/** The contract of [[LocalCheckpointFiles]] that Spark's checkpoint and
-  * state-store code relies on: atomic create, clean cancel, no silent
-  * overwrite, local paths only, and a checkpoint it wrote can be
-  * restarted from. */
+/** Spark's `FileSystemBasedCheckpointFileManager` over the `file:` file
+  * system graft sessions register ([[NioLocalFileSystem]]), as the gate
+  * runner scopes it: the contract Spark's checkpoint and state-store code
+  * relies on (atomic create, clean cancel, no silent overwrite, a
+  * checkpoint it wrote can be restarted from), the class Hadoop hands out
+  * for `file:`, the modes it sets, and the runner's choice of manager. */
 class CheckpointFilesSpec extends SparkSpec {
+  private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
   private def manager(dir: JPath) =
-    new LocalCheckpointFiles(new Path(dir.toUri), spark.sessionState.newHadoopConf())
+    new FileSystemBasedCheckpointFileManager(new Path(dir.toUri), spark.sessionState.newHadoopConf())
 
   private def names(dir: JPath): Set[String] =
     if (Files.exists(dir)) Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSet
@@ -33,7 +39,7 @@ class CheckpointFilesSpec extends SparkSpec {
     assert(fm.exists(target))
     val in = fm.open(target)
     try assert(new String(in.readAllBytes(), StandardCharsets.UTF_8) === "v1") finally in.close()
-    assert(names(dir.resolve("offsets")) === Set("0"), "no temp file or Hadoop .crc sidecar")
+    assert(names(dir.resolve("offsets")) === Set("0", ".0.crc"), "the file and its checksum, no temp file")
 
     val cancelled = new Path(dir.toUri.toString + "/state/0/1.delta")
     val out2 = fm.createAtomic(cancelled, false)
@@ -42,7 +48,7 @@ class CheckpointFilesSpec extends SparkSpec {
     assert(names(dir.resolve("state/0")).isEmpty, "cancel must leave no file behind")
   }
 
-  test("an existing file is replaced only when asked; non-local paths are rejected") {
+  test("an existing file is replaced only when asked") {
     val dir = Files.createTempDirectory("graft-lcf")
     val fm = manager(dir)
     val target = new Path(dir.toUri.toString + "/commits/0")
@@ -51,15 +57,60 @@ class CheckpointFilesSpec extends SparkSpec {
       out.write(s.getBytes(StandardCharsets.UTF_8)); out.close()
     }
     put("a", overwrite = false)
-    intercept[FileAlreadyExistsException](put("b", overwrite = false))
     put("c", overwrite = true)
-    // Hadoop's rename refuses an existing target on the `file:` file system
-    // Hive registers; the overwrite must still land
+    // the `file:` file system Hive registers refuses an overwriting rename,
+    // keeping the old file and the temp file; this one must replace it
     assert(Files.readString(dir.resolve("commits/0")) === "c")
+    assert(names(dir.resolve("commits")) === Set("0", ".0.crc"))
+    intercept[FileAlreadyExistsException](put("b", overwrite = false))
+    assert(Files.readString(dir.resolve("commits/0")) === "c")
+  }
 
-    val e = intercept[IllegalArgumentException](
-      new LocalCheckpointFiles(new Path("s3a://bucket/ckpt"), spark.sessionState.newHadoopConf()))
-    assert(e.getMessage.contains("s3a://bucket/ckpt"))
+  test("FileSystem.getLocal is the graft file system, and it sets the modes Hadoop would") {
+    val fs = FileSystem.getLocal(spark.sessionState.newHadoopConf())
+    assert(fs.getClass === classOf[NioLocalFileSystem])
+    val dir = Files.createTempDirectory("graft-lfs")
+    val out = fs.create(new Path(dir.toUri.toString + "/a/b/part-0"))
+    out.write(1); out.close()
+    def mode(p: JPath) = PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    // Hadoop applies its configured umask to the FsPermission defaults,
+    // then sets the result whatever the process umask is
+    val umask = FsPermission.getUMask(fs.getConf)
+    val (file, sub) = (mode(dir.resolve("a/b/part-0")), mode(dir.resolve("a/b")))
+    assert(file === FsPermission.getFileDefault.applyUMask(umask).toString)
+    assert(sub === FsPermission.getDirDefault.applyUMask(umask).toString)
+    if (umask.toShort == Integer.parseInt("022", 8)) {
+      assert(file === "rw-r--r--")
+      assert(sub === "rwxr-xr-x")
+    }
+    fs.setPermission(new Path(dir.toUri), new FsPermission("750"))
+    assert(mode(dir) === "rwxr-x---")
+    // the sticky bit has no java.nio form; it must still be set
+    fs.setPermission(new Path(dir.toUri), new FsPermission("1777"))
+    assert((Files.getAttribute(dir, "unix:mode").asInstanceOf[Int] & Integer.parseInt("7777", 8)) ===
+      Integer.parseInt("1777", 8))
+  }
+
+  test("the gate runner scopes Spark's file-system manager only over the graft file system") {
+    val dir = Files.createTempDirectory("graft-lcf-src")
+    Files.writeString(dir.resolve("v.csv"), "1\n2\n")
+    def managerInRun(): Option[String] = {
+      var seen: Option[String] = None
+      val out = StreamGate.memory(spark, "checkpoint_files_spec", "append") {
+        seen = spark.conf.getOption(ManagerKey)
+        spark.readStream.schema("v BIGINT").csv(dir.toString)
+      }
+      assert(out.count() === 2)
+      seen
+    }
+    assert(managerInRun() === Some(classOf[FileSystemBasedCheckpointFileManager].getName))
+    // an uncached Hadoop local file system, as a `file:` file system cached
+    // before the session's conf was in place would be: Spark's default
+    // manager stays
+    withConf("fs.file.impl" -> classOf[LocalFileSystem].getName, "fs.file.impl.disable.cache" -> "true") {
+      assert(managerInRun() === None)
+    }
+    assert(spark.conf.getOption(ManagerKey) === None)
   }
 
   test("a mapGroupsWithState checkpoint written through it restarts and continues its state") {
@@ -82,18 +133,12 @@ class CheckpointFilesSpec extends SparkSpec {
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
           b.write.mode("append").parquet(out); ()
         }.start().awaitTermination()
-    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.streaming.checkpointFileManagerClass")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    spark.conf.set("spark.sql.streaming.checkpointFileManagerClass", classOf[LocalCheckpointFiles].getName)
-    try {
+    withConf("spark.sql.shuffle.partitions" -> "2",
+        ManagerKey -> classOf[FileSystemBasedCheckpointFileManager].getName) {
       write("s1.csv", "1,10.0\n1,5.0\n2,1.0")
       runOnce()
       write("s2.csv", "1,2.5\n3,7.0")
       runOnce()
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
     val last = spark.read.parquet(out).groupBy("user_id")
       .agg(org.apache.spark.sql.functions.max("events"), org.apache.spark.sql.functions.max("total_value"))
@@ -101,17 +146,12 @@ class CheckpointFilesSpec extends SparkSpec {
     assert(last === Map(1L -> ((3L, 17.5)), 2L -> ((1L, 1.0)), 3L -> ((1L, 7.0))),
       "the restarted run must continue the saved per-user state")
 
-    // Spark's own checkpoint checksums sit next to every state delta file;
-    // Hadoop's hidden .crc sidecars are absent, so the files went through
-    // LocalCheckpointFiles rather than Hadoop's create.
+    // Spark's own checkpoint checksums sit next to every state delta file
     val stateFiles = Files.walk(ckpt.resolve("state")).iterator().asScala
       .filter(Files.isRegularFile(_)).map(_.getFileName.toString).toSeq
     val deltas = stateFiles.filter(_.endsWith(".delta"))
     assert(deltas.nonEmpty)
     assert(deltas.forall(d => stateFiles.contains(d + ".crc")),
       s"a state delta file lacks its checkpoint checksum: $stateFiles")
-    val all = Files.walk(ckpt).iterator().asScala.map(_.getFileName.toString).toSeq
-    assert(!all.exists(n => n.startsWith(".") && n.endsWith(".crc")),
-      s"Hadoop checksum sidecars in the checkpoint: $all")
   }
 }
